@@ -306,4 +306,106 @@ class ProcedureCatalogSpec extends AnyFunSuite {
       .collect())
   }
 
+  test("CALL on a partitioned table: create_record_index, show_files, " +
+      "export_snapshot and clone_table cover every child") {
+    val p = new PartitionedMorTable(spark, TestSpark.tmpDir("proc-pfiles"),
+      Seq("uuid"), "kind", compactionDeltaCommits = 100, autoCompact = false)
+    graft.GraftCatalog.register(spark, "proc_pfiles", p)
+    p.upsert(Seq(("id1", "x", 1L), ("id2", "y", 2L), ("id3", "x", 3L),
+      ("id4", "y", 4L)).toDF("uuid", "kind", "v"), Seq(col("v")))
+    // the record index describes a compacted base: refused before one
+    intercept[IllegalStateException](spark.sql(
+      "CALL graft_ops.create_record_index(table => 'proc_pfiles')").collect())
+    val cack = spark.sql(
+      "CALL graft_ops.run_compaction(table => 'proc_pfiles', mode => 'full')")
+      .collect().map(r => (r.getString(0), r.getString(1)))
+    assert(cack.toSeq == Seq(("compacted", "2 partitions")))
+    val iack = spark.sql(
+      "CALL graft_ops.create_record_index(table => 'proc_pfiles')")
+      .collect().map(r => (r.getString(0), r.getString(1)))
+    assert(iack.toSeq == Seq(("indexed", "2 partitions")))
+    assert(p.partitions().forall(v => p.child(v).hasRecordIndex()))
+
+    // show_files lists every child's base files, sorted, with key bounds
+    val files = spark.sql("CALL graft_ops.show_files(table => 'proc_pfiles')")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+    val want = p.partitions().flatMap(v => p.child(v).manifestFileStats())
+      .map { case (f, mn, mx) => (f, mn.orNull, mx.orNull) }.sortBy(_._1)
+    assert(files == want, files)
+    assert(files.map(_._1).exists(_.contains("p=x")) &&
+      files.map(_._1).exists(_.contains("p=y")), files)
+    assert(files.forall(f => f._1.endsWith(".parquet") && f._2 != null &&
+      f._2 <= f._3), files)
+
+    // export_snapshot writes the merged snapshot of every child
+    val exportDir = graft.TempDirs.create("proc-pexport") + "/snap"
+    val exported = spark.sql(
+      s"CALL graft_ops.export_snapshot(table => 'proc_pfiles', path => '$exportDir')")
+      .collect().head.getLong(0)
+    assert(exported == 4L)
+    assert(spark.read.parquet(exportDir).select("uuid", "kind", "v").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet ==
+      p.read().select("uuid", "kind", "v").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet)
+
+    // clone_table: a zero-copy partitioned clone with the same rows
+    val dst = TestSpark.tmpDir("proc-pclone") + "/dst"
+    val clack = spark.sql(
+      s"CALL graft_ops.clone_table(table => 'proc_pfiles', dst => '$dst')")
+      .collect().map(r => (r.getString(0), r.getString(1)))
+    assert(clack.toSeq == Seq(("cloned", dst)))
+    val c = PartitionedMorTable.resolve(spark, dst, Seq("uuid"), "kind")
+    assert(c.partitions() == Seq("x", "y"))
+    assert(c.read().select("uuid", "v").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet ==
+      Set(("id1", 1L), ("id2", 2L), ("id3", 3L), ("id4", 4L)))
+  }
+
+  test("OPTIMIZE, VACUUM and SHOW INDEXES on a partitioned graft.mor table") {
+    val path = TestSpark.tmpDir("proc-opt-part")
+    def write(rs: Seq[(String, String, Int)]): Unit =
+      rs.toDF("uuid", "pt", "n").write.format("graft.mor").option("path", path)
+        .option("keys", "uuid").option("partition", "pt")
+        .option("compaction.delta_commits", "100").mode("append").save()
+    write(Seq(("u1", "a", 1), ("u2", "b", 2), ("u3", "a", 3)))
+    write(Seq(("u4", "b", 4), ("u1", "a", 10)))
+    spark.sql("CREATE TABLE proc_opt_pt USING `graft.mor` OPTIONS " +
+      s"(path '$path', keys 'uuid', partition 'pt')")
+    try {
+      val p = PartitionedMorTable.resolve(spark, path, Seq("uuid"), "pt")
+      def compacts(v: String) = p.child(v).timeline().count(_.kind == "compact")
+      def baseDirs(v: String) = new java.io.File(s"$path/p=$v/base").list().length
+      assert(spark.sql("SHOW INDEXES ON proc_opt_pt").collect().isEmpty)
+      spark.sql("OPTIMIZE proc_opt_pt")
+      assert(p.partitions().map(compacts) == Seq(1, 1), "OPTIMIZE compacts every child")
+      assert(p.readOptimized().count() == 4)
+      write(Seq(("u5", "a", 5), ("u2", "b", 20)))
+      spark.sql("OPTIMIZE proc_opt_pt ZORDER BY (n)")
+      assert(p.partitions().map(compacts) == Seq(2, 2), "ZORDER re-clusters every child")
+      assert(p.readOptimized().count() == 5)
+      assert(p.partitions().forall(baseDirs(_) == 2))
+      spark.sql("VACUUM proc_opt_pt")
+      assert(p.partitions().forall(baseDirs(_) == 1), "VACUUM cleans every child")
+      spark.sql("CREATE INDEX record_index ON proc_opt_pt")
+      val idx = spark.sql("SHOW INDEXES ON proc_opt_pt").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
+      assert(idx.toSeq == Seq(("record_index", "record_level", "uuid", "a"),
+        ("record_index", "record_level", "uuid", "b")), idx.toSeq)
+      assert(spark.sql("SELECT sum(n) FROM proc_opt_pt").head().getLong(0) == 42L)
+    } finally spark.sql("DROP TABLE IF EXISTS proc_opt_pt")
+  }
+
+  test("partition-scoped CALLs on an unpartitioned table are refused") {
+    val t = MorTable(spark, TestSpark.tmpDir("proc-nopart"), Seq("uuid"))
+    graft.GraftCatalog.register(spark, "proc_nopart", t)
+    t.upsert(rows(3, "a"), Seq(col("v")))
+    val e = intercept[IllegalArgumentException](spark.sql(
+      "CALL graft_ops.drop_partition(table => 'proc_nopart', value => 'x')").collect())
+    assert(e.getMessage == "drop_partition needs a partitioned table", e.getMessage)
+    val c = intercept[IllegalArgumentException](spark.sql(
+      "CALL graft_ops.run_compaction(table => 'proc_nopart', partition => 'x')").collect())
+    assert(c.getMessage.contains("partition argument needs a partitioned table"),
+      c.getMessage)
+    assert(t.read().count() == 3)
+  }
 }
