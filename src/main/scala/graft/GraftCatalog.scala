@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.lake.{MorTable, PartitionedMorTable}
+import graft.lake.LakeTable
 
 /** Catalog surface (S5 and the Glue-catalog analog of §1.1): MOR lake
   * tables registered under catalog names so the whole SQL surface —
@@ -30,7 +30,7 @@ object GraftCatalog {
   /** name → live table handle, for the operational surface (CALL
     * procedures — [[graft.lake.GraftProcedureCatalog]]). */
   private val handles =
-    new java.util.concurrent.ConcurrentHashMap[String, Either[MorTable, PartitionedMorTable]]()
+    new java.util.concurrent.ConcurrentHashMap[String, LakeTable]()
 
   private def key(spark: SparkSession, name: String): String =
     System.identityHashCode(spark) + "/" + name.toLowerCase(java.util.Locale.ROOT)
@@ -40,31 +40,23 @@ object GraftCatalog {
     Option(registry.get(key(spark, name)))
 
   /** Live handle lookup used by the CALL-procedure surface. */
-  private[graft] def handleOf(spark: SparkSession,
-                              name: String): Option[Either[MorTable, PartitionedMorTable]] =
+  private[graft] def handleOf(spark: SparkSession, name: String): Option[LakeTable] =
     Option(handles.get(key(spark, name)))
 
   private def ruleInstalled(spark: SparkSession): Boolean =
     spark.conf.getOption("spark.sql.extensions").exists(_.contains("graft.GraftExtensions"))
 
-  /** Register (or refresh) a MOR table under a catalog name (see the
-    * freshness contract above). */
-  def register(spark: SparkSession, name: String, table: MorTable): Unit = {
-    handles.put(key(spark, name), Left(table))
-    if (ruleInstalled(spark)) { registry.put(key(spark, name), () => table.read()); () }
-    else table.read().createOrReplaceTempView(name)
-  }
-
-  /** Same contract for the `PARTITIONED BY` lake form. */
-  def register(spark: SparkSession, name: String, table: PartitionedMorTable): Unit = {
-    handles.put(key(spark, name), Right(table))
+  /** Register (or refresh) a lake table, either form, under a catalog
+    * name (see the freshness contract above). */
+  def register(spark: SparkSession, name: String, table: LakeTable): Unit = {
+    handles.put(key(spark, name), table)
     if (ruleInstalled(spark)) { registry.put(key(spark, name), () => table.read()); () }
     else table.read().createOrReplaceTempView(name)
   }
 
   /** S5 — `DROP TABLE IF EXISTS`: removes catalog metadata; storage stays
     * unless `purge`. Idempotent, like the reference's cleanup cell. */
-  def dropTable(spark: SparkSession, name: String, table: Option[MorTable] = None,
+  def dropTable(spark: SparkSession, name: String, table: Option[LakeTable] = None,
                 purge: Boolean = false): Unit = {
     registry.remove(key(spark, name))
     handles.remove(key(spark, name))

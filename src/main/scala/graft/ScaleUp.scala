@@ -12,9 +12,11 @@ import org.apache.spark.sql.functions._
   * This exists ONLY to measure 8-vs-32-core scaling of the scan-heavy gate
   * entries at a scale where compute dominates the fixed driver overhead
   * (SCALING.md) — the driver's bench and the oracle never read its output,
-  * and nothing derived from it is ever cached or served. The `ts` column is
-  * copied through raw, so the events vintage handling is exercised
-  * unchanged; `props`/payload columns are preserved byte-for-byte.
+  * and nothing derived from it is ever cached or served. Values are
+  * preserved, but not the source's physical schema: the Spark read→write
+  * round trip rewrites `ts` in Spark's own timestamp encoding (a nanos
+  * vintage does not survive it) and the key offset widens integer key
+  * columns to bigint.
   */
 object ScaleUp {
   private val Shift = 100000000L // well above any real key in the testdata

@@ -111,7 +111,7 @@ case class SigOverlap(left: Expression, right: Expression)
     val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
     val n = math.min(x.numElements(), y.numElements())
     var eq = 0; var i = 0
-    while (i < n) { if (x.getLong(i) == y.getLong(i)) eq += 1; i += 1 }
+    while (i < n) { if (SigOverlap.slotMatch(x, y, i)) eq += 1; i += 1 }
     if (n == 0) 0.0 else eq.toDouble / n
   }
 
@@ -122,7 +122,7 @@ case class SigOverlap(left: Expression, right: Expression)
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |int $eq = 0;
          |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.getLong($i) == $b.getLong($i)) $eq++;
+         |  if (${SigOverlap.slotMatchCode(a, b, i)}) $eq++;
          |}
          |${ev.value} = ($n == 0) ? 0.0 : ((double) $eq) / $n;
        """.stripMargin
@@ -136,6 +136,17 @@ case class SigOverlap(left: Expression, right: Expression)
 object SigOverlap {
   val info: ExpressionInfo = new ExpressionInfo(
     classOf[SigOverlap].getName, "sig_overlap")
+
+  /** Slot `i` matches when both elements are non-null and equal — a null
+    * never matches, not even another null (the declarative reference
+    * `filter(zip_with(a, b, (x, y) => x = y), e -> e)` drops the null
+    * comparison). */
+  private[expr] def slotMatch(x: ArrayData, y: ArrayData, i: Int): Boolean =
+    !x.isNullAt(i) && !y.isNullAt(i) && x.getLong(i) == y.getLong(i)
+
+  /** [[slotMatch]] as generated Java. */
+  private[expr] def slotMatchCode(a: String, b: String, i: String): String =
+    s"!$a.isNullAt($i) && !$b.isNullAt($i) && $a.getLong($i) == $b.getLong($i)"
 }
 
 /** Count of equal components between two equal-length long arrays — the
@@ -161,7 +172,7 @@ case class SigMatches(left: Expression, right: Expression)
     val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
     val n = math.min(x.numElements(), y.numElements())
     var eq = 0L; var i = 0
-    while (i < n) { if (x.getLong(i) == y.getLong(i)) eq += 1; i += 1 }
+    while (i < n) { if (SigOverlap.slotMatch(x, y, i)) eq += 1; i += 1 }
     eq
   }
 
@@ -172,7 +183,7 @@ case class SigMatches(left: Expression, right: Expression)
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |${ev.value} = 0L;
          |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.getLong($i) == $b.getLong($i)) ${ev.value}++;
+         |  if (${SigOverlap.slotMatchCode(a, b, i)}) ${ev.value}++;
          |}
        """.stripMargin
     })

@@ -108,7 +108,7 @@ object GraftProcedureCatalog {
   private def inDefault(n: String, t: DataType, sql: String) =
     ProcedureParameter.in(n, t).defaultValue(sql).build()
 
-  private def resolve(name: String): Either[MorTable, PartitionedMorTable] =
+  private def resolve(name: String): LakeTable =
     graft.GraftCatalog.handleOf(SparkSession.active, name).getOrElse(
       throw new IllegalArgumentException(
         s"'$name' is not a registered graft table (GraftCatalog.register it first)"))
@@ -126,51 +126,11 @@ object GraftProcedureCatalog {
         inDefault("partition", StringType, "''")),
       ack,
       { case Seq(tbl: String, mode: String, zcols: String, part: String) =>
-        resolve(tbl) match {
-          case Left(t) =>
-            require(part.isEmpty,
-              "partition argument needs a partitioned table")
-            mode.toLowerCase match {
-            case "full" => t.compact(); Seq(Seq("compacted", "full"))
-            case "minor" => t.compactMinor(); Seq(Seq("compacted", "minor"))
-            case "zorder" =>
-              val cols = zcols.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-              require(cols.nonEmpty, "zorder mode needs zorder_cols")
-              t.compactZOrder(cols); Seq(Seq("compacted", s"zorder(${cols.mkString(",")})"))
-            case "due" =>
-              if (t.maybeCompact()) Seq(Seq("compacted", "due"))
-              else Seq(Seq("skipped", "not due"))
-            case m => throw new IllegalArgumentException(s"unknown mode '$m'")
-          }
-          case Right(p) =>
-            // partition argument narrows to ONE child (loud on a miss —
-            // the pruned-verb contract everywhere else in the engine)
-            val parts =
-              if (part.isEmpty) p.partitions()
-              else {
-                require(p.partitions().contains(part),
-                  s"no partition '$part' in ${p.partitions().sorted.mkString(", ")}")
-                Seq(part)
-              }
-            mode.toLowerCase match {
-            // partitioned compaction is per-child minor-planned already
-            case "full" | "minor" =>
-              p.compactPartitions(parts)
-              Seq(Seq("compacted", s"${parts.size} partitions"))
-            case "zorder" =>
-              val cols = zcols.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-              require(cols.nonEmpty, "zorder mode needs zorder_cols")
-              val did = p.compactZOrderPartitions(cols, dueOnly = false,
-                only = parts)
-              Seq(Seq("compacted", s"zorder(${cols.mkString(",")}) on ${did.size} partitions"))
-            case "due" =>
-              val did = p.maybeCompact()
-              if (did.nonEmpty) Seq(Seq("compacted", did.mkString(",")))
-              else Seq(Seq("skipped", "not due"))
-            case m => throw new IllegalArgumentException(
-              s"mode '$m' is not supported on a partitioned table")
-          }
-        }
+        // the partition argument narrows a partitioned table to ONE child
+        val (action, detail) = resolve(tbl).runCompaction(mode,
+          zcols.split(',').map(_.trim).filter(_.nonEmpty).toSeq,
+          Seq(part).filter(_.nonEmpty))
+        Seq(Seq(action, detail))
       }),
     Proc("create_record_index",
       "build the record-level index (exact key -> base-file postings) at " +
@@ -178,12 +138,11 @@ object GraftProcedureCatalog {
       Seq(in("table", StringType)),
       ack,
       { case Seq(tbl: String) =>
-        resolve(tbl) match {
-          case Left(t) => t.buildRecordIndex(); Seq(Seq("indexed", tbl))
-          case Right(p) =>
-            p.buildRecordIndex()
-            Seq(Seq("indexed", s"${p.partitions().size} partitions"))
-        }
+        val t = resolve(tbl)
+        t.buildRecordIndex()
+        // the ack names what was indexed: the table, or its partitions
+        val scope = if (t.partitionCol.isEmpty) tbl else s"${t.partitions().size} partitions"
+        Seq(Seq("indexed", scope))
       }),
     Proc("refresh_materialized_view",
       "one affected-group maintenance cycle for the table's DDL-declared " +
@@ -193,19 +152,14 @@ object GraftProcedureCatalog {
       ack,
       { case Seq(tbl: String, name: String) =>
         val spark = SparkSession.active
-        val (basePath, runOne) = resolve(tbl) match {
-          case Left(t) => (t.path, (s: MatViews.ViewSpec) =>
-            MatViews.refresh(spark, t.path, t.keyCols, s))
-          case Right(p) => (p.path, (s: MatViews.ViewSpec) =>
-            MatViews.refreshPartitioned(spark, p.path, p.keyCols, p.partitionCol, s))
-        }
-        val specs = MatViews.readSpecs(spark, basePath)
+        val t = resolve(tbl)
+        val specs = MatViews.readSpecs(spark, t.path)
           .filter(s => name.isEmpty || s.name == name)
         require(specs.nonEmpty,
           s"CALL refresh_materialized_view: no materialized view" +
             s"${if (name.nonEmpty) s" '$name'" else "s"} declared on '$tbl'")
         specs.map { s =>
-          val done = runOne(s)
+          val done = MatViews.refresh(spark, t.path, t.keyCols, t.partitionCol, s)
           Seq("refreshed", s"${done.name} -> seq ${done.maintainedSeq}")
         }
       }),
@@ -221,12 +175,9 @@ object GraftProcedureCatalog {
         StructField("where_clause", StringType, nullable = false))),
       { case Seq(tbl: String) =>
         val spark = SparkSession.active
-        val (basePath, live) = resolve(tbl) match {
-          case Left(t) => (t.path, t.timeline().lastOption.map(_.seq).getOrElse(0L))
-          case Right(p) =>
-            (p.path, p.parentTimeline().lastOption.map(_.seq).getOrElse(0L))
-        }
-        MatViews.readSpecs(spark, basePath).map { s =>
+        val t = resolve(tbl)
+        val live = t.commits().lastOption.map(_.seq).getOrElse(0L)
+        MatViews.readSpecs(spark, t.path).map { s =>
           Seq(s.name, s.groupCols.mkString(","),
             s.measures.map(m => if (m.arg.isEmpty) m.fn else s"${m.fn}(${m.arg})")
               .mkString(","),
@@ -238,27 +189,26 @@ object GraftProcedureCatalog {
       Seq(in("table", StringType)),
       StructType(Seq(StructField("removed", IntegerType, nullable = false))),
       { case Seq(tbl: String) =>
-        Seq(Seq(Int.box(resolve(tbl).fold(_.clean(), _.clean()))))
+        Seq(Seq(Int.box(resolve(tbl).clean())))
       }),
     Proc("create_savepoint", "pin the current commit under a name",
       Seq(in("table", StringType), in("name", StringType)),
       StructType(Seq(StructField("seq", LongType, nullable = false))),
       { case Seq(tbl: String, nm: String) =>
-        Seq(Seq(Long.box(resolve(tbl).fold(_.savepoint(nm), _.savepoint(nm)))))
+        Seq(Seq(Long.box(resolve(tbl).savepoint(nm))))
       }),
     Proc("restore_savepoint", "physically roll the table back to a savepoint",
       Seq(in("table", StringType), in("name", StringType)),
       StructType(Seq(StructField("rolled_back", IntegerType, nullable = false))),
       { case Seq(tbl: String, nm: String) =>
-        Seq(Seq(Int.box(resolve(tbl).fold(_.restore(nm), _.restore(nm)))))
+        Seq(Seq(Int.box(resolve(tbl).restore(nm))))
       }),
     Proc("show_savepoints", "list savepoint pins",
       Seq(in("table", StringType)),
       StructType(Seq(StructField("name", StringType, nullable = false),
         StructField("seq", LongType, nullable = false))),
       { case Seq(tbl: String) =>
-        resolve(tbl).fold(_.savepoints(), _.savepoints())
-          .toSeq.sortBy(_._2).map { case (n, s) => Seq(n, Long.box(s)) }
+        resolve(tbl).savepoints().toSeq.sortBy(_._2).map { case (n, s) => Seq(n, Long.box(s)) }
       }),
     Proc("show_commits", "timeline listing (parent timeline for partitioned tables)",
       Seq(in("table", StringType)),
@@ -269,8 +219,7 @@ object GraftProcedureCatalog {
         StructField("commit_ms", LongType, nullable = false),
         StructField("insert_only", BooleanType, nullable = false))),
       { case Seq(tbl: String) =>
-        val tl = resolve(tbl).fold(_.timeline(), _.parentTimeline())
-        tl.sortBy(_.seq).map(i =>
+        resolve(tbl).commits().sortBy(_.seq).map(i =>
           Seq(Long.box(i.seq), i.kind, Long.box(i.batchId), Long.box(i.commitMs),
             Boolean.box(i.insertOnly)))
       }),
@@ -290,10 +239,7 @@ object GraftProcedureCatalog {
           Seq(part, v.lastCompactSeq.map(Long.box).orNull, Int.box(v.baseFiles),
             Long.box(v.baseBytes), Int.box(v.liveDeltas),
             Int.box(v.deltaFiles), Long.box(v.deltaBytes))
-        resolve(tbl) match {
-          case Left(t) => Seq(row("", t.fsView()))
-          case Right(p) => p.partitions().sorted.map(v => row(v, p.child(v).fsView()))
-        }
+        resolve(tbl).children().map { case (v, c) => row(v, c.fsView()) }
       }),
     Proc("show_files", "newest external-manifest file listing with per-file key bounds",
       Seq(in("table", StringType)),
@@ -303,11 +249,7 @@ object GraftProcedureCatalog {
         StructField("max_key", StringType, nullable = true))),
       { case Seq(tbl: String) =>
         // metadata-sized: one row per base file, no Spark job
-        val stats = resolve(tbl) match {
-          case Left(t) => t.manifestFileStats()
-          case Right(p) => p.partitions().flatMap(v => p.child(v).manifestFileStats())
-        }
-        stats.sortBy(_._1).map { case (f, mn, mx) =>
+        resolve(tbl).children().flatMap(_._2.manifestFileStats()).sortBy(_._1).map { case (f, mn, mx) =>
           Seq(f, mn.orNull, mx.orNull)
         }
       }),
@@ -323,8 +265,7 @@ object GraftProcedureCatalog {
         StructField("clean_every", IntegerType, nullable = false),
         StructField("savepoint_ttl_seconds", LongType, nullable = false))),
       { case Seq(tbl: String) =>
-        val path = resolve(tbl).fold(_.path, _.path)
-        val p = MorTable.readPolicy(SparkSession.active, path)
+        val p = MorTable.readPolicy(SparkSession.active, resolve(tbl).path)
           .getOrElse(MorTable.Policy())
         Seq(Seq(Int.box(p.deltaCommits), Long.box(p.deltaSeconds),
           Int.box(p.writeTasks), Int.box(p.targetFileMB),
@@ -337,7 +278,7 @@ object GraftProcedureCatalog {
       { case Seq(tbl: String, out: String) =>
         // one distributed write of the merged snapshot — any engine reads
         // the result with zero lake logic (the escape-hatch/offboarding verb)
-        val df = resolve(tbl).fold(_.read(), _.read())
+        val df = resolve(tbl).read()
         df.write.mode("errorifexists").parquet(out)
         Seq(Seq(Long.box(
           SparkSession.active.read.parquet(out).count())))
@@ -347,7 +288,7 @@ object GraftProcedureCatalog {
       Seq(in("table", StringType), in("dst", StringType)),
       ack,
       { case Seq(tbl: String, dst: String) =>
-        resolve(tbl).fold(_.cloneTo(dst), _.cloneTo(dst))
+        resolve(tbl).cloneTo(dst)
         Seq(Seq("cloned", dst))
       }),
     Proc("bootstrap",
@@ -358,7 +299,7 @@ object GraftProcedureCatalog {
         // both table forms: the partitioned route adopts a Hive
         // `<partitionCol>=<v>/` layout per child (PartitionedMorTable
         // .bootstrap), the unpartitioned one a flat parquet dir
-        resolve(tbl).fold(_.bootstrap(src), _.bootstrap(src))
+        resolve(tbl).bootstrap(src)
         Seq(Seq("bootstrapped", src))
       }),
     Proc("show_stats",
@@ -382,22 +323,18 @@ object GraftProcedureCatalog {
               Seq[Any]("ndv", c, n.toString) } ++
             bounds.toSeq.sortBy(_._1).flatMap { case (c, (mn, mx)) =>
               Seq(Seq[Any]("min", c, mn.toString), Seq[Any]("max", c, mx.toString)) }
-        resolve(tbl) match {
-          case Left(t) => rows(t.exactLiveRowCount(), t.liveRowCount(),
-            t.liveBytes(), t.colNdv(), t.colBounds())
-          case Right(p) => rows(p.exactLiveRowCount(), p.liveRowCount(),
-            p.liveBytes(), p.colNdv(), p.colBounds())
-        }
+        val t = resolve(tbl)
+        rows(t.exactLiveRowCount(), t.liveRowCount(), t.liveBytes(), t.colNdv(),
+          t.colBounds())
       }),
     Proc("drop_partition", "drop a partition's storage and metadata (TTL verb)",
       Seq(in("table", StringType), in("value", StringType)),
       StructType(Seq(StructField("dropped", StringType, nullable = false))),
       { case Seq(tbl: String, v: String) =>
-        resolve(tbl) match {
-          case Right(p) => p.dropPartitions(Seq(v)).map(d => Seq(d))
-          case Left(_) => throw new IllegalArgumentException(
-            "drop_partition needs a partitioned table")
-        }
+        val t = resolve(tbl)
+        if (t.partitionCol.isEmpty) throw new IllegalArgumentException(
+          "drop_partition needs a partitioned table")
+        t.dropPartitions(Seq(v)).map(d => Seq(d))
       })
   ).map(p => p.pname -> (p: UnboundProcedure)).toMap
 }

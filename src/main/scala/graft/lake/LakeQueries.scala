@@ -1499,7 +1499,7 @@ object LakeQueries {
     val mid = mn + (mx - mn) / 2
     val path = tempPath("mor-pinc")
     val t = new PartitionedMorTable(spark, path,
-      keyCols = Seq("user_id"), partitionCol = "event_type",
+      keyCols = Seq("user_id"), partCol = "event_type",
       compactionDeltaCommits = 1000, autoCompact = false)
     t.upsert(ev.filter(col("ts_ns") <= mid),
       orderWithinBatch = Seq(col("ts_ns"), col("event_id")), batchId = 1L)
@@ -1525,7 +1525,7 @@ object LakeQueries {
     val mid = mn + (mx - mn) / 2
     val path = tempPath("mor-pcdc")
     val t = new PartitionedMorTable(spark, path,
-      keyCols = Seq("user_id"), partitionCol = "event_type",
+      keyCols = Seq("user_id"), partCol = "event_type",
       compactionDeltaCommits = 1000, autoCompact = false)
     t.upsert(ev.filter(col("ts_ns") <= mid),
       orderWithinBatch = Seq(col("ts_ns"), col("event_id")), batchId = 1L)
@@ -2136,8 +2136,8 @@ object LakeQueries {
   }
 
   /** PARTITIONED-base MATERIALIZED VIEW via DDL, oracle-checked (s87 —
-    * the table form s85 could not declare on until r14's BaseOps
-    * generalization): the base is a PartitionedMorTable (key user_id,
+    * the table form s85 could not declare on until MatViews took either
+    * table form): the base is a PartitionedMorTable (key user_id,
     * partition event_type); `CREATE MATERIALIZED VIEW` builds off the
     * PARENT timeline, REFRESH maintains off the cross-child changelog —
     * and because the grouping IS the partition column, "affected groups"
@@ -2155,7 +2155,7 @@ object LakeQueries {
     val lo = mn + (mx - mn) / 3; val hi = mn + 2 * ((mx - mn) / 3)
     val basePath = tempPath("mor-pmv-base"); val viewPath = tempPath("mor-pmv-view")
     val t = new PartitionedMorTable(spark, basePath, keyCols = Seq("user_id"),
-      partitionCol = "event_type", compactionDeltaCommits = 1000,
+      partCol = "event_type", compactionDeltaCommits = 1000,
       autoCompact = false, writePartitions = 4)
     t.upsert(ev.filter(col("ts_ns") <= lo),
       orderWithinBatch = Seq(col("ts_ns"), col("event_id")), batchId = 1L)
@@ -2392,7 +2392,7 @@ object LakeQueries {
     val mid = ev.stat.approxQuantile("ts_ns", Array(0.5), 0.01)(0).toLong
     val path = tempPath("mor-part")
     val t = new PartitionedMorTable(spark, path,
-      keyCols = Seq("user_id"), partitionCol = "event_type",
+      keyCols = Seq("user_id"), partCol = "event_type",
       compactionDeltaCommits = 2)
     t.upsert(ev.filter(col("ts_ns") <= mid),
       orderWithinBatch = Seq(col("ts_ns"), col("event_id")), batchId = 1L)
@@ -2455,7 +2455,7 @@ object LakeQueries {
     val mid = mn + (mx - mn) / 2
     val path = tempPath("mor-part-sidx")
     val t = new PartitionedMorTable(spark, path,
-      keyCols = Seq("user_id"), partitionCol = "event_type",
+      keyCols = Seq("user_id"), partCol = "event_type",
       compactionDeltaCommits = 1000, autoCompact = false, writePartitions = 4)
       .indexColumns(Seq("event_id"))
     t.upsert(ev.filter(col("ts_ns") <= mid),
@@ -2488,7 +2488,7 @@ object LakeQueries {
     val mid = mn + (mx - mn) / 2
     val path = tempPath("mor-part-point")
     val t = new PartitionedMorTable(spark, path,
-      keyCols = Seq("user_id"), partitionCol = "event_type",
+      keyCols = Seq("user_id"), partCol = "event_type",
       compactionDeltaCommits = 1000, autoCompact = false, writePartitions = 4)
     t.upsert(ev.filter(col("ts_ns") <= mid),
       orderWithinBatch = Seq(col("ts_ns"), col("event_id")), batchId = 1L)
@@ -2522,7 +2522,7 @@ object LakeQueries {
     val mid = mn + (mx - mn) / 2
     val path = tempPath("mor-part-rli")
     val t = new PartitionedMorTable(spark, path,
-      keyCols = Seq("user_id"), partitionCol = "event_type",
+      keyCols = Seq("user_id"), partCol = "event_type",
       compactionDeltaCommits = 1000, autoCompact = false, writePartitions = 8)
     t.upsert(ev.filter(col("ts_ns") <= mid),
       orderWithinBatch = Seq(col("ts_ns"), col("event_id")), batchId = 1L)
@@ -2579,7 +2579,7 @@ object LakeQueries {
     val mid = ev.stat.approxQuantile("ts_ns", Array(0.5), 0.01)(0).toLong
     val path = tempPath("mor-pmanifest")
     val t = new PartitionedMorTable(spark, path,
-      keyCols = Seq("user_id"), partitionCol = "event_type",
+      keyCols = Seq("user_id"), partCol = "event_type",
       compactionDeltaCommits = 2)
     t.upsert(ev.filter(col("ts_ns") <= mid),
       orderWithinBatch = Seq(col("ts_ns"), col("event_id")), batchId = 1L)

@@ -177,31 +177,15 @@ object MatViews {
     (ViewRewrite.Measure("count", "", "n") +: declared).distinct
   }
 
-  // ------------------------------------------------ base-table adapters
-
-  /** The three base-table capabilities the MV machinery needs, over
-    * either table form. The partitioned adapter reads the PARENT timeline
-    * (the table-global token space) and its changelog/travel reads span
-    * every child — identity is per (partition, key) there, which is
-    * exactly what read()/readChangelog() describe, so the group algebra
-    * is unchanged. */
-  private[lake] sealed trait BaseOps {
-    def lastSeq(): Long
-    def readAt(seq: Long): DataFrame
-    def readChangelog(from: Long, to: Long): DataFrame
-  }
-  private final class SingleOps(t: MorTable) extends BaseOps {
-    def lastSeq(): Long = t.timeline().lastOption.map(_.seq).getOrElse(0L)
-    def readAt(seq: Long): DataFrame = t.readAt(seq)
-    def readChangelog(from: Long, to: Long): DataFrame = t.readChangelog(from, to)
-  }
-  private final class PartOps(t: PartitionedMorTable) extends BaseOps {
-    def lastSeq(): Long = t.parentTimeline().lastOption.map(_.seq).getOrElse(0L)
-    def readAt(seq: Long): DataFrame = t.readAt(seq)
-    def readChangelog(from: Long, to: Long): DataFrame = t.readChangelog(from, to)
-  }
-
   // --------------------------------------------------- register / serve
+
+  /** The base commit seq a view is fresh against — the parent timeline
+    * (the table-global token space) on a partitioned base, whose
+    * changelog/travel reads span every child: identity is per
+    * (partition, key) there, which is exactly what read()/readChangelog()
+    * describe, so the group algebra is unchanged. */
+  private def lastSeq(base: LakeTable): Long =
+    base.commits().lastOption.map(_.seq).getOrElse(0L)
 
   /** Register every persisted view of `basePath` with the optimizer rule
     * — called from the DataSource read surface, so a FRESH session's
@@ -211,25 +195,12 @@ object MatViews {
     * commit seq ([[ViewRewrite.analyzedViewPlan]]). One fs.exists on
     * tables with no views — the only cost on the common path. */
   def autoRegister(spark: SparkSession, basePath: String,
-                   baseKeys: Seq[String]): Unit =
-    autoRegisterOps(spark, basePath,
-      () => new SingleOps(MorTable.resolve(spark, basePath, baseKeys)))
-
-  /** [[autoRegister]] for a PARTITIONED base table (freshness reads the
-    * parent timeline). */
-  def autoRegisterPartitioned(spark: SparkSession, basePath: String,
-                              baseKeys: Seq[String],
-                              partitionCol: String): Unit =
-    autoRegisterOps(spark, basePath, () => new PartOps(
-      PartitionedMorTable.resolve(spark, basePath, baseKeys, partitionCol)))
-
-  private def autoRegisterOps(spark: SparkSession, basePath: String,
-                              mkOps: () => BaseOps): Unit = {
+                   baseKeys: Seq[String], partitionCol: Option[String]): Unit = {
     val specs =
       try readSpecs(spark, basePath)
       catch { case scala.util.control.NonFatal(_) => return }
     if (specs.isEmpty) return // common path: one fs.exists, no handles
-    val ops = mkOps()
+    val base = LakeTable.resolve(spark, basePath, baseKeys, partitionCol)
     specs.foreach { spec =>
       val vt = MorTable.resolve(spark, spec.viewPath, spec.groupCols)
       ViewRewrite.register(ViewRewrite.ViewDef(
@@ -238,7 +209,7 @@ object MatViews {
         measures = rewriteMeasures(spec.measures),
         viewScan = () => vt.read(),
         isFresh = () => {
-          val live = ops.lastSeq()
+          val live = lastSeq(base)
           readSpecs(spark, basePath).find(_.name == spec.name)
             .exists(_.maintainedSeq == live)
         },
@@ -261,26 +232,15 @@ object MatViews {
     * seq into the view table (batch 1) and persist the spec at that
     * watermark. */
   def build(spark: SparkSession, basePath: String, baseKeys: Seq[String],
-            spec: ViewSpec): ViewSpec =
-    buildOps(spark, basePath,
-      new SingleOps(MorTable.resolve(spark, basePath, baseKeys)), spec)
-
-  /** [[build]] over a PARTITIONED base. */
-  def buildPartitioned(spark: SparkSession, basePath: String,
-                       baseKeys: Seq[String], partitionCol: String,
-                       spec: ViewSpec): ViewSpec =
-    buildOps(spark, basePath, new PartOps(
-      PartitionedMorTable.resolve(spark, basePath, baseKeys, partitionCol)), spec)
-
-  private def buildOps(spark: SparkSession, basePath: String, ops: BaseOps,
-                       spec: ViewSpec): ViewSpec = {
-    val seq = ops.lastSeq()
+            partitionCol: Option[String], spec: ViewSpec): ViewSpec = {
+    val base = LakeTable.resolve(spark, basePath, baseKeys, partitionCol)
+    val seq = lastSeq(base)
     require(seq > 0L,
       s"CREATE MATERIALIZED VIEW: base table $basePath has no commits — " +
         "load it first")
     val vt = MorTable.resolve(spark, spec.viewPath, spec.groupCols)
     val aggs = maintainedAggs(spec.measures)
-    val agg = filtered(ops.readAt(seq), spec)
+    val agg = filtered(base.readAt(seq), spec)
       .groupBy(spec.groupCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
     vt.upsert(agg, orderWithinBatch = Nil, batchId = 1L)
@@ -292,29 +252,19 @@ object MatViews {
   /** One maintenance cycle: bring the view from its watermark to the
     * base's current seq by affected-group partial recompute (see object
     * doc). Idempotent across retries — view commits are batch-tagged by
-    * the target seq. No-op when already fresh. */
+    * the target seq. No-op when already fresh. On a partitioned base the
+    * touched groups come from the cross-child changelog; when the grouping
+    * includes the partition column, "affected groups" = churned partitions
+    * — the restriction prunes the recompute to exactly those children's
+    * timelines. */
   def refresh(spark: SparkSession, basePath: String, baseKeys: Seq[String],
-              spec: ViewSpec): ViewSpec =
-    refreshOps(spark, basePath,
-      new SingleOps(MorTable.resolve(spark, basePath, baseKeys)), spec)
-
-  /** [[refresh]] over a PARTITIONED base (touched groups come from the
-    * cross-child changelog; when the grouping includes the partition
-    * column, "affected groups" = churned partitions — the restriction
-    * prunes the recompute to exactly those children's timelines). */
-  def refreshPartitioned(spark: SparkSession, basePath: String,
-                         baseKeys: Seq[String], partitionCol: String,
-                         spec: ViewSpec): ViewSpec =
-    refreshOps(spark, basePath, new PartOps(
-      PartitionedMorTable.resolve(spark, basePath, baseKeys, partitionCol)), spec)
-
-  private def refreshOps(spark: SparkSession, basePath: String, ops: BaseOps,
-                         spec: ViewSpec): ViewSpec = {
-    val to = ops.lastSeq()
+              partitionCol: Option[String], spec: ViewSpec): ViewSpec = {
+    val base = LakeTable.resolve(spark, basePath, baseKeys, partitionCol)
+    val to = lastSeq(base)
     if (to == spec.maintainedSeq) return spec
     val vt = MorTable.resolve(spark, spec.viewPath, spec.groupCols)
     val g = spec.groupCols
-    val cl = ops.readChangelog(spec.maintainedSeq, to)
+    val cl = base.readChangelog(spec.maintainedSeq, to)
     // touched groups: after-images of I/U plus BEFORE-images of U/D —
     // metadata-sized (distinct groups), checkpointed so both consumers
     // below share one computation
@@ -328,7 +278,7 @@ object MatViews {
     // filtered recompute of a superset is still exact, rows leaving the
     // slice shrink their group and slice-empty groups die below)
     val aggs = maintainedAggs(spec.measures)
-    val refreshed = filtered(ops.readAt(to), spec)
+    val refreshed = filtered(base.readAt(to), spec)
       .join(broadcast(touched), g, "left_semi")
       .groupBy(g.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)

@@ -79,7 +79,7 @@ final class MorTable(
       * file-level pruning). The estimate is the compressed on-disk size
       * of the live base + deltas — one metadata listing, no data read.
       * 0 = keep the incoming partitioning. */
-    val targetFileBytes: Long = 0L) {
+    val targetFileBytes: Long = 0L) extends LakeTable {
 
   import MorTable._
 
@@ -1005,8 +1005,8 @@ final class MorTable(
     * distinct keys (the caller usually just proved it — the append-only CDC
     * fast path), which makes the per-key LWW window a no-op: skip its
     * shuffle entirely. */
-  def applyChangelog(envelope: DataFrame, batchId: Long = -1L,
-                     insertOnly: Boolean = false): MorTable = {
+  def applyChangelog(envelope: DataFrame, batchId: Long,
+                     insertOnly: Boolean): MorTable = {
     val w = Window.partitionBy(col("key")).orderBy(col("seq").desc)
     val last =
       if (insertOnly) envelope
@@ -1027,8 +1027,10 @@ final class MorTable(
     * read resolves the matching keys, then tombstones them — predicate
     * cost is a scan (pushed to parquet like any filter), the commit is
     * O(matches). */
-  def deleteWhere(cond: Column, batchId: Long = -1L): MorTable =
+  def deleteWhere(cond: Column, batchId: Long, values: Seq[String]): MorTable = {
+    wholeTable(values)
     delete(read().filter(cond).select(keyCols.map(col): _*), batchId)
+  }
 
   /** [[deleteWhere]] when the predicate is known to imply a record-key
     * set (the SQL layer proves `WHERE key = … [AND …]`): the matching
@@ -1036,14 +1038,16 @@ final class MorTable(
     * bloom/range file pruning instead of a snapshot scan. `cond` is
     * still applied (extra conjuncts narrow further; soundness needs only
     * that every cond-satisfying row carries one of `recordKeys`). */
-  def deleteWhereKeys(recordKeys: Seq[String], cond: Column,
-                      batchId: Long = -1L): MorTable =
+  def deleteWhereKeys(recordKeys: Seq[String], cond: Column, batchId: Long,
+                      values: Seq[String]): MorTable = {
+    wholeTable(values)
     // indexed form: a FRESH record index pins the touched base files
     // exactly (readForKeysIndexed fails closed to the bloom path) — the
     // same soundness argument as the read path, since only rows carrying
     // one of `recordKeys` can satisfy the SQL layer's proved predicate
     delete(readForKeysIndexed(recordKeys).filter(cond)
       .select(keyCols.map(col): _*), batchId)
+  }
 
   /** Predicate update (the `MERGE INTO … WHEN MATCHED UPDATE` / SQL
     * `UPDATE t SET … WHERE …` analog): rewrite the matching rows' images
@@ -1053,15 +1057,20 @@ final class MorTable(
     * (SQL UPDATE semantics: `SET a = b, b = a` swaps — a sequential
     * withColumn fold would feed b the already-updated a, and make
     * interdependent sets silently depend on Map iteration order). */
-  def updateWhere(cond: Column, set: Map[String, Column],
-                  batchId: Long = -1L): MorTable =
+  def updateWhere(cond: Column, set: Map[String, Column], batchId: Long,
+                  values: Seq[String]): MorTable = {
+    wholeTable(values)
     updateOver(read().filter(cond), set, batchId)
+  }
 
   /** [[updateWhere]] through the key-pruned point read (see
     * [[deleteWhereKeys]] for the contract). */
   def updateWhereKeys(recordKeys: Seq[String], cond: Column,
-                      set: Map[String, Column], batchId: Long = -1L): MorTable =
+                      set: Map[String, Column], batchId: Long,
+                      values: Seq[String]): MorTable = {
+    wholeTable(values)
     updateOver(readForKeysIndexed(recordKeys).filter(cond), set, batchId)
+  }
 
   private def updateOver(base: DataFrame, set: Map[String, Column],
                          batchId: Long): MorTable = {
@@ -1199,7 +1208,9 @@ final class MorTable(
     * [[readForKeysOf]] above it — the size-dispatching point read the SQL
     * MERGE command uses when its ON condition implies key equality.
     * `batchKeys` is a one-column DataFrame of record keys. */
-  private[graft] def readForKeyBatch(batchKeys: DataFrame): DataFrame = {
+  private[graft] def readForKeyBatch(batchKeys: DataFrame,
+                                     values: Seq[String]): DataFrame = {
+    wholeTable(values)
     // same compacted-base gate as mergeTarget: callers left-join on key
     // equality, so the unrestricted snapshot is semantically identical
     // and cheaper when there is nothing to prune
@@ -1383,7 +1394,10 @@ final class MorTable(
     snapshotOf(timeline().filter(_.seq <= asOfSeq))
 
   /** `read()` as of commit `asOfSeq` (no metadata columns). */
-  def readAt(asOfSeq: Long): DataFrame = dropMeta(snapshotAt(asOfSeq))
+  def readAt(asOfSeq: Long, values: Seq[String]): DataFrame = {
+    wholeTable(values)
+    dropMeta(snapshotAt(asOfSeq))
+  }
 
   /** Snapshot as-of just before `batchId` landed — the recovery read for
     * multi-table exactly-once (a replayed batch must see pre-batch state
@@ -1551,7 +1565,8 @@ final class MorTable(
     * the outer join — changed-key cost, never a table rescan, so a
     * downstream consumer can turn this table into a changelog source at
     * any scale. */
-  def readChangelog(fromSeq: Long, toSeq: Long = Long.MaxValue): DataFrame = {
+  def readChangelog(fromSeq: Long, toSeq: Long, values: Seq[String]): DataFrame = {
+    wholeTable(values)
     val dataCols = snapshotSchema().fieldNames.toSeq
     val deltas = timeline().filter(i =>
       i.kind == "delta" && i.seq > fromSeq && i.seq <= toSeq)
@@ -1639,7 +1654,8 @@ final class MorTable(
     * says nothing about the merged cardinality), no unfolded stragglers,
     * and a round-13+ manifest that recorded the non-tombstone total.
     * Everything else fails CLOSED to the real scan. */
-  def exactLiveRowCount(): Option[Long] = {
+  def exactLiveRowCount(values: Seq[String]): Option[Long] = {
+    wholeTable(values)
     val tl = timeline()
     if (tl.isEmpty) return None // loud-read contract: empty table ≠ count 0
     val (lastCompact, deltas) = liveDeltas(tl)
@@ -1980,8 +1996,10 @@ final class MorTable(
   }
 
   /** [[snapshotForKeyRange]] without the lake metadata columns. */
-  def readForKeyRange(lo: String, hi: String): DataFrame =
+  def readForKeyRange(lo: String, hi: String, values: Seq[String]): DataFrame = {
+    wholeTable(values)
     dropMeta(snapshotForKeyRange(lo, hi))
+  }
 
   // ------------------------------------------------ record-level index
   //
@@ -2017,7 +2035,8 @@ final class MorTable(
     * reads always scan live delta dirs (any of which may carry a key's
     * newest version), so the index only has to be exact about the
     * immutable base. */
-  def buildRecordIndex(): Unit = synchronized {
+  def buildRecordIndex(values: Seq[String]): Unit = synchronized {
+    wholeTable(values)
     val (lastC, _) = liveDeltas(timeline())
     val c = lastC.getOrElse(throw new IllegalStateException(
       s"buildRecordIndex: $path has no compacted base — compact() first"))
@@ -2137,7 +2156,8 @@ final class MorTable(
     * back to [[readForKeys]] (fail closed) when no index exists at the
     * CURRENT compaction boundary or the boundary is an external
     * bootstrap/clone reference. */
-  def readForKeysIndexed(recordKeys: Seq[String]): DataFrame = {
+  def readForKeysIndexed(recordKeys: Seq[String], values: Seq[String]): DataFrame = {
+    wholeTable(values)
     require(recordKeys.size <= 100000,
       s"readForKeysIndexed got ${recordKeys.size} keys — a literal In() " +
         "this large bloats the plan; scan-and-join instead")
@@ -2169,7 +2189,10 @@ final class MorTable(
   }
 
   /** Snapshot without the lake metadata columns (user-facing read). */
-  def read(): DataFrame = dropMeta(snapshot())
+  def read(values: Seq[String]): DataFrame = {
+    wholeTable(values)
+    dropMeta(snapshot())
+  }
 
   /** READ-OPTIMIZED (RO) query view — base files ONLY, at the last
     * compaction boundary. The other half of Hudi's MOR read surface: the
@@ -2196,7 +2219,10 @@ final class MorTable(
   }
 
   /** [[snapshotReadOptimized]] without the lake metadata columns. */
-  def readOptimized(): DataFrame = dropMeta(snapshotReadOptimized())
+  def readOptimized(values: Seq[String]): DataFrame = {
+    wholeTable(values)
+    dropMeta(snapshotReadOptimized())
+  }
 
   /** `read()` as-of just before `batchId` (see snapshotExcludingBatch). */
   def readExcludingBatch(batchId: Long): DataFrame =
@@ -2880,6 +2906,62 @@ final class MorTable(
     fs.delete(hPath, true)
     MorTable.purgeCaches(canonTablePath)
   }
+
+  // ------------------------------------- LakeTable: the unpartitioned form
+
+  def partitionCol: Option[String] = None
+  def commits(): Seq[Instant] = timeline()
+  def partitions(): Seq[String] = Nil
+  def children(): Seq[(String, MorTable)] = Seq("" -> this)
+  def exists(): Boolean = timeline().nonEmpty
+
+  def readIncremental(sinceSeq: Long, values: Seq[String]): DataFrame = {
+    wholeTable(values)
+    readIncremental(sinceSeq)
+  }
+
+  def applyChangelog(envelope: DataFrame, batchId: Long): MorTable =
+    applyChangelog(envelope, batchId, insertOnly = false)
+
+  def dropPartitions(values: Seq[String]): Seq[String] = {
+    wholeTable(values)
+    Nil
+  }
+
+  def runCompaction(mode: String, zorderCols: Seq[String],
+                    values: Seq[String]): (String, String) = {
+    require(values.isEmpty, "partition argument needs a partitioned table")
+    mode.toLowerCase match {
+      case "full" => compact(); ("compacted", "full")
+      case "minor" => compactMinor(); ("compacted", "minor")
+      case "zorder" =>
+        require(zorderCols.nonEmpty, "zorder mode needs zorder_cols")
+        compactZOrder(zorderCols)
+        ("compacted", s"zorder(${zorderCols.mkString(",")})")
+      case "due" =>
+        if (maybeCompact()) ("compacted", "due") else ("skipped", "not due")
+      case m => throw new IllegalArgumentException(s"unknown mode '$m'")
+    }
+  }
+
+  def compactIfDue(zorderCols: Seq[String]): Boolean =
+    if (zorderCols.isEmpty) maybeCompact()
+    else {
+      val due = compactionDue()
+      if (due) compactZOrder(zorderCols)
+      due
+    }
+
+  def plannerNdv(liveRows: => Option[Long]): Map[String, Long] = {
+    val keyNdv: Map[String, Long] =
+      if (keyCols.size == 1) liveRows.map(keyCols.head -> _).toMap else Map.empty
+    colNdv() ++ keyNdv
+  }
+
+  /** The unpartitioned form has no partitions to scope a verb to. */
+  private def wholeTable(values: Seq[String]): Unit =
+    require(values.isEmpty,
+      s"$path is not partitioned: cannot scope to partition(s) ${values.mkString(", ")}")
 }
 
 object MorTable {

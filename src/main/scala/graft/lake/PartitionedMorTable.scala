@@ -49,7 +49,7 @@ final class PartitionedMorTable(
     spark: SparkSession,
     val path: String,
     val keyCols: Seq[String],
-    val partitionCol: String,
+    partCol: String,
     val compactionDeltaCommits: Int = 2,
     val compactionDeltaSeconds: Long = 120L,
     val autoCompact: Boolean = true,
@@ -57,7 +57,7 @@ final class PartitionedMorTable(
       * 0 (default) lets AQE size the ranges to target-sized files — the
       * production behavior; set explicitly when AQE's coalescing would
       * fold everything into one file (tiny tables, tests). */
-    val writePartitions: Int = 0) {
+    val writePartitions: Int = 0) extends LakeTable {
 
   private val hPath = new Path(path)
   private def fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -103,9 +103,18 @@ final class PartitionedMorTable(
     try {
       val futs = xs.map(x => pool.submit(
         new java.util.concurrent.Callable[B] { override def call(): B = f(x) }))
-      futs.map { fut =>
+      try futs.map { fut =>
         try fut.get()
         catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      } catch {
+        case e: Throwable =>
+          // stop the siblings BEFORE the failure reaches the caller: a
+          // child still queued or running would otherwise go on committing
+          // after the caller has seen the call fail
+          futs.foreach(_.cancel(true))
+          pool.shutdownNow()
+          pool.awaitTermination(600, java.util.concurrent.TimeUnit.SECONDS)
+          throw e
       }
     } finally pool.shutdown()
   }
@@ -391,7 +400,7 @@ final class PartitionedMorTable(
       if (orderWithinBatch.isEmpty) batch
       else {
         val w = org.apache.spark.sql.expressions.Window
-          .partitionBy((partitionCol +: keyCols).map(col): _*)
+          .partitionBy((partCol +: keyCols).map(col): _*)
           .orderBy(orderWithinBatch.map(_.desc): _*)
         batch.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
@@ -402,7 +411,7 @@ final class PartitionedMorTable(
       .withColumn("_deleted", lit(false))
       .withColumn("_commit_seqno", lit(token))
       .withColumn("_commit_time", lit(MorTable.commitTimeString(now)))
-      .withColumn("__p", col(partitionCol).cast("string"))
+      .withColumn("__p", col(partCol).cast("string"))
     val stagingDir = new Path(hPath, s".staging/$token")
     // FAIL-mode expectations ride the one staged write as an Observation;
     // a violating batch removes the staging dir before ANY child adopts
@@ -486,7 +495,7 @@ final class PartitionedMorTable(
       if (orderWithinBatch.isEmpty) batch
       else {
         val w = org.apache.spark.sql.expressions.Window
-          .partitionBy((partitionCol +: keyCols).map(col): _*)
+          .partitionBy((partCol +: keyCols).map(col): _*)
           .orderBy(orderWithinBatch.map(_.desc): _*)
         batch.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
@@ -497,7 +506,7 @@ final class PartitionedMorTable(
       .withColumn("_deleted", lit(false))
       .withColumn("_commit_seqno", lit(token))
       .withColumn("_commit_time", lit(MorTable.commitTimeString(now)))
-      .withColumn("__p", col(partitionCol).cast("string"))
+      .withColumn("__p", col(partCol).cast("string"))
       .localCheckpoint(true) // pinned: stats agg + probe + write reuse it
     val stats = staged.groupBy(col("__p"))
       .agg(call_function("key_bloom_agg", col("_record_key"), lit(bloomBits)).as("f"),
@@ -575,7 +584,7 @@ final class PartitionedMorTable(
   def deleteWhere(cond: Column, batchId: Long = -1L,
                   values: Seq[String] = Seq.empty): PartitionedMorTable =
     delete(read(values).filter(cond)
-      .select((partitionCol +: keyCols).map(col): _*), batchId)
+      .select((partCol +: keyCols).map(col): _*), batchId)
 
   /** [[deleteWhere]] through the cross-partition point read when the
     * predicate implies a record-key set ([[MorTable.deleteWhereKeys]]
@@ -585,11 +594,11 @@ final class PartitionedMorTable(
                       batchId: Long = -1L,
                       values: Seq[String] = Seq.empty): PartitionedMorTable =
     delete(readForKeys(recordKeys, values).filter(cond)
-      .select((partitionCol +: keyCols).map(col): _*), batchId)
+      .select((partCol +: keyCols).map(col): _*), batchId)
 
   /** Predicate update across partitions (the MERGE-update analog):
     * rewrite matching images, upsert through the one-job staged path.
-    * Updating `partitionCol` itself is refused — a key never moves
+    * Updating `partCol` itself is refused — a key never moves
     * partitions (the global PK includes the partition). All assignments
     * evaluate against the ORIGINAL row in one projection (SQL UPDATE
     * semantics — see [[MorTable.updateWhere]]). */
@@ -606,8 +615,8 @@ final class PartitionedMorTable(
 
   private def updateOver(base: DataFrame, set: Map[String, Column],
                          batchId: Long): PartitionedMorTable = {
-    require(!set.contains(partitionCol),
-      s"updateWhere cannot move rows across partitions ($partitionCol is part of the PK)")
+    require(!set.contains(partCol),
+      s"updateWhere cannot move rows across partitions ($partCol is part of the PK)")
     val updated = base.select(base.columns.map(c =>
       set.get(c).map(_.as(c)).getOrElse(col(c))): _*)
     upsert(updated, keyCols.map(col), batchId)
@@ -619,13 +628,13 @@ final class PartitionedMorTable(
     * in the same `partitionBy` cluster write — so a micro-batch is
     * exactly-once atomic per child through the same rename+instant
     * adoption as [[upsert]]. The partition of each row comes from its own
-    * image's `partitionCol`, so the streaming CDC pipeline lands rows in
+    * image's `partCol`, so the streaming CDC pipeline lands rows in
     * per-partition children with zero extra jobs.
     *
     * Partition semantics (the global PK is (partition, key)):
     *  - batch dedup is per (image partition, key) — envelope keys that are
     *    only unique WITHIN a partition never collapse across partitions;
-    *  - a U whose before/after images disagree on `partitionCol` (a
+    *  - a U whose before/after images disagree on `partCol` (a
     *    partition move) additionally emits a tombstone into the BEFORE
     *    partition at the same seq, so the old partition's copy — whether
     *    from an earlier commit or earlier in this batch — is retired and
@@ -636,10 +645,10 @@ final class PartitionedMorTable(
     * resolution when the source's `seq` is not a total order per key —
     * e.g. an event-time seq with duplicate timestamps (the same contract
     * as `ChangelogSource.materialize`). */
-  def applyChangelog(envelope: DataFrame, batchId: Long = -1L,
-                     tiebreak: Seq[String] = Nil): PartitionedMorTable = {
+  def applyChangelog(envelope: DataFrame, batchId: Long,
+                     tiebreak: Seq[String]): PartitionedMorTable = {
     if (isCommitted(batchId)) return this // replayed micro-batch — no-op
-    val pOf = (image: Column) => image.getField(partitionCol).cast("string")
+    val pOf = (image: Column) => image.getField(partCol).cast("string")
     val events = envelope.select(
       when(col("op") === "D", col("before")).otherwise(col("after")).as("__r"),
       (col("op") === "D").as("__del"), col("key"), col("seq"))
@@ -667,7 +676,7 @@ final class PartitionedMorTable(
       .withColumnRenamed("__del", "_deleted")
       .withColumn("_commit_seqno", lit(token))
       .withColumn("_commit_time", lit(MorTable.commitTimeString(now)))
-      .withColumn("__p", col(partitionCol).cast("string"))
+      .withColumn("__p", col(partCol).cast("string"))
     val stagingDir = new Path(hPath, s".staging/$token")
     staged.write.partitionBy("__p").mode("overwrite").parquet(stagingDir.toString)
     adoptStaged(stagingDir, batchId,
@@ -678,7 +687,7 @@ final class PartitionedMorTable(
     this
   }
 
-  /** Tombstone deletes (keys must carry partitionCol): the same ONE staged
+  /** Tombstone deletes (keys must carry partCol): the same ONE staged
     * `partitionBy` cluster write + metadata-only adoption per touched
     * partition as [[upsert]] — not a driver-side loop of per-partition
     * Spark jobs. Tombstones carry only key/partition columns; the snapshot
@@ -690,13 +699,13 @@ final class PartitionedMorTable(
     val token = nextToken("delete")
     renewingParentMarker(token, "delete") {
     val now = System.currentTimeMillis()
-    val staged = keys.select((partitionCol +: keyCols).distinct.map(col): _*)
+    val staged = keys.select((partCol +: keyCols).distinct.map(col): _*)
       .withColumn("_record_key",
         concat_ws("|", keyCols.map(c => col(c).cast("string")): _*))
       .withColumn("_deleted", lit(true))
       .withColumn("_commit_seqno", lit(token))
       .withColumn("_commit_time", lit(MorTable.commitTimeString(now)))
-      .withColumn("__p", col(partitionCol).cast("string"))
+      .withColumn("__p", col(partCol).cast("string"))
     val stagingDir = new Path(hPath, s".staging/$token")
     staged.write.partitionBy("__p").mode("overwrite").parquet(stagingDir.toString)
     adoptStaged(stagingDir, batchId,
@@ -756,7 +765,7 @@ final class PartitionedMorTable(
   /** Table-global last-write-wins: `_commit_seqno` is the parent token. */
   private def lwwLatest(df: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(partitionCol), col("_record_key"))
+      .partitionBy(col(partCol), col("_record_key"))
       .orderBy(col("_commit_seqno").desc)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
@@ -766,9 +775,9 @@ final class PartitionedMorTable(
     * columns in scan order (mergeSchema's field order depends on file
     * listing order, so pin the prefix deterministically). */
   private def orderedDataCols(scanCols: Seq[String]): Seq[String] =
-    (keyCols :+ partitionCol) ++
+    (keyCols :+ partCol) ++
       scanCols.filterNot(c => metaCols.contains(c) ||
-        c == partitionCol || keyCols.contains(c))
+        c == partCol || keyCols.contains(c))
 
   /** Snapshot read over the named partitions only (partition pruning), or
     * the whole table when `values` is empty. */
@@ -1219,17 +1228,17 @@ final class PartitionedMorTable(
     // timeline listings per CDC read (and could even name base-only columns
     // this delta-derived output cannot produce)
     val dataCols = orderedDataCols(deltas.columns)
-    val touched = net.select(col(partitionCol).as("__p"),
+    val touched = net.select(col(partCol).as("__p"),
       col("_record_key").as("__k")).distinct()
     val before = lww(deltas.filter(col("_commit_seqno") <= fromToken))
       .filter(!col("_deleted"))
-      .join(touched, col(partitionCol) === col("__p") &&
+      .join(touched, col(partCol) === col("__p") &&
         col("_record_key") === col("__k"), "left_semi")
-    val bCols = Seq(col(partitionCol).as("__bp"), col("_record_key").as("__bk"),
+    val bCols = Seq(col(partCol).as("__bp"), col("_record_key").as("__bk"),
       lit(true).as("_before_present")) ++
       dataCols.map(c => col(c).as(s"before_$c"))
     val joined = net.join(before.select(bCols: _*),
-      col(partitionCol) === col("__bp") && col("_record_key") === col("__bk"),
+      col(partCol) === col("__bp") && col("_record_key") === col("__bk"),
       "left_outer")
       .withColumn("_before_present", coalesce(col("_before_present"), lit(false)))
       .withColumn("op",
@@ -1409,7 +1418,7 @@ final class PartitionedMorTable(
         .map(p => s""""policy":${p.toJson},""").getOrElse("")
       val cat = s"""{"name":${q(hPath.getName)},"path":${q(path)},""" +
         s""""keyCols":[${keyCols.map(q).mkString(",")}],""" +
-        s""""partitionCol":${q(partitionCol)},$pol"schema":${schema.json}}"""
+        s""""partitionCol":${q(partCol)},$pol"schema":${schema.json}}"""
       val ctmp = new Path(dir, ".catalog.json.tmp")
       val cout = fs.create(ctmp, true)
       try cout.write(cat.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -1510,17 +1519,17 @@ final class PartitionedMorTable(
   /** Zero-copy BOOTSTRAP, partitioned form ([[MorTable.bootstrap]]
     * completed across partitions — the Hudi METADATA_ONLY bootstrap over
     * a Hive-partitioned layout, the normal shape of a 100 TB onboarding:
-    * `<sourceDir>/<partitionCol>=<v>/ *.parquet`): adopt every source
+    * `<sourceDir>/<partCol>=<v>/ *.parquet`): adopt every source
     * partition directory as the matching child's external base — one
     * instant file per child plus one parent instant, zero data jobs,
     * zero bytes copied; the source layout is exactly what
-    * `df.write.partitionBy(partitionCol).parquet(dir)` produces (values
+    * `df.write.partitionBy(partCol).parquet(dir)` produces (values
     * Hive-escaped in dir names, the column absent from the files).
     *
     * Reads: the raw multi-dir scan cannot serve meta-less files, so
     * every read path unions ONE partition-discovery scan over the still-
     * bootstrapped children's source dirs (`basePath` = the source root,
-    * so `partitionCol` reconstructs; pruning = listing only the selected
+    * so `partCol` reconstructs; pruning = listing only the selected
     * children) with the lake meta columns synthesized — `_record_key`
     * from the keys, every row live, the whole bootstrap the parent
     * token. Deltas then layer per child exactly as on managed bases
@@ -1538,7 +1547,7 @@ final class PartitionedMorTable(
     * pushdown; data-column predicates still push into the external
     * scan). Refuses loudly on a non-empty table, a missing/empty source
     * partition dir, a Hive default (null) partition dir, key columns
-    * absent, or files carrying `partitionCol`/lake meta names.
+    * absent, or files carrying `partCol`/lake meta names.
     * Idempotent for crash retries (children skip an already-adopted
     * source dir; a completed bootstrap of the same source no-ops). */
   def bootstrap(sourceDir: String, batchId: Long = -1L): PartitionedMorTable = {
@@ -1550,7 +1559,7 @@ final class PartitionedMorTable(
       s"bootstrap requires an empty table, but $path has commits")
     val src = new Path(sourceDir)
     require(fs.exists(src), s"bootstrap source $sourceDir does not exist")
-    val prefix = s"$partitionCol="
+    val prefix = s"$partCol="
     val hiveDirs = fs.listStatus(src).toSeq.map(_.getPath.getName)
       .filter(_.startsWith(prefix)).sorted
     require(hiveDirs.nonEmpty,
@@ -1586,16 +1595,16 @@ final class PartitionedMorTable(
     // the value must live ONLY in the dir name: a data-side copy would
     // make the discovery scan ambiguous and the synthesis double-bind it
     val fileSchema = spark.read.parquet(MorTable.globSafe(parts.head._2)).schema
-    require(!fileSchema.fieldNames.contains(partitionCol),
-      s"bootstrap source files carry '$partitionCol' as a data column — " +
+    require(!fileSchema.fieldNames.contains(partCol),
+      s"bootstrap source files carry '$partCol' as a data column — " +
         "Hive layout keeps partition values in directory names only")
-    val ptype = disc.schema(partitionCol).dataType.catalogString
+    val ptype = disc.schema(partCol).dataType.catalogString
     // empty parent + empty children ⇒ the parent bootstrap token and
     // every child's bootstrap seq are all 1; adoptBootstrapBase asserts
     // the coincidence so both seqno-synthesis sites provably agree
     val token = 1L
     parts.foreach { case (v, d) =>
-      child(v).adoptBootstrapBase(d, partitionCol, v, ptype, expectSeq = token)
+      child(v).adoptBootstrapBase(d, partCol, v, ptype, expectSeq = token)
     }
     writeParentInstant(MorTable.Instant(token, "compact", batchId,
       System.currentTimeMillis(), bootstrapDir = Some(sourceDir)))
@@ -1676,7 +1685,7 @@ final class PartitionedMorTable(
       // a dropPartitions on the source leaves its dirs in the user root —
       // a clone (a fresh adoption of the WHOLE root) would resurrect
       // them; refuse the surprise rather than silently diverging
-      val prefix = s"$partitionCol="
+      val prefix = s"$partCol="
       val rootParts = fs.listStatus(new Path(root)).toSeq
         .map(_.getPath.getName).filter(_.startsWith(prefix))
         .map(n => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -1686,7 +1695,7 @@ final class PartitionedMorTable(
           s"source no longer serves (source: ${parts.mkString(", ")}; " +
           s"root: ${rootParts.toSeq.sorted.mkString(", ")}) — clone from " +
           "a fresh root or compact the source first")
-      val dst = new PartitionedMorTable(spark, dstPath, keyCols, partitionCol,
+      val dst = new PartitionedMorTable(spark, dstPath, keyCols, partCol,
         compactionDeltaCommits, compactionDeltaSeconds, autoCompact,
         writePartitions)
       require(dst.parentTimeline().isEmpty,
@@ -1710,7 +1719,7 @@ final class PartitionedMorTable(
           s"cloneTo: a writer committed on $path during the clone (pin landed " +
             s"on $pinned, boundary was $tokenBefore) — quiesce writers and retry")
     }
-    val dst = new PartitionedMorTable(spark, dstPath, keyCols, partitionCol,
+    val dst = new PartitionedMorTable(spark, dstPath, keyCols, partCol,
       compactionDeltaCommits, compactionDeltaSeconds, autoCompact,
       writePartitions)
     require(dst.parentTimeline().isEmpty,
@@ -1880,6 +1889,62 @@ final class PartitionedMorTable(
     childHandles.clear()
     MorTable.purgeCaches(MorTable.canonPath(path))
   }
+
+  // --------------------------------------- LakeTable: the partitioned form
+
+  val partitionCol: Option[String] = Some(partCol)
+  def commits(): Seq[MorTable.Instant] = parentTimeline()
+  def children(): Seq[(String, MorTable)] = partitions().map(v => v -> child(v))
+  override def mapChildren[A](f: MorTable => A): Seq[(String, A)] = {
+    val parts = partitions()
+    parts.zip(parChildren(parts)(f))
+  }
+  def exists(): Boolean = partitions().nonEmpty
+
+  def applyChangelog(envelope: DataFrame, batchId: Long): PartitionedMorTable =
+    applyChangelog(envelope, batchId, tiebreak = Nil)
+
+  /** No cross-partition key bounds to prune by: the selected partitions,
+    * restricted to the range. */
+  def readForKeyRange(lo: String, hi: String,
+                      values: Seq[String] = Seq.empty): DataFrame = {
+    val recordKey = concat_ws("|", keyCols.map(c => col(c).cast("string")): _*)
+    read(values).filter(recordKey >= lit(lo) && recordKey < lit(hi))
+  }
+
+  /** `full` and `minor` both run [[compactPartitions]] (per-child
+    * minor-planned already); `values` narrows every mode but `due` to the
+    * named children, loud on a miss. */
+  def runCompaction(mode: String, zorderCols: Seq[String] = Nil,
+                    values: Seq[String] = Seq.empty): (String, String) = {
+    val parts =
+      if (values.isEmpty) partitions()
+      else {
+        values.foreach(v => require(partitions().contains(v),
+          s"no partition '$v' in ${partitions().sorted.mkString(", ")}"))
+        values
+      }
+    mode.toLowerCase match {
+      case "full" | "minor" =>
+        compactPartitions(parts)
+        ("compacted", s"${parts.size} partitions")
+      case "zorder" =>
+        require(zorderCols.nonEmpty, "zorder mode needs zorder_cols")
+        val did = compactZOrderPartitions(zorderCols, dueOnly = false, only = parts)
+        ("compacted", s"zorder(${zorderCols.mkString(",")}) on ${did.size} partitions")
+      case "due" =>
+        val did = maybeCompact()
+        if (did.nonEmpty) ("compacted", did.mkString(",")) else ("skipped", "not due")
+      case m => throw new IllegalArgumentException(
+        s"mode '$m' is not supported on a partitioned table")
+    }
+  }
+
+  def compactIfDue(zorderCols: Seq[String] = Nil): Boolean =
+    if (zorderCols.isEmpty) maybeCompact().nonEmpty
+    else compactZOrderPartitions(zorderCols).nonEmpty
+
+  def plannerNdv(liveRows: => Option[Long]): Map[String, Long] = colNdv()
 }
 
 object PartitionedMorTable {

@@ -96,15 +96,18 @@ object TableServices {
   def custom(cycle: () => Boolean, periodMs: Long = 60000L): TableServices =
     new TableServices(cycle, periodMs)
 
-  /** Service for a single table: num_or_time compaction check each tick;
-    * `cleanEvery` > 0 additionally runs [[MorTable.clean]] after every Nth
-    * compaction (0 = never — the safe default when multi-table batches may
-    * still recovery-read old deltas). `zorderCols` + `clusterEvery` > 0
-    * turn every Nth COMPACTING tick into a z-order clustering compaction
-    * (the Hudi async-clustering analog — same due-trigger, different
-    * layout); `savepointTtlMs` > 0 releases stale savepoint pins each
-    * tick (savepoint-TTL housekeeping). */
-  def apply(t: MorTable, periodMs: Long = 60000L, cleanEvery: Int = 0,
+  /** Service for one table: num_or_time compaction check each tick — a
+    * partitioned table compacts its due children in ONE batched staged
+    * write ([[PartitionedMorTable.maybeCompact]]); `cleanEvery` > 0
+    * additionally runs [[LakeTable.clean]] after every Nth compaction (0 =
+    * never — the safe default when multi-table batches may still
+    * recovery-read old deltas). `zorderCols` + `clusterEvery` > 0 turn
+    * every Nth COMPACTING tick into a z-order clustering compaction of what
+    * is due (the Hudi async-clustering analog — same due-trigger, different
+    * layout; partitioned: O(churned partitions)); `savepointTtlMs` > 0
+    * releases stale savepoint pins each tick (savepoint-TTL
+    * housekeeping). */
+  def apply(t: LakeTable, periodMs: Long = 60000L, cleanEvery: Int = 0,
             zorderCols: Seq[String] = Nil, clusterEvery: Int = 0,
             savepointTtlMs: Long = 0L): TableServices = {
     val sinceClean = new AtomicInteger(0)
@@ -113,12 +116,7 @@ object TableServices {
       if (savepointTtlMs > 0) { t.releaseSavepointsOlderThan(savepointTtlMs); () }
       val clusterTick = zorderCols.nonEmpty && clusterEvery > 0 &&
         (compacting.get() + 1) % clusterEvery == 0
-      val did =
-        if (clusterTick) {
-          val due = t.compactionDue()
-          if (due) t.compactZOrder(zorderCols)
-          due
-        } else t.maybeCompact()
+      val did = t.compactIfDue(if (clusterTick) zorderCols else Nil)
       if (did) compacting.incrementAndGet()
       if (did && cleanEvery > 0 && sinceClean.incrementAndGet() >= cleanEvery) {
         sinceClean.set(0)
@@ -127,38 +125,6 @@ object TableServices {
       did
     }, periodMs)
   }
-
-  /** Service for a partitioned table: due children compact in ONE batched
-    * staged write per tick ([[PartitionedMorTable.maybeCompact]]);
-    * `cleanEvery` > 0 also cleans children + parent timeline after every
-    * Nth compacting tick. Clustering/savepoint-TTL cadences as in the
-    * unpartitioned form — a cluster tick re-clusters the DUE children
-    * ([[PartitionedMorTable.compactZOrderPartitions]], O(churned
-    * partitions)). */
-  def apply(p: PartitionedMorTable, periodMs: Long, cleanEvery: Int,
-            zorderCols: Seq[String], clusterEvery: Int,
-            savepointTtlMs: Long): TableServices = {
-    val sinceClean = new AtomicInteger(0)
-    val compacting = new AtomicInteger(0)
-    new TableServices(() => {
-      if (savepointTtlMs > 0) { p.releaseSavepointsOlderThan(savepointTtlMs); () }
-      val clusterTick = zorderCols.nonEmpty && clusterEvery > 0 &&
-        (compacting.get() + 1) % clusterEvery == 0
-      val did =
-        if (clusterTick) p.compactZOrderPartitions(zorderCols).nonEmpty
-        else p.maybeCompact().nonEmpty
-      if (did) compacting.incrementAndGet()
-      if (did && cleanEvery > 0 && sinceClean.incrementAndGet() >= cleanEvery) {
-        sinceClean.set(0)
-        p.clean()
-        p.cleanParentTimeline()
-      }
-      did
-    }, periodMs)
-  }
-
-  def apply(p: PartitionedMorTable, periodMs: Long, cleanEvery: Int): TableServices =
-    apply(p, periodMs, cleanEvery, Nil, 0, 0L)
 
   /** Service that keeps a base table's DECLARED materialized views FRESH
     * (the async-maintenance analog of `REFRESH MATERIALIZED VIEW` — Hudi's
@@ -172,26 +138,13 @@ object TableServices {
     * cadence continues. Run standalone or alongside the compaction
     * service — refresh and compaction commute (the changelog algebra reads
     * through compaction boundaries). */
-  def matViews(spark: org.apache.spark.sql.SparkSession, t: MorTable,
+  def matViews(spark: org.apache.spark.sql.SparkSession, t: LakeTable,
                periodMs: Long = 60000L): TableServices =
     custom(() => {
-      val live = t.timeline().lastOption.map(_.seq).getOrElse(0L)
+      val live = t.commits().lastOption.map(_.seq).getOrElse(0L)
       val stale = MatViews.readSpecs(spark, t.path)
         .filter(_.maintainedSeq != live)
-      stale.foreach(s => MatViews.refresh(spark, t.path, t.keyCols, s))
-      stale.nonEmpty
-    }, periodMs)
-
-  /** [[matViews]], partitioned-base form (freshness on the parent
-    * timeline, refresh off the cross-child changelog). */
-  def matViews(spark: org.apache.spark.sql.SparkSession, p: PartitionedMorTable,
-               periodMs: Long): TableServices =
-    custom(() => {
-      val live = p.parentTimeline().lastOption.map(_.seq).getOrElse(0L)
-      val stale = MatViews.readSpecs(spark, p.path)
-        .filter(_.maintainedSeq != live)
-      stale.foreach(s =>
-        MatViews.refreshPartitioned(spark, p.path, p.keyCols, p.partitionCol, s))
+      stale.foreach(s => MatViews.refresh(spark, t.path, t.keyCols, t.partitionCol, s))
       stale.nonEmpty
     }, periodMs)
 
@@ -201,18 +154,10 @@ object TableServices {
     * the maintenance daemon a deployment runs needs only the table path —
     * exactly how the reference declares compaction on its Hudi sinks
     * (zpln:292). */
-  def fromPolicy(spark: org.apache.spark.sql.SparkSession, t: MorTable,
+  def fromPolicy(spark: org.apache.spark.sql.SparkSession, t: LakeTable,
                  periodMs: Long = 60000L): TableServices = {
     val pol = MorTable.readPolicy(spark, t.path).getOrElse(MorTable.Policy())
     apply(t, periodMs, pol.cleanEvery, pol.zorderCols, pol.clusterEvery,
-      pol.savepointTTLSeconds * 1000L)
-  }
-
-  /** [[fromPolicy]], partitioned form. */
-  def fromPolicy(spark: org.apache.spark.sql.SparkSession, p: PartitionedMorTable,
-                 periodMs: Long): TableServices = {
-    val pol = MorTable.readPolicy(spark, p.path).getOrElse(MorTable.Policy())
-    apply(p, periodMs, pol.cleanEvery, pol.zorderCols, pol.clusterEvery,
       pol.savepointTTLSeconds * 1000L)
   }
 }

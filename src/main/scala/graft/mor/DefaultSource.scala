@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, Filter, InsertableRelation, PrunedFilteredScan, RelationProvider}
 import org.apache.spark.sql.types.StructType
-import graft.lake.{MorTable, PartitionedMorTable}
+import graft.lake.{LakeTable, MorTable}
 
 /** Spark DataSource for MOR lake tables — the cross-engine/cross-session
   * metadata seam (the reference registers its Hudi table in Glue so a
@@ -96,11 +96,7 @@ class DefaultSource extends RelationProvider with CreatableRelationProvider
                               parameters: Map[String, String])
       : org.apache.spark.sql.execution.streaming.Source = {
     val (path, keys) = pathAndKeys(parameters)
-    parameters.get("partition") match {
-      case Some(p) =>
-        new PartitionedMorStreamSource(sqlContext.sparkSession, path, keys, p)
-      case None => new MorStreamSource(sqlContext.sparkSession, path, keys)
-    }
+    MorStreamSource(sqlContext.sparkSession, path, keys, parameters.get("partition"))
   }
 
   /** Declared compaction/write policy, the reference's `CREATE TABLE …
@@ -139,12 +135,8 @@ class DefaultSource extends RelationProvider with CreatableRelationProvider
       // session-timezone parse, shared with SQL TIMESTAMP AS OF — the two
       // surfaces must resolve one string to the SAME commit
       val ms = MorDml.sessionTsToMs(sqlContext.sparkSession, s)
-      val tl = parameters.get("partition") match {
-        case Some(p) => PartitionedMorTable
-          .resolve(sqlContext.sparkSession, path, keys, p).parentTimeline()
-        case None => MorTable.resolve(sqlContext.sparkSession, path, keys).timeline()
-      }
-      tl.filter(_.commitMs <= ms).lastOption.map(_.seq)
+      LakeTable.resolve(sqlContext.sparkSession, path, keys, parameters.get("partition"))
+        .commits().filter(_.commitMs <= ms).lastOption.map(_.seq)
         .getOrElse(throw new IllegalArgumentException(
           s"no commit at or before timestamp '$s' on $path"))
     }
@@ -155,29 +147,20 @@ class DefaultSource extends RelationProvider with CreatableRelationProvider
     // no commits yet. Idempotent by that guard — every query through a
     // catalog entry re-resolves this relation, and later resolutions
     // (after the bootstrap commit, or after upserts) must no-op.
+    // (the partitioned route adopts the source's Hive `<partition>=<v>/`
+    // layout per child, zero-copy)
     parameters.get("bootstrap").foreach { src =>
-      parameters.get("partition") match {
-        case Some(p) =>
-          // partitioned route: adopts the source's Hive
-          // `<partition>=<v>/` layout per child, zero-copy
-          val t = PartitionedMorTable.resolve(sqlContext.sparkSession, path, keys, p)
-          if (t.parentTimeline().isEmpty) { t.bootstrap(src); () }
-        case None =>
-          val t = MorTable.resolve(sqlContext.sparkSession, path, keys)
-          if (t.timeline().isEmpty) { t.bootstrap(src); () }
-      }
+      val t = LakeTable.resolve(sqlContext.sparkSession, path, keys,
+        parameters.get("partition"))
+      if (t.commits().isEmpty) { t.bootstrap(src); () }
     }
     // persistent-MV auto-registration: a base table with DDL-declared
     // views ([[graft.lake.MatViews]]) arms the optimizer rewrite on first
     // contact in ANY session — the Glue-catalog contract for MVs. One
     // fs.exists on tables without views; best-effort (a broken views.json
     // must never take down reads — the rewrite just stays cold).
-    parameters.get("partition") match {
-      case Some(pc) => graft.lake.MatViews.autoRegisterPartitioned(
-        sqlContext.sparkSession, path, keys, pc)
-      case None =>
-        graft.lake.MatViews.autoRegister(sqlContext.sparkSession, path, keys)
-    }
+    graft.lake.MatViews.autoRegister(sqlContext.sparkSession, path, keys,
+      parameters.get("partition"))
     MorRelation(sqlContext, path, keys,
       asOf = parameters.get("asOf").map(_.toLong).orElse(asOfTs),
       sinceSeq = parameters.get("sinceSeq").map(_.toLong),
@@ -207,26 +190,12 @@ class DefaultSource extends RelationProvider with CreatableRelationProvider
     val declared = policyOf(parameters)
     val (exps, expMode) = expectationsOf(parameters)
     def table() = {
-      val t = MorTable.resolve(sqlContext.sparkSession, path, keys, declared)
+      val t = LakeTable.resolve(sqlContext.sparkSession, path, keys, partCol, declared)
       if (exps.nonEmpty) t.withExpectations(exps, expMode) else t
     }
-    def partTable(p: String) = {
-      val t = PartitionedMorTable.resolve(
-        sqlContext.sparkSession, path, keys, p, declared)
-      if (exps.nonEmpty) t.withExpectations(exps, expMode) else t
-    }
-    def exists = partCol match {
-      case Some(p) => partTable(p).partitions().nonEmpty
-      case None => table().timeline().nonEmpty
-    }
-    def upsert(): Unit = partCol match {
-      case Some(p) => partTable(p).upsert(data, order.map(col)): Unit
-      case None => table().upsert(data, order.map(col)): Unit
-    }
-    def drop(): Unit = partCol match {
-      case Some(p) => partTable(p).drop()
-      case None => table().drop()
-    }
+    def exists = table().exists()
+    def upsert(): Unit = table().upsert(data, order.map(col)): Unit
+    def drop(): Unit = table().drop()
     mode match {
       case SaveMode.ErrorIfExists if exists =>
         throw new IllegalStateException(s"graft.mor table already exists: $path")
@@ -287,22 +256,15 @@ private[mor] final class MorStreamSink(
     expectOpts: Map[String, String] = Map.empty)
     extends org.apache.spark.sql.execution.streaming.Sink {
 
-  private lazy val (exps, expMode) = DefaultSource.expectationsOf(expectOpts)
   private lazy val table = {
-    val t = MorTable.resolve(spark, path, keys, declared)
-    if (exps.nonEmpty) t.withExpectations(exps, expMode) else t
-  }
-  private lazy val partTable = {
-    val t = PartitionedMorTable.resolve(spark, path, keys, partitionCol.get, declared)
+    val (exps, expMode) = DefaultSource.expectationsOf(expectOpts)
+    val t = LakeTable.resolve(spark, path, keys, partitionCol, declared)
     if (exps.nonEmpty) t.withExpectations(exps, expMode) else t
   }
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val batch = org.apache.spark.sql.graft.GraftSqlShim.asBatchDataFrame(spark, data)
-    partitionCol match {
-      case Some(_) => partTable.upsert(batch, order.map(col), batchId): Unit
-      case None => table.upsert(batch, order.map(col), batchId): Unit
-    }
+    table.upsert(batch, order.map(col), batchId): Unit
   }
 
   override def toString: String = s"MorStreamSink[$path]"
@@ -376,24 +338,16 @@ final case class MorRelation(sqlContext: SQLContext, path: String,
   // resolve() so the table's persisted compaction/write policy applies to
   // SQL writes (INSERT INTO through the catalog) from ANY session — a
   // fresh handle must compact at the declared cadence, not the defaults
-  private def table = MorTable.resolve(sqlContext.sparkSession, path, keys)
-  private def partTable = PartitionedMorTable.resolve(
-    sqlContext.sparkSession, path, keys, partitionCol.get)
+  private[mor] def table: LakeTable =
+    LakeTable.resolve(sqlContext.sparkSession, path, keys, partitionCol)
 
-  private def scanDf() = (partitionCol, asOf, sinceSeq, changelogFrom) match {
-    case (Some(_), _, _, _) if readOptimized =>
-      partTable.readOptimized(partitionValues)
-    case (None, _, _, _) if readOptimized => table.readOptimized()
-    case (Some(_), _, _, Some(from)) =>
-      partTable.readChangelog(from, changelogTo.getOrElse(Long.MaxValue), partitionValues)
-    case (None, _, _, Some(from)) =>
-      table.readChangelog(from, changelogTo.getOrElse(Long.MaxValue))
-    case (Some(_), _, Some(seq), _) => partTable.readIncremental(seq, partitionValues)
-    case (Some(_), Some(seq), _, _) => partTable.readAt(seq, partitionValues)
-    case (Some(_), _, _, _) => partTable.read(partitionValues)
-    case (None, Some(seq), _, _) => table.readAt(seq)
-    case (None, _, Some(seq), _) => table.readIncremental(seq)
-    case _ => table.read()
+  private def scanDf() = (asOf, sinceSeq, changelogFrom) match {
+    case _ if readOptimized => table.readOptimized(partitionValues)
+    case (_, _, Some(from)) =>
+      table.readChangelog(from, changelogTo.getOrElse(Long.MaxValue), partitionValues)
+    case (_, Some(seq), _) => table.readIncremental(seq, partitionValues)
+    case (Some(seq), _, _) => table.readAt(seq, partitionValues)
+    case _ => table.read(partitionValues)
   }
 
   override val schema: StructType = scanDf().schema
@@ -433,10 +387,7 @@ final case class MorRelation(sqlContext: SQLContext, path: String,
     * (standard DataSource behavior); data freshness is unaffected. */
   override def sizeInBytes: Long = statsBytes
   @transient private lazy val statsBytes: Long = {
-    val b = partitionCol match {
-      case Some(_) => partTable.liveBytes()
-      case None => table.liveBytes()
-    }
+    val b = table.liveBytes()
     if (b > 0L) b else super.sizeInBytes
   }
 
@@ -465,22 +416,14 @@ final case class MorRelation(sqlContext: SQLContext, path: String,
   private[graft] def metadataCount(pinned: Seq[String]): Option[Long] =
     if (asOf.isDefined || sinceSeq.isDefined || changelogFrom.isDefined ||
         readOptimized) None
-    else (partitionCol, pinned) match {
-      case (Some(_), Nil) => partTable.exactLiveRowCount(partitionValues)
-      case (Some(_), vs) =>
-        if (partitionValues.nonEmpty) None // two pin sources: fail closed
-        else partTable.exactLiveRowCount(vs)
-      case (None, Nil) => table.exactLiveRowCount()
-      case (None, _) => None // a filter on an unpartitioned scan never rewrites
-    }
+    else if (pinned.isEmpty) table.exactLiveRowCount(partitionValues)
+    else if (partitionValues.nonEmpty) None // two pin sources: fail closed
+    else table.exactLiveRowCount(pinned)
 
   @transient private[mor] lazy val rowCountStat: Option[Long] =
     if (asOf.isDefined || sinceSeq.isDefined || changelogFrom.isDefined ||
         readOptimized) None // RO cardinality = base only, not the live count
-    else partitionCol match {
-      case Some(_) => partTable.liveRowCount()
-      case None => table.liveRowCount()
-    }
+    else table.liveRowCount()
 
   /** Planner COLUMN-LEVEL distinct counts (surfaced as
     * `CatalogColumnStat`s by [[MorRelationStatsRule]], what CBO's
@@ -495,17 +438,7 @@ final case class MorRelation(sqlContext: SQLContext, path: String,
   @transient private[mor] lazy val ndvStat: Map[String, Long] =
     if (asOf.isDefined || sinceSeq.isDefined || changelogFrom.isDefined ||
         readOptimized) Map.empty
-    else partitionCol match {
-      case Some(_) =>
-        // cross-child HLL register merge; no key NDV — the partitioned PK
-        // is (partition, key), so the key column alone can repeat
-        partTable.colNdv()
-      case None =>
-        val keyNdv: Map[String, Long] =
-          if (keys.size == 1) rowCountStat.map(keys.head -> _).toMap
-          else Map.empty
-        table.colNdv() ++ keyNdv
-    }
+    else table.plannerNdv(rowCountStat)
 
   /** Table-level (min, max) per stat column (manifest header; see
     * [[graft.lake.MorTable.colBounds]]). FilterEstimation treats a
@@ -514,10 +447,7 @@ final case class MorRelation(sqlContext: SQLContext, path: String,
     * only attaches NDV for numeric columns when bounds ride along. */
   @transient private[mor] lazy val colBoundsStat: Map[String, (Double, Double)] =
     if (ndvStat.isEmpty) Map.empty
-    else partitionCol match {
-      case Some(_) => partTable.colBounds()
-      case None => table.colBounds()
-    }
+    else table.colBounds()
 
   /** SQL-surface pushdown (PrunedFilteredScan): `SELECT a FROM t WHERE k
     * = 'x'` through the catalog must cost what the programmatic API
@@ -544,47 +474,36 @@ final case class MorRelation(sqlContext: SQLContext, path: String,
   private[graft] def scanWithFilters(requiredColumns: Array[String],
                                    filters: Array[Filter]): DataFrame = {
     import org.apache.spark.sql.sources._
-    val routed = (partitionCol, asOf, sinceSeq, changelogFrom) match {
+    // partition values an equality/IN filter pins (partitioned form only)
+    val pinned = partitionCol.flatMap(colValues(filters, _))
+    val routed = (asOf, sinceSeq, changelogFrom) match {
       // RO view: already one pure parquet scan — key/range routing would
       // send it down the realtime (base ⟕ log) readers; partition
       // equality/IN still prunes child timelines before the scan
-      case (Some(pc), _, _, _) if readOptimized && partitionValues.isEmpty =>
-        colValues(filters, pc) match {
-          case Some(vs) => partTable.readOptimized(vs)
-          case None => scanDf()
-        }
-      case _ if readOptimized => scanDf()
-      case (None, None, None, None) =>
-        keyValues(filters) match {
-          // SQL point queries inherit the record-level index when one is
-          // FRESH (exact file pinning — the Hudi behavior); the verb
-          // itself falls back to the bloom path otherwise, so this route
-          // never costs a plan when no index exists
-          case Some(ks) => table.readForKeysIndexed(ks)
-          case None => keyRange(filters) match {
-            case Some((lo, hi)) => table.readForKeyRange(lo, hi)
-            case None => table.read()
-          }
-        }
-      // partitioned point path: key equality/IN routes the indexed
-      // cross-partition point read (fresh-index children pin exact base
-      // files, the rest bloom-prune — per-child fail-closed), restricted
-      // to the OPTIONS partition pin or the filter's partition values
-      case (Some(pc), None, None, None) =>
+      case _ if readOptimized =>
+        if (partitionValues.isEmpty && pinned.isDefined) table.readOptimized(pinned.get)
+        else scanDf()
+      // point path: key equality/IN routes the indexed point read — SQL
+      // point queries inherit the record-level index when one is FRESH
+      // (exact file pinning — the Hudi behavior; partitioned: per child,
+      // the rest bloom-prune); the verb itself falls back to the bloom path
+      // otherwise, so this route never costs a plan when no index exists.
+      // Restricted to the OPTIONS partition pin or the filter's partition
+      // values; key ranges prune by manifest key bounds
+      case (None, None, None) =>
         val sel = if (partitionValues.nonEmpty) partitionValues
-                  else colValues(filters, pc).getOrElse(Seq.empty)
-        (keyValues(filters), partitionValues.isEmpty) match {
-          case (Some(ks), _) => partTable.readForKeysIndexed(ks, sel)
-          case (None, true) if sel.nonEmpty => partTable.read(sel)
-          case _ => scanDf()
+                  else pinned.getOrElse(Seq.empty)
+        keyValues(filters) match {
+          case Some(ks) => table.readForKeysIndexed(ks, sel)
+          case None => keyRange(filters) match {
+            case Some((lo, hi)) => table.readForKeyRange(lo, hi, sel)
+            case None => table.read(sel)
+          }
         }
       // partitioned time travel keeps partition pruning: the token read
       // restricted to the filter's partition values
-      case (Some(pc), Some(seq), None, None) if partitionValues.isEmpty =>
-        colValues(filters, pc) match {
-          case Some(vs) => partTable.readAt(seq, vs)
-          case None => scanDf()
-        }
+      case (Some(seq), None, None) if partitionValues.isEmpty && pinned.isDefined =>
+        table.readAt(seq, pinned.get)
       case _ => scanDf()
     }
     // ACCESS POLICY before any pushed user predicate evaluates: the row
@@ -732,17 +651,8 @@ final case class MorRelation(sqlContext: SQLContext, path: String,
       "graft.mor: cannot INSERT into a time-travel, incremental, CDC or " +
         "read-optimized read")
     val (exps, expMode) = DefaultSource.expectationsOf(expectOpts)
-    partitionCol match {
-      case Some(_) =>
-        val t = if (exps.nonEmpty) partTable.withExpectations(exps, expMode)
-                else partTable
-        if (overwrite) t.drop()
-        t.upsert(data, keys.map(col)): Unit
-      case None =>
-        val t = if (exps.nonEmpty) table.withExpectations(exps, expMode)
-                else table
-        if (overwrite) t.drop()
-        t.upsert(data, keys.map(col)): Unit
-    }
+    val t = if (exps.nonEmpty) table.withExpectations(exps, expMode) else table
+    if (overwrite) t.drop()
+    t.upsert(data, keys.map(col)): Unit
   }
 }

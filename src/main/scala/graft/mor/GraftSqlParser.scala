@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.lake.{MorTable, PartitionedMorTable}
+import graft.lake.LakeTable
 
 /** Delegating SQL parser for the engine's DDL spellings Spark's grammar
   * lacks — today exactly one statement, the Delta-spelled shallow clone:
@@ -154,7 +154,7 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 }
 
 /** `CREATE TABLE dst SHALLOW CLONE src [LOCATION 'p']` — the SQL spelling
-  * of [[MorTable.cloneTo]] / [[PartitionedMorTable.cloneTo]] (the CALL
+  * of [[LakeTable.cloneTo]] (the CALL
   * `graft_ops.clone_table` twin): resolves the source through either
   * table surface — a `graft.mor` session-catalog table (its OPTIONS give
   * path/keys/partition) or a [[graft.GraftCatalog]]-registered handle —
@@ -191,28 +191,16 @@ case class GraftCloneTableCommand(dst: String, src: String,
         dstId.identifier).toString)
     MorDml.morOptions(spark, tid(src)) match {
       case Some(opts) =>
-        val path = opts.getOrElse("path", throw new IllegalArgumentException(
-          s"graft.mor table $src has no path option"))
-        val keys = opts.getOrElse("keys", "").split(",").toSeq
-          .map(_.trim).filter(_.nonEmpty)
-        opts.get("partition") match {
-          case Some(p) =>
-            PartitionedMorTable.resolve(spark, path, keys, p).cloneTo(dstPath)
-          case None =>
-            MorTable.resolve(spark, path, keys).cloneTo(dstPath)
-        }
+        val t = LakeTable.fromOptions(spark, opts, src)
+        t.cloneTo(dstPath)
         // register the clone as its own graft.mor catalog table: the
         // same keys/partition declaration over the new path
-        val partOpt = opts.get("partition")
-          .map(p => s", partition '$p'").getOrElse("")
+        val partOpt = t.partitionCol.map(p => s", partition '$p'").getOrElse("")
         spark.sql(s"CREATE TABLE ${dstId.quotedString} USING `graft.mor` " +
-          s"OPTIONS (path '$dstPath', keys '${keys.mkString(",")}'$partOpt)")
+          s"OPTIONS (path '$dstPath', keys '${t.keyCols.mkString(",")}'$partOpt)")
         ()
       case None => graft.GraftCatalog.handleOf(spark, src) match {
-        case Some(Left(t)) =>
-          graft.GraftCatalog.register(spark, dst, t.cloneTo(dstPath))
-        case Some(Right(p)) =>
-          graft.GraftCatalog.register(spark, dst, p.cloneTo(dstPath))
+        case Some(t) => graft.GraftCatalog.register(spark, dst, t.cloneTo(dstPath))
         case None => throw new IllegalArgumentException(
           s"SHALLOW CLONE: source '$src' is neither a graft.mor catalog " +
             "table nor a GraftCatalog-registered handle")
@@ -241,53 +229,35 @@ private[mor] object GraftMaintenance {
       graft.GraftCatalog.lookup(spark, name).isDefined
     catch { case scala.util.control.NonFatal(_) => false }
 
-  def resolve(spark: SparkSession, name: String, verb: String)
-      : Either[MorTable, PartitionedMorTable] =
-    MorDml.morOptions(spark, tid(name)) match {
-      case Some(opts) =>
-        val path = opts.getOrElse("path", throw new IllegalArgumentException(
-          s"graft.mor table $name has no path option"))
-        val keys = opts.getOrElse("keys", "").split(",").toSeq
-          .map(_.trim).filter(_.nonEmpty)
-        opts.get("partition") match {
-          case Some(p) => Right(PartitionedMorTable.resolve(spark, path, keys, p))
-          case None => Left(MorTable.resolve(spark, path, keys))
-        }
-      case None => graft.GraftCatalog.handleOf(spark, name).getOrElse(
-        throw new IllegalArgumentException(
-          s"$verb: '$name' is neither a graft.mor catalog table nor a " +
-            "GraftCatalog-registered handle"))
-    }
+  def resolve(spark: SparkSession, name: String, verb: String): LakeTable =
+    MorDml.morOptions(spark, tid(name)).map(LakeTable.fromOptions(spark, _, name))
+      .orElse(graft.GraftCatalog.handleOf(spark, name))
+      .getOrElse(throw new IllegalArgumentException(
+        s"$verb: '$name' is neither a graft.mor catalog table nor a " +
+          "GraftCatalog-registered handle"))
 }
 
 /** `OPTIMIZE t [ZORDER BY (c1, c2)]` — the Delta maintenance spelling
-  * routed onto the engine's compaction verbs: plain → [[MorTable.compact]]
-  * (partitioned: every child), ZORDER BY → [[MorTable.compactZOrder]]
-  * (partitioned: every child re-clustered). Semantics — boundary
+  * routed onto the engine's compaction verbs ([[LakeTable.runCompaction]]):
+  * plain → mode `full` (partitioned: every child), ZORDER BY → mode
+  * `zorder` (partitioned: every child re-clustered). Semantics — boundary
   * creation, manifest stats/blooms publication, record-index refresh —
   * all live in the verbs; this command only routes. */
 case class GraftOptimizeCommand(table: String, zorderCols: Seq[String])
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    GraftMaintenance.resolve(spark, table, "OPTIMIZE") match {
-      case Left(t) =>
-        if (zorderCols.nonEmpty) t.compactZOrder(zorderCols) else t.compact()
-      case Right(p) =>
-        if (zorderCols.nonEmpty)
-          p.compactZOrderPartitions(zorderCols, dueOnly = false,
-            only = p.partitions())
-        else p.compactPartitions(p.partitions())
-    }
+    GraftMaintenance.resolve(spark, table, "OPTIMIZE")
+      .runCompaction(if (zorderCols.isEmpty) "full" else "zorder", zorderCols)
     Seq.empty
   }
 }
 
-/** `VACUUM t` — the Delta spelling of [[MorTable.clean]]: remove
+/** `VACUUM t` — the Delta spelling of [[LakeTable.clean]]: remove
   * unreferenced files past the retention point (savepoint pins, unfolded
   * stragglers and the live boundary all survive — the verb's contract). */
 case class GraftVacuumCommand(table: String) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    GraftMaintenance.resolve(spark, table, "VACUUM").fold(_.clean(), _.clean())
+    GraftMaintenance.resolve(spark, table, "VACUUM").clean()
     Seq.empty
   }
 }
@@ -321,28 +291,16 @@ case class GraftShowIndexesCommand(table: String) extends LeafRunnableCommand {
       nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    def rowsOf(t: MorTable, part: String): Seq[Row] = {
-      val rli =
-        if (t.hasRecordIndex())
-          Seq(Row("record_index", "record_level", t.keyCols.mkString(","), part))
+    val t = GraftMaintenance.resolve(spark, table, "SHOW INDEXES")
+    // per-child metadata listings run CONCURRENTLY on a partitioned table:
+    // at 10^4+ partitions a serial driver loop turned a metadata command
+    // into minutes
+    t.mapChildren(c => (c.hasRecordIndex(), c.indexedColumns())).flatMap {
+      case (v, (hasRli, idxCols)) =>
+        val rli = if (hasRli)
+          Seq(Row("record_index", "record_level", t.keyCols.mkString(","), v))
         else Nil
-      rli ++ t.indexedColumns().map(c =>
-        Row(s"${c}_bloom", "secondary_bloom", c, part))
-    }
-    GraftMaintenance.resolve(spark, table, "SHOW INDEXES") match {
-      case Left(t) => rowsOf(t, "")
-      case Right(p) =>
-        // per-child metadata listings run CONCURRENTLY (the parChildren
-        // pool): at 10^4+ partitions the serial driver loop this replaced
-        // turned a metadata command into minutes (r13 advisory)
-        p.partitions().zip(
-          p.parChildren(p.partitions())(c => (c.hasRecordIndex(), c.indexedColumns()))
-        ).flatMap { case (v, (hasRli, idxCols)) =>
-          val rli = if (hasRli)
-            Seq(Row("record_index", "record_level", p.keyCols.mkString(","), v))
-          else Nil
-          rli ++ idxCols.map(c => Row(s"${c}_bloom", "secondary_bloom", c, v))
-        }
+        rli ++ idxCols.map(c => Row(s"${c}_bloom", "secondary_bloom", c, v))
     }
   }
 }
@@ -351,24 +309,18 @@ case class GraftCreateIndexCommand(name: String, table: String,
                                    cols: Seq[String])
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    val resolved = GraftMaintenance.resolve(spark, table, "CREATE INDEX")
+    val t = GraftMaintenance.resolve(spark, table, "CREATE INDEX")
     if (cols.isEmpty) {
       require(name.equalsIgnoreCase("record_index"),
         s"CREATE INDEX $name: a column-free index must be the " +
           "record_index; secondary indexes need a column list")
-      resolved.fold(_.buildRecordIndex(), _.buildRecordIndex())
+      t.buildRecordIndex()
     } else {
-      resolved match {
-        case Left(t) => t.indexColumns(cols).compact()
-        case Right(p) =>
-          // partitioned form: declare on every child handle and compact
-          // them all, so each child's manifest publishes the per-file
-          // filters before the statement returns (the synchronous-indexer
-          // contract, same as the single-table form); later plain
-          // compactions inherit the column set from each child's manifest
-          // header
-          p.indexColumns(cols).compactPartitions(p.partitions())
-      }
+      // declare (on every child of a partitioned table) and compact, so
+      // each manifest publishes the per-file filters before the statement
+      // returns (the synchronous-indexer contract); later plain
+      // compactions inherit the column set from the manifest header
+      t.indexColumns(cols).runCompaction("full")
     }
     Seq.empty
   }
@@ -402,12 +354,8 @@ case class GraftCreateMatViewCommand(view: String, base: String,
     require(groupCols.nonEmpty, "CREATE MATERIALIZED VIEW needs GROUP BY columns")
     // both table forms: a partitioned base maintains off its parent
     // timeline / cross-child changelog
-    val resolved = GraftMaintenance.resolve(spark, base, "CREATE MATERIALIZED VIEW")
-    val (basePath, baseKeys, basePart, baseCols) = resolved match {
-      case Left(t) => (t.path, t.keyCols, None, t.read().columns.toSet)
-      case Right(p) => (p.path, p.keyCols, Some(p.partitionCol),
-        p.read().columns.toSet)
-    }
+    val bt = GraftMaintenance.resolve(spark, base, "CREATE MATERIALIZED VIEW")
+    val baseCols = bt.read().columns.toSet
     val viewId = GraftMaintenance.tid(view)
     val taken = spark.sessionState.catalog.tableExists(viewId) ||
       graft.GraftCatalog.lookup(spark, view).isDefined
@@ -420,7 +368,7 @@ case class GraftCreateMatViewCommand(view: String, base: String,
     // grouping preferred) — only a NAME collision in the declaration
     // plane is refused (the catalog-name check above covers the common
     // case; this covers a declaration orphaned of its catalog entry)
-    val existing = MatViews.readSpecs(spark, basePath)
+    val existing = MatViews.readSpecs(spark, bt.path)
     require(!existing.exists(_.name == view),
       s"CREATE MATERIALIZED VIEW: base '$base' already declares '$view'")
     // validate referenced columns against the base schema up front — the
@@ -434,28 +382,26 @@ case class GraftCreateMatViewCommand(view: String, base: String,
       new Path(spark.sessionState.conf.warehousePath, viewId.identifier).toString)
     val spec0 = MatViews.ViewSpec(view, viewPath, groupCols, measures, 0L,
       where = where.getOrElse(""))
-    val spec = basePart match {
-      case Some(pc) => MatViews.buildPartitioned(spark, basePath, baseKeys, pc, spec0)
-      case None => MatViews.build(spark, basePath, baseKeys, spec0)
-    }
-    val partOpt = basePart.map(pc => s", 'mv.basepartition' = '$pc'").getOrElse("")
+    val spec = MatViews.build(spark, bt.path, bt.keyCols, bt.partitionCol, spec0)
+    val partOpt = bt.partitionCol.map(pc => s", 'mv.basepartition' = '$pc'").getOrElse("")
     spark.sql(s"CREATE TABLE ${viewId.quotedString} USING `graft.mor` OPTIONS " +
       s"(path '$viewPath', keys '${groupCols.mkString(",")}', " +
-      s"'mv.base' = '$basePath', 'mv.basekeys' = '${baseKeys.mkString(",")}', " +
+      s"'mv.base' = '${bt.path}', 'mv.basekeys' = '${bt.keyCols.mkString(",")}', " +
       s"'mv.name' = '${spec.name}'$partOpt)")
-    basePart match {
-      case Some(pc) => MatViews.autoRegisterPartitioned(spark, basePath, baseKeys, pc)
-      case None => MatViews.autoRegister(spark, basePath, baseKeys)
-    }
+    MatViews.autoRegister(spark, bt.path, bt.keyCols, bt.partitionCol)
     Seq.empty
   }
 }
 
-/** Shared resolution for REFRESH/DROP: the view's catalog `mv.*` OPTIONS
-  * point back at the base's persisted declaration. */
-private[mor] object MatViewResolve {
-  def apply(spark: SparkSession, view: String, verb: String)
-      : (String, Seq[String], Option[String], graft.lake.MatViews.ViewSpec) = {
+/** `REFRESH MATERIALIZED VIEW v` — one affected-group maintenance cycle
+  * ([[graft.lake.MatViews.refresh]]): brings the view to the base's
+  * current commit seq and advances the persisted watermark, after which
+  * every session serves the view again. No-op when already fresh. The
+  * view's catalog `mv.*` OPTIONS point back at the base's persisted
+  * declaration. */
+case class GraftRefreshMatViewCommand(view: String) extends LeafRunnableCommand {
+  override def run(spark: SparkSession): Seq[Row] = {
+    val verb = "REFRESH MATERIALIZED VIEW"
     val opts = MorDml.morOptions(spark, GraftMaintenance.tid(view)).getOrElse(
       throw new IllegalArgumentException(
         s"$verb: '$view' is not a graft.mor catalog table"))
@@ -468,23 +414,8 @@ private[mor] object MatViewResolve {
       .find(_.name == name).getOrElse(throw new IllegalStateException(
         s"$verb: declaration of '$name' missing from $basePath/manifest/" +
           "views.json (dropped concurrently?)"))
-    (basePath, baseKeys, opts.get("mv.basepartition"), spec)
-  }
-}
-
-/** `REFRESH MATERIALIZED VIEW v` — one affected-group maintenance cycle
-  * ([[graft.lake.MatViews.refresh]]): brings the view to the base's
-  * current commit seq and advances the persisted watermark, after which
-  * every session serves the view again. No-op when already fresh. */
-case class GraftRefreshMatViewCommand(view: String) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val (basePath, baseKeys, basePart, spec) =
-      MatViewResolve(spark, view, "REFRESH MATERIALIZED VIEW")
-    basePart match {
-      case Some(pc) =>
-        graft.lake.MatViews.refreshPartitioned(spark, basePath, baseKeys, pc, spec)
-      case None => graft.lake.MatViews.refresh(spark, basePath, baseKeys, spec)
-    }
+    graft.lake.MatViews.refresh(spark, basePath, baseKeys,
+      opts.get("mv.basepartition"), spec)
     Seq.empty
   }
 }
@@ -508,10 +439,7 @@ case class GraftDropMatViewCommand(view: String, ifExists: Boolean)
         try graft.lake.MatViews.removeSpec(spark, basePath, name)
         catch { case NonFatal(_) => () } // base dir gone: nothing to remove
         graft.plans.ViewRewrite.unregister(basePath, name)
-        val keys = opts.getOrElse("keys", "").split(",").toSeq
-          .map(_.trim).filter(_.nonEmpty)
-        try opts.get("path").foreach(p =>
-          graft.lake.MorTable.resolve(spark, p, keys).drop())
+        try LakeTable.fromOptions(spark, opts, view).drop()
         catch { case NonFatal(_) => () }
         spark.sql(s"DROP TABLE IF EXISTS ${GraftMaintenance.tid(view).quotedString}")
         ()
@@ -539,14 +467,9 @@ case class GraftShowMatViewsCommand(base: String) extends LeafRunnableCommand {
       nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val (basePath, live) =
-      GraftMaintenance.resolve(spark, base, "SHOW MATERIALIZED VIEWS") match {
-        case Left(t) =>
-          (t.path, t.timeline().lastOption.map(_.seq).getOrElse(0L))
-        case Right(p) =>
-          (p.path, p.parentTimeline().lastOption.map(_.seq).getOrElse(0L))
-      }
-    graft.lake.MatViews.readSpecs(spark, basePath).map { s =>
+    val t = GraftMaintenance.resolve(spark, base, "SHOW MATERIALIZED VIEWS")
+    val live = t.commits().lastOption.map(_.seq).getOrElse(0L)
+    graft.lake.MatViews.readSpecs(spark, t.path).map { s =>
       Row(s.name, s.groupCols.mkString(","),
         s.measures.map(m => if (m.arg.isEmpty) m.fn else s"${m.fn}(${m.arg})")
           .mkString(","),

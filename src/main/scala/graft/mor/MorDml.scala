@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftSqlShim
-import graft.lake.{MorTable, PartitionedMorTable}
+import graft.lake.LakeTable
 
 /** SQL-text row-level DML over graft.mor tables — `DELETE FROM t WHERE …`,
   * `UPDATE t SET … WHERE …`, `MERGE INTO t USING s ON … WHEN …` typed by an
@@ -262,10 +262,8 @@ class MorTimeTravelResolution(spark: SparkSession) extends Rule[LogicalPlan] {
     case tt @ RelationTimeTravel(u: UnresolvedRelation, ts, version)
         if morOptions(u.multipartIdentifier).isDefined =>
       val opts = morOptions(u.multipartIdentifier).get
-      val path = opts.getOrElse("path", throw new IllegalArgumentException(
-        s"graft.mor table ${u.multipartIdentifier.mkString(".")} has no path option"))
-      val keys = opts.getOrElse("keys", "").split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-      val partCol = opts.get("partition")
+      val (path, keys, partCol) =
+        LakeTable.options(opts, u.multipartIdentifier.mkString("."))
       val asOf: Long = version match {
         case Some(v) => v.toLongOption.getOrElse(throw new IllegalArgumentException(
           s"VERSION AS OF expects a commit seq for graft.mor tables, got '$v'"))
@@ -275,12 +273,8 @@ class MorTimeTravelResolution(spark: SparkSession) extends Rule[LogicalPlan] {
           // a partitioned table resolves through its PARENT timeline (the
           // table-global token space), never the parent dir read as an
           // unpartitioned (empty) timeline
-          val tl = partCol match {
-            case Some(p) => PartitionedMorTable.resolve(spark, path, keys, p)
-              .parentTimeline()
-            case None => MorTable.resolve(spark, path, keys).timeline()
-          }
-          tl.filter(_.commitMs <= ms).lastOption.map(_.seq)
+          LakeTable.resolve(spark, path, keys, partCol).commits()
+            .filter(_.commitMs <= ms).lastOption.map(_.seq)
             .getOrElse(throw new IllegalArgumentException(
               s"no commit at or before timestamp $ms ms on $path"))
       }
@@ -309,6 +303,12 @@ private[graft] object MorDml {
         .getOrElse(props))
     }
   }
+
+  /** The table behind a `graft.mor` catalog table. */
+  def table(spark: SparkSession,
+            tid: org.apache.spark.sql.catalyst.TableIdentifier): LakeTable =
+    LakeTable.fromOptions(spark, morOptions(spark, tid).getOrElse(
+      throw new IllegalStateException(s"$tid is not a graft.mor table")), tid.toString)
 
   /** Literal equality sets implied by a resolved predicate's CONJUNCTS:
     * column name → the literal string values (Spark-cast rendering, so
@@ -406,18 +406,7 @@ case class GraftAddColumnsCommand(
     cols: Seq[org.apache.spark.sql.types.StructField])
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    val opts = MorDml.morOptions(spark, tid).getOrElse(
-      throw new IllegalStateException(s"$tid is not a graft.mor table"))
-    val path = opts.getOrElse("path", throw new IllegalArgumentException(
-      s"graft.mor table $tid has no path option"))
-    val keys = opts.getOrElse("keys", "").split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-    val widened = opts.get("partition") match {
-      case Some(p) =>
-        val t = PartitionedMorTable.resolve(spark, path, keys, p)
-        t.addColumns(cols).read().schema
-      case None =>
-        MorTable.resolve(spark, path, keys).addColumns(cols).read().schema
-    }
+    val widened = MorDml.table(spark, tid).addColumns(cols).read().schema
     spark.sessionState.catalog.alterTableDataSchema(tid, widened)
     spark.sessionState.catalog.refreshTable(tid)
     Seq.empty
@@ -439,21 +428,15 @@ case class GraftDropPartitionCommand(
     ifExists: Boolean)
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    val opts = MorDml.morOptions(spark, tid).getOrElse(
-      throw new IllegalStateException(s"$tid is not a graft.mor table"))
-    val path = opts.getOrElse("path", throw new IllegalArgumentException(
-      s"graft.mor table $tid has no path option"))
-    val keys = opts.getOrElse("keys", "").split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-    val pcol = opts.getOrElse("partition",
-      throw new UnsupportedOperationException(
-        s"ALTER TABLE DROP PARTITION: graft.mor table $tid is not partitioned"))
+    val t = MorDml.table(spark, tid)
+    val pcol = t.partitionCol.getOrElse(throw new UnsupportedOperationException(
+      s"ALTER TABLE DROP PARTITION: graft.mor table $tid is not partitioned"))
     val values = specs.map { spec =>
       require(spec.size == 1 && spec.keys.head.equalsIgnoreCase(pcol),
         s"partition spec (${spec.keys.mkString(", ")}) must name exactly " +
           s"the table's partition column ($pcol)")
       spec.values.head
     }
-    val t = PartitionedMorTable.resolve(spark, path, keys, pcol)
     if (!ifExists) {
       val present = t.partitions().toSet
       val missing = values.filterNot(present)
@@ -485,20 +468,14 @@ case class GraftShowPartitionsCommand(
     spec: Option[Map[String, String]])
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    val opts = MorDml.morOptions(spark, tid).getOrElse(
-      throw new IllegalStateException(s"$tid is not a graft.mor table"))
-    val path = opts.getOrElse("path", throw new IllegalArgumentException(
-      s"graft.mor table $tid has no path option"))
-    val keys = opts.getOrElse("keys", "").split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-    val pcol = opts.getOrElse("partition",
-      throw new UnsupportedOperationException(
-        s"SHOW PARTITIONS: graft.mor table $tid is not partitioned"))
+    val t = MorDml.table(spark, tid)
+    val pcol = t.partitionCol.getOrElse(throw new UnsupportedOperationException(
+      s"SHOW PARTITIONS: graft.mor table $tid is not partitioned"))
     spec.foreach { sp =>
       require(sp.size == 1 && sp.keys.head.equalsIgnoreCase(pcol),
         s"partition spec (${sp.keys.mkString(", ")}) must name exactly " +
           s"the table's partition column ($pcol)")
     }
-    val t = PartitionedMorTable.resolve(spark, path, keys, pcol)
     val want = spec.map(_.values.head)
     t.partitions().filter(v => want.forall(_ == v)).sorted
       .map(v => Row(s"$pcol=$v"))
@@ -518,24 +495,15 @@ case class GraftDeleteCommand(rel: MorRelation, cond: Column,
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     MorDml.guards(rel)
-    rel.partitionCol match {
-      case Some(p) =>
-        val t = PartitionedMorTable.resolve(spark, rel.path, rel.keys, p)
-        MorDml.dmlPartitionValues(t.partitions(), rel.partitionValues,
-          wherePartValues) match {
-          case None => () // predicate proves no partition can match
-          case Some(vals) => pointKeys match {
-            case Some(ks) => t.deleteWhereKeys(ks, cond, values = vals)
-            case None => t.deleteWhere(cond, values = vals)
-          }
-        }
-      case None =>
-        val t = MorTable.resolve(spark, rel.path, rel.keys)
+    val t = rel.table
+    // None: the predicate proves no partition can match
+    MorDml.dmlPartitionValues(t.partitions(), rel.partitionValues, wherePartValues)
+      .foreach { vals =>
         pointKeys match {
-          case Some(ks) => t.deleteWhereKeys(ks, cond)
-          case None => t.deleteWhere(cond)
+          case Some(ks) => t.deleteWhereKeys(ks, cond, values = vals)
+          case None => t.deleteWhere(cond, values = vals)
         }
-    }
+      }
     Seq.empty
   }
 }
@@ -553,24 +521,15 @@ case class GraftUpdateCommand(rel: MorRelation, set: Map[String, Column],
     val badKeys = set.keySet.intersect(rel.keys.toSet)
     require(badKeys.isEmpty,
       s"UPDATE cannot reassign record key column(s) ${badKeys.mkString(", ")}")
-    rel.partitionCol match {
-      case Some(p) =>
-        val t = PartitionedMorTable.resolve(spark, rel.path, rel.keys, p)
-        MorDml.dmlPartitionValues(t.partitions(), rel.partitionValues,
-          wherePartValues) match {
-          case None => () // predicate proves no partition can match
-          case Some(vals) => pointKeys match {
-            case Some(ks) => t.updateWhereKeys(ks, cond, set, values = vals)
-            case None => t.updateWhere(cond, set, values = vals)
-          }
-        }
-      case None =>
-        val t = MorTable.resolve(spark, rel.path, rel.keys)
+    val t = rel.table
+    // None: the predicate proves no partition can match
+    MorDml.dmlPartitionValues(t.partitions(), rel.partitionValues, wherePartValues)
+      .foreach { vals =>
         pointKeys match {
-          case Some(ks) => t.updateWhereKeys(ks, cond, set)
-          case None => t.updateWhere(cond, set)
+          case Some(ks) => t.updateWhereKeys(ks, cond, set, values = vals)
+          case None => t.updateWhere(cond, set, values = vals)
         }
-    }
+      }
     Seq.empty
   }
 }
@@ -627,22 +586,11 @@ case class GraftMergeCommand(rel: MorRelation, source: LogicalPlan,
     val srcKeys = keyEquiSrc.map(ks =>
       src.select(concat_ws("|", ks.map(_.cast("string")): _*).as("__pk")))
       .filter(_ => nmbs.isEmpty)
-    val (readDf, dataCols) = rel.partitionCol match {
-      case Some(p) =>
-        val t = PartitionedMorTable.resolve(spark, rel.path, rel.keys, p)
-        val df = srcKeys match {
-          case Some(k) => t.readForKeyBatch(k, rel.partitionValues)
-          case None => t.read(rel.partitionValues)
-        }
-        (df, df.columns.toSeq)
-      case None =>
-        val t = MorTable.resolve(spark, rel.path, rel.keys)
-        val df = srcKeys match {
-          case Some(k) => t.readForKeyBatch(k)
-          case None => t.read()
-        }
-        (df, df.columns.toSeq)
+    val readDf = srcKeys match {
+      case Some(k) => rel.table.readForKeyBatch(k, rel.partitionValues)
+      case None => rel.table.read(rel.partitionValues)
     }
+    val dataCols = readDf.columns.toSeq
     val tgt = readDf.withColumn("__matched", lit(true)).alias("t")
     // NOT MATCHED BY SOURCE must examine every target row (inherent to
     // its semantics) → full outer; without those clauses the join stays
@@ -696,12 +644,7 @@ case class GraftMergeCommand(rel: MorRelation, source: LogicalPlan,
         s"(keys: ${keyCols.mkString(", ")})")
     require(chk.isNullAt(0) || chk.getLong(0) <= 1L,
       "MERGE cardinality violation: multiple source rows resolve to one target key")
-    rel.partitionCol match {
-      case Some(p) =>
-        PartitionedMorTable.resolve(spark, rel.path, rel.keys, p).applyChangelog(env)
-      case None =>
-        MorTable.resolve(spark, rel.path, rel.keys).applyChangelog(env)
-    }
+    rel.table.applyChangelog(env)
     Seq.empty
   }
 }

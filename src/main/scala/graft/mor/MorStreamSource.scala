@@ -71,6 +71,16 @@ final class MorStreamSource(
   override def stop(): Unit = ()
 }
 
+object MorStreamSource {
+  /** The stream source for the table form `partitionCol` names: the two
+    * forms stream different contracts (net incremental images vs. the
+    * partitioned CDC changelog). */
+  def apply(spark: SparkSession, path: String, keys: Seq[String],
+            partitionCol: Option[String]): Source =
+    partitionCol.fold[Source](new MorStreamSource(spark, path, keys))(
+      new PartitionedMorStreamSource(spark, path, keys, _))
+}
+
 /** Streaming CDC READ of the PARTITIONED lake form (the 100 TB layout):
   * offsets are parent commit tokens, each micro-batch is
   * `readChangelog(start, end]` — net row-level I/U/D ops WITH

@@ -37,7 +37,7 @@ object StreamingQueries {
     val env = graft.sources.ChangelogSource.insertsOnly(rows, Seq("user_id"))
     val tablePath = graft.TempDirs.create("stream-part-lake")
     val table = new graft.lake.PartitionedMorTable(spark, tablePath,
-      keyCols = Seq("user_id"), partitionCol = "event_type",
+      keyCols = Seq("user_id"), partCol = "event_type",
       compactionDeltaCommits = 1000, autoCompact = false)
     val q = StreamingOps.streamChangelogToPartitionedMor(env, table,
       graft.TempDirs.create("stream-part-ckpt"), tiebreak = Seq("event_id"))
@@ -255,13 +255,6 @@ object StreamingQueries {
       // testdata file, in order
       dst.toFile.setLastModified(System.currentTimeMillis + i * 2000L): Unit
     }
-    if (sys.env.contains("GRAFT_STREAM_DEBUG")) {
-      new java.io.File(watchDir).listFiles().foreach(f =>
-        Console.err.println(s"[r49] file=${f.getName} len=${f.length} mtime=${f.lastModified}"))
-      Console.err.println("[r49] watchdir rows: " +
-        spark.read.schema(batch.schema).parquet(watchDir)
-          .groupBy("user_id" ).count().filter(col("user_id") < 0).collect().mkString(","))
-    }
     def eventStream() = graft.Tables.tsToNs(
         spark.readStream.schema(batch.schema)
           .option("maxFilesPerTrigger", "1").parquet(watchDir))
@@ -290,14 +283,6 @@ object StreamingQueries {
         unix_millis(col("click_ts")).as("click_ms"))
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    // measured probe (r15): RocksDB state store on the outer-join entries —
-    // flag-gated, DEFAULT OFF; at this state size the HDFS-backed provider
-    // over tmpfs checkpoints is the faster floor (see OPTIMIZATION_r15.md)
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    if (sys.env.get("GRAFT_STREAM_ROCKSDB").contains("1"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val q = joined.writeStream
         .format("memory").queryName(name)
@@ -306,19 +291,7 @@ object StreamingQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-        q.recentProgress.foreach(p => Console.err.println(
-          s"[r49] batch=${p.batchId} in=${p.numInputRows} wm=${p.eventTime.get("watermark")} " +
-            s"state=${p.stateOperators.toSeq.map(s => s"${s.numRowsTotal}/${s.numRowsRemoved}")}"))
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     // sentinel removal, null-safe (FULL OUTER legitimately nulls either
     // id): a sentinel never pairs with a real row (user −1), so negative
     // ids appear only on sentinel-sourced rows

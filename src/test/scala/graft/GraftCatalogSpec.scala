@@ -44,7 +44,7 @@ class GraftCatalogSpec extends AnyFunSuite {
 
   test("partitioned table registers commit-fresh under a catalog name too") {
     val t = new graft.lake.PartitionedMorTable(spark, TestSpark.tmpDir("cat-part"),
-      keyCols = Seq("uuid"), partitionCol = "kind")
+      keyCols = Seq("uuid"), partCol = "kind")
     t.upsert(Seq(("id1", "a", 1)).toDF("uuid", "kind", "v"), Seq(col("uuid")))
     GraftCatalog.register(spark, "t_part_cat", t)
     assert(spark.sql("SELECT count(*) FROM t_part_cat").head().getLong(0) == 1)

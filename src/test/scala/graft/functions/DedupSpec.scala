@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 
@@ -323,6 +324,38 @@ class DedupSpec extends AnyFunSuite {
       .select("doc_id", "p_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(kernel == fold)
     assert(kernel.contains((1L, 0L)), "identical docs must pass the slot threshold")
+  }
+
+  test("sig_matches / sig_overlap: a null element never matches (zip_with reference)") {
+    graft.GraftFunctions.register(spark)
+    val nul = lit(null).cast("bigint")
+    def sig(vs: Column*) = array(vs: _*)
+    // arrays picked per row from `id`, so the projection runs compiled
+    // rather than constant-folded
+    val pairs = spark.range(3).select(
+      when(col("id") === 0, sig(lit(1L), nul, lit(3L), nul))
+        .when(col("id") === 1, sig(nul, nul, lit(0L), lit(5L)))
+        .otherwise(sig(lit(7L), lit(8L), lit(9L), lit(10L))).as("a"),
+      when(col("id") === 0, sig(lit(1L), nul, lit(0L), lit(4L)))
+        .when(col("id") === 1, sig(lit(0L), nul, lit(0L), lit(5L)))
+        .otherwise(sig(lit(7L), nul, lit(9L), lit(10L))).as("b"))
+    val eq = zip_with(col("a"), col("b"), (x, y) => x === y)
+    val got = pairs.select(
+      call_function("sig_matches", col("a"), col("b")),
+      call_function("sig_overlap", col("a"), col("b")),
+      aggregate(eq, lit(0L), (s, e) => s + when(e, 1L).otherwise(0L)),
+      size(filter(eq, e => e)) / size(col("a")))
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2), r.getDouble(3)))
+      .toSeq
+    assert(got.map(g => (g._1, g._2)) == got.map(g => (g._3, g._4)))
+    assert(got.map(_._1) == Seq(1L, 2L, 3L))
+    // the interpreted path agrees
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    def lits(xs: java.lang.Long*) = Literal.create(xs.toSeq, ArrayType(LongType))
+    val (a, b) = (lits(1L, null, 3L, null), lits(1L, null, 0L, 4L))
+    assert(graft.functions.expr.SigMatches(a, b).eval() == 1L)
+    assert(graft.functions.expr.SigOverlap(a, b).eval() == 0.25)
   }
 
   test("token_hashes: multiset order-preserving, lowercase, shingle-consistent") {

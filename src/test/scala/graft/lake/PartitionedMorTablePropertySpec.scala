@@ -27,7 +27,7 @@ class PartitionedMorTablePropertySpec extends AnyFunSuite {
           Op(rnd.nextInt(4) == 0, keys(rnd.nextInt(keys.size)), rnd.nextInt(1000))))
 
       val t = new PartitionedMorTable(spark, TestSpark.tmpDir("pmor-prop"),
-        keyCols = Seq("k"), partitionCol = "region",
+        keyCols = Seq("k"), partCol = "region",
         compactionDeltaCommits = deltaCommits)
       var model = Map.empty[String, Int]
       script.zipWithIndex.foreach { case (batch, bi) =>
@@ -69,7 +69,7 @@ class PartitionedMorTablePropertySpec extends AnyFunSuite {
     for (trial <- 0 until 4) {
       val rnd = new scala.util.Random(5000 + trial)
       val t = new PartitionedMorTable(spark, TestSpark.tmpDir("pmor-ifnew-prop"),
-        keyCols = Seq("k"), partitionCol = "region",
+        keyCols = Seq("k"), partCol = "region",
         compactionDeltaCommits = 1000, autoCompact = false)
       var model = Map.empty[String, Int]
       var bi = 0L

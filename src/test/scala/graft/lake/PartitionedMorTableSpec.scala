@@ -66,6 +66,30 @@ class PartitionedMorTableSpec extends AnyFunSuite {
     assert(t.colNdv() eq t.colNdv())
   }
 
+  test("compactPartitions: a failing child stops its siblings before the call returns") {
+    val path = tmp()
+    val t = new PartitionedMorTable(spark, path, Seq("k"), "p",
+      compactionDeltaCommits = 1000, autoCompact = false)
+    val parts = (0 until 12).map(i => f"v$i%02d")
+    t.upsert(parts.flatMap(v => (0 until 3).map(j => (s"$v-$j", v, j)))
+      .toDF("k", "p", "n"), Seq(col("n")), batchId = 1L)
+    // every child but two fails its base adoption: a plain file squats on
+    // its base dir. One adoption thread runs the children in order, so
+    // whatever comes after the first failure is still queued then.
+    val good = Set(parts(3), parts(8))
+    parts.filterNot(good).foreach(v =>
+      assert(new java.io.File(s"$path/p=$v/base").createNewFile()))
+    spark.conf.set("spark.graft.maintenance.parallelism", "1")
+    try {
+      intercept[Exception](t.compactPartitions(parts))
+      def instants() = parts.map(v => t.child(v).timeline().size)
+      val atReturn = instants()
+      Thread.sleep(3000)
+      assert(instants() == atReturn,
+        "a child committed after compactPartitions had already failed")
+    } finally spark.conf.unset("spark.graft.maintenance.parallelism")
+  }
+
   test("per-partition compaction: only touched partitions compact") {
     val t = new PartitionedMorTable(spark, tmp(), Seq("k"), "p",
       compactionDeltaCommits = 2, autoCompact = false)

@@ -275,7 +275,7 @@ class ProcedureCatalogSpec extends AnyFunSuite {
     t.upsert(Seq(("id1", "a", 1L), ("id2", "a", 2L), ("id3", "b", 3L))
       .toDF("uuid", "g", "v"), Seq(col("v")))
     // declare programmatically on the same persistence plane the DDL uses
-    val spec = MatViews.build(spark, basePath, Seq("uuid"),
+    val spec = MatViews.build(spark, basePath, Seq("uuid"), None,
       MatViews.ViewSpec("mv1", viewPath, Seq("g"),
         Seq(MatViews.MeasureSpec("count", ""), MatViews.MeasureSpec("sum", "v")), 0L))
     assert(spec.maintainedSeq == 1L)

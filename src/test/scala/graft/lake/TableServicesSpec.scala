@@ -80,7 +80,7 @@ class TableServicesSpec extends AnyFunSuite {
 
   test("partitioned service: due children compact in one tick") {
     val p = new PartitionedMorTable(spark, TestSpark.tmpDir("svc-part"),
-      keyCols = Seq("k"), partitionCol = "p", compactionDeltaCommits = 2,
+      keyCols = Seq("k"), partCol = "p", compactionDeltaCommits = 2,
       autoCompact = false)
     def batch(tag: Int) = (0 until 20)
       .map(i => (s"k$i", i + tag, if (i % 2 == 0) "even" else "odd"))
@@ -179,7 +179,7 @@ class TableServicesSpec extends AnyFunSuite {
       compactionDeltaCommits = 100, autoCompact = false)
     t.upsert(Seq(("k1", "a", 1L), ("k2", "b", 2L)).toDF("k", "g", "v"),
       Seq(col("v")), batchId = 1L)
-    MatViews.build(spark, basePath, Seq("k"),
+    MatViews.build(spark, basePath, Seq("k"), None,
       MatViews.ViewSpec("svc_mv", viewPath, Seq("g"),
         Seq(MatViews.MeasureSpec("count", ""), MatViews.MeasureSpec("sum", "v")), 0L))
     val svc = TableServices.matViews(spark, t, periodMs = 60000L)

@@ -48,7 +48,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     log.filter($"seq" <= 2).write.parquet(s"$watch/seg1")
     log.filter($"seq" > 2).write.parquet(s"$watch/seg2")
     val table = new graft.lake.PartitionedMorTable(spark, TestSpark.tmpDir("pcl-mor"),
-      keyCols = Seq("id"), partitionCol = "region", compactionDeltaCommits = 100,
+      keyCols = Seq("id"), partCol = "region", compactionDeltaCommits = 100,
       autoCompact = false)
     val q = StreamingOps.streamChangelogToPartitionedMor(
       StreamingOps.changelogStream(spark, s"$watch/*/", log),
