@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.GraftSqlShim
 
 /** Benchmark main (driver contract): run every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
@@ -62,9 +63,10 @@ object Bench {
     val selected = (1 to repeat).flatMap { i =>
       selected0.map { case (n, fn) => (if (i == 1) n else s"$n#$i", fn) }
     }
-    // SPARK_GRAFT_JOBSTATS=1 → per-query Spark job count + summed task run
-    // time (deterministic across runs, unlike wall clock — the A/B signal
-    // for perf bisection on a noisy host)
+    // SPARK_GRAFT_JOBSTATS=1 → per-query Spark job count, summed task run
+    // time and code-generator compilations (deterministic across runs,
+    // unlike wall clock — the A/B signal for perf bisection on a noisy
+    // host; job counts alone hide the driver's Janino compile time)
     val jobStats = sys.env.get("SPARK_GRAFT_JOBSTATS").contains("1")
     val jobCount = new java.util.concurrent.atomic.AtomicLong
     val taskTimeMs = new java.util.concurrent.atomic.AtomicLong
@@ -87,6 +89,7 @@ object Bench {
     val results = selected.map { case (name, fn) =>
       val gc0 = gcMillis()
       val (j0, tt0) = (jobCount.get(), taskTimeMs.get())
+      val c0 = GraftSqlShim.codegenCompilations()
       val t0 = System.nanoTime()
       val outcome =
         try { fn(spark, sfDir).count(); None }
@@ -95,7 +98,9 @@ object Bench {
       if (jobStats) {
         Thread.sleep(300) // let straggler listener events drain
         System.err.println(s"JOBSTATS $name jobs=${jobCount.get() - j0} " +
-          s"taskTimeMs=${taskTimeMs.get() - tt0} wallSec=$sec")
+          s"taskTimeMs=${taskTimeMs.get() - tt0} " +
+          s"compiles=${GraftSqlShim.codegenCompilations() - c0} " +
+          s"wallSec=$sec")
       }
       (name, sec, outcome, gcMillis() - gc0, freeMb())
     }

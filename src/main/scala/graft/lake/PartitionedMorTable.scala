@@ -3,6 +3,7 @@ package graft.lake
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Partitioned merge-on-read lake table — the `PARTITIONED BY` form of
   * [[MorTable]] (the reference's Hudi tables are unpartitioned, SURVEY §4
@@ -90,16 +91,15 @@ final class PartitionedMorTable(
     * full planning/scheduling round-trip while 31 cores idle. Spark's
     * scheduler runs concurrent jobs FIFO and back-fills the tail. Order of
     * RESULTS is preserved (futures joined in input order); failures
-    * propagate like the sequential loop's. Parallelism is bounded by
+    * propagate like the sequential loop's, after every sibling has been
+    * cancelled and has stopped. Parallelism is bounded by `par`, by default
     * `spark.graft.maintenance.parallelism` (default 8 — enough to overlap
     * commit latency, far below task-slot pressure; raise on object stores
     * where per-commit round-trips dominate at high partition counts). */
-  private def perChildInParallel[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+  private def perChildInParallel[A, B](xs: Seq[A], par: Int = maintenanceParallelism)
+                                      (f: A => B): Seq[B] = {
     if (xs.lengthCompare(2) < 0) return xs.map(f)
-    val par = math.min(xs.size,
-      spark.conf.getOption("spark.graft.maintenance.parallelism")
-        .flatMap(_.toIntOption).filter(_ > 0).getOrElse(8))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(xs.size, par))
     try {
       val futs = xs.map(x => pool.submit(
         new java.util.concurrent.Callable[B] { override def call(): B = f(x) }))
@@ -118,6 +118,10 @@ final class PartitionedMorTable(
       }
     } finally pool.shutdown()
   }
+
+  private def maintenanceParallelism: Int =
+    spark.conf.getOption("spark.graft.maintenance.parallelism")
+      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(8)
 
   /** Declared secondary bloom-index columns, forwarded to every child
     * handle so each child's NEXT compaction publishes the per-file
@@ -729,24 +733,23 @@ final class PartitionedMorTable(
   private val metaCols =
     Seq("_record_key", "_deleted", "_commit_seqno", "_commit_time")
 
-  /** Run one FS-metadata task per selected partition concurrently (child
-    * timelines are independent; a sequential loop over 1000 partitions
-    * would make the driver the bottleneck before any task runs). */
-  private[graft] def parChildren[A](sel: Seq[String])(f: MorTable => A): Seq[A] = {
-    if (sel.sizeIs <= 1) return sel.map(v => f(child(v)))
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(32, sel.size))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try Await.result(Future.sequence(sel.map(v => Future(f(child(v))))),
-      scala.concurrent.duration.Duration(600, "s"))
-    finally pool.shutdown()
-  }
+  /** Run one task per selected partition concurrently (child timelines
+    * are independent; a sequential loop over 1000 partitions would make
+    * the driver the bottleneck before any task runs), up to 32 at once.
+    * Same failure path as [[perChildInParallel]]: a failing child cancels
+    * and awaits its siblings, so a mutating caller (`addColumns`,
+    * `buildRecordIndex`, `clean`) never has a child still writing after
+    * the call has failed. */
+  private[graft] def parChildren[A](sel: Seq[String])(f: MorTable => A): Seq[A] =
+    perChildInParallel(sel, par = 32)(v => f(child(v)))
 
-  /** One scan over many commit dirs; mergeSchema covers narrow commits
-    * (staged deletes write key+meta-only tombstone rows). Cached per
-    * exact dir SET (commit dirs are immutable; the set changes only when
-    * a commit lands, which keys a different entry) — the mergeSchema
-    * footer pass is a job per call otherwise. Purge-by-containment in
+  /** One scan over many commit dirs; the merged schema covers narrow
+    * commits (staged deletes write key+meta-only tombstone rows). Cached
+    * per exact dir SET (commit dirs are immutable; the set changes only
+    * when a commit lands, which keys a different entry). The schema is
+    * composed from the dirs' registered relations when it can be
+    * ([[registeredMergedSchema]]); otherwise mergeSchema infers it, a
+    * footer-reading Spark job. Purge-by-containment in
     * [[MorTable.purgeCaches]] covers these multi-dir keys. */
   private def scanDirs(dirs: Seq[String]): DataFrame = {
     val key = (System.identityHashCode(spark),
@@ -754,12 +757,47 @@ final class PartitionedMorTable(
     val hit = MorTable.scanCacheG.get(key)
     if (hit != null) hit
     else {
-      val df = spark.read.option("mergeSchema", "true")
-        .parquet(MorTable.globSafe(dirs): _*)
+      val paths = MorTable.globSafe(dirs)
+      val df = registeredMergedSchema(dirs) match {
+        case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+        case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
+      }
       if (MorTable.scanCacheG.size > 2048) MorTable.scanCacheG.clear()
       MorTable.scanCacheG.put(key, df)
       df
     }
+  }
+
+  /** The schema mergeSchema would infer for a scan over `dirs`, composed
+    * from the relations `adoptDelta`/`adoptBase` (or an earlier single-dir
+    * read) registered per commit dir in [[MorTable.scanCacheG]]: fields in
+    * first-seen order over the dirs in scan order, which is the order the
+    * footer merge produces (every file of one commit dir carries that
+    * dir's schema). A bloom-pruned point read lists base FILES: a file
+    * takes its commit dir's schema (a narrower carried file reads its
+    * missing columns as null, the allowMissingColumns contract). None when
+    * a path is unregistered, or when a column's type differs between dirs
+    * or its name differs only in case — the caller infers then. */
+  private def registeredMergedSchema(dirs: Seq[String]): Option[StructType] = {
+    val sid = System.identityHashCode(spark)
+    def registeredAt(p: String) = Option(MorTable.scanCacheG.get((sid, p)))
+    val registered = dirs.map { d =>
+      val p = MorTable.canonPath(d)
+      registeredAt(p).orElse(registeredAt(p.substring(0, p.lastIndexOf('/'))))
+    }
+    if (registered.exists(_.isEmpty)) return None
+    val merged = scala.collection.mutable.LinkedHashMap.empty[String, StructField]
+    val consistent = registered.flatMap(_.get.schema.fields).forall { f =>
+      merged.get(f.name) match {
+        case Some(seen) =>
+          merged(f.name) = seen.copy(nullable = seen.nullable || f.nullable)
+          seen.dataType == f.dataType
+        case None =>
+          merged(f.name) = f
+          !merged.keys.exists(n => n != f.name && n.equalsIgnoreCase(f.name))
+      }
+    }
+    if (consistent) Some(StructType(merged.values.toSeq)) else None
   }
 
   /** Table-global last-write-wins: `_commit_seqno` is the parent token. */

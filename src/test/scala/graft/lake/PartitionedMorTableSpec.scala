@@ -90,6 +90,45 @@ class PartitionedMorTableSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.maintenance.parallelism")
   }
 
+  // One child fails fast while its siblings are still committing: every
+  // child's on-disk state must be final when the call returns.
+  private def failingChildLeavesNoLateCommit(failing: String, parts: Seq[String],
+                                             state: String => Int)(call: => Any): Unit = {
+    intercept[Exception](call)
+    val atReturn = parts.map(state)
+    Thread.sleep(3000)
+    assert(parts.map(state) == atReturn,
+      s"a sibling of failing child $failing committed after the call had failed")
+  }
+
+  test("addColumns: a failing child stops its siblings before the call returns") {
+    val path = tmp()
+    val t = new PartitionedMorTable(spark, path, Seq("k"), "p",
+      compactionDeltaCommits = 1000, autoCompact = false)
+    val parts = (0 until 12).map(i => f"v$i%02d")
+    t.upsert(parts.flatMap(v => (0 until 3).map(j => (s"$v-$j", v, j)))
+      .toDF("k", "p", "n"), Seq(col("n")), batchId = 1L)
+    val x = org.apache.spark.sql.types.StructField("x", org.apache.spark.sql.types.IntegerType)
+    // the first child already has the column, so it refuses at once
+    t.child(parts.head).addColumns(Seq(x))
+    failingChildLeavesNoLateCommit(parts.head, parts,
+      v => t.child(v).timeline().size)(t.addColumns(Seq(x)))
+  }
+
+  test("buildRecordIndex: a failing child stops its siblings before the call returns") {
+    val path = tmp()
+    val t = new PartitionedMorTable(spark, path, Seq("k"), "p",
+      compactionDeltaCommits = 1000, autoCompact = false)
+    val parts = (0 until 12).map(i => f"v$i%02d")
+    t.upsert(parts.flatMap(v => (0 until 3).map(j => (s"$v-$j", v, j)))
+      .toDF("k", "p", "n"), Seq(col("n")), batchId = 1L)
+    // the first child has no compacted base, so it refuses at once
+    t.compactPartitions(parts.tail)
+    def indexes(v: String): Int =
+      Option(new java.io.File(s"$path/p=$v/manifest/rli").list()).map(_.length).getOrElse(0)
+    failingChildLeavesNoLateCommit(parts.head, parts, indexes)(t.buildRecordIndex())
+  }
+
   test("per-partition compaction: only touched partitions compact") {
     val t = new PartitionedMorTable(spark, tmp(), Seq("k"), "p",
       compactionDeltaCommits = 2, autoCompact = false)

@@ -1401,6 +1401,44 @@ class MorDataSourceSpec extends AnyFunSuite {
     } finally spark.sql("DROP TABLE IF EXISTS mor_alterp_t")
   }
 
+  test("partitioned SELECT * / DESCRIBE column order: keys, partition, then data " +
+      "columns in write order, through MERGE, deletes, ADD COLUMNS and OPTIMIZE") {
+    val path = TestSpark.tmpDir("dsv1-colorder-part")
+    spark.sql("DROP TABLE IF EXISTS mor_colorder_t")
+    try {
+      Seq(("x1", 1L, "a", 10), ("x2", 2L, "b", 20), ("x3", 3L, "a", 30))
+        .toDF("note", "id", "kind", "qty")
+        .write.format("graft.mor").option("keys", "id")
+        .option("partition", "kind").mode("append").save(path)
+      spark.sql(s"CREATE TABLE mor_colorder_t USING `graft.mor` " +
+        s"OPTIONS (path '$path', keys 'id', partition 'kind')")
+      def columns(): (Seq[String], Seq[String]) = (
+        spark.sql("SELECT * FROM mor_colorder_t").columns.toSeq,
+        spark.sql("DESCRIBE mor_colorder_t").collect().map(_.getString(0))
+          .takeWhile(c => c.nonEmpty && !c.startsWith("#")).toSeq)
+      val base = Seq("id", "kind", "note", "qty")
+      assert(columns() == (base, base))
+      Seq(("x4", 4L, "b", 40), ("y2", 2L, "b", 21)).toDF("note", "id", "kind", "qty")
+        .createOrReplaceTempView("colorder_src")
+      spark.sql("""MERGE INTO mor_colorder_t AS t USING colorder_src AS s ON t.id = s.id
+                  |WHEN MATCHED THEN UPDATE SET note = s.note, qty = s.qty
+                  |WHEN NOT MATCHED THEN INSERT (id, kind, note, qty)
+                  |  VALUES (s.id, s.kind, s.note, s.qty)""".stripMargin).collect()
+      spark.sql("DELETE FROM mor_colorder_t WHERE id = 3").collect()
+      assert(columns() == (base, base))
+      spark.sql("ALTER TABLE mor_colorder_t ADD COLUMNS (score DOUBLE)")
+      spark.sql("INSERT INTO mor_colorder_t VALUES (5, 'a', 'x5', 50, 0.5)")
+      val wide = base :+ "score"
+      assert(columns() == (wide, wide))
+      spark.sql("OPTIMIZE mor_colorder_t")
+      assert(columns() == (wide, wide))
+      val rows = spark.sql("SELECT * FROM mor_colorder_t ORDER BY id").collect()
+        .map(_.toSeq.map(v => Option(v).map(_.toString).orNull)).toSeq
+      assert(rows == Seq(Seq("1", "a", "x1", "10", null), Seq("2", "b", "y2", "21", null),
+        Seq("4", "b", "x4", "40", null), Seq("5", "a", "x5", "50", "0.5")), rows)
+    } finally spark.sql("DROP TABLE IF EXISTS mor_colorder_t")
+  }
+
   test("ANSI ALTER TABLE DROP PARTITION routes onto dropPartitions") {
     val path = TestSpark.tmpDir("dsv1-droppart")
     spark.sql("DROP TABLE IF EXISTS mor_dp_t")
