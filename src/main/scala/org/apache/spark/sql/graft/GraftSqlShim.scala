@@ -11,8 +11,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * already-analyzed LogicalPlan as a DataFrame (a MERGE's USING source is
   * an arbitrary resolved query — re-parsing its SQL text would be both
   * lossy and unsound), wrapping a catalyst Expression back into a
-  * user-level Column, setting engine defaults on the live SparkConf, and
-  * reading the code generator's compile counter. Lives in a subpackage of
+  * user-level Column, setting engine defaults on the live SparkConf,
+  * reading the code generator's compile counter, and draining the listener
+  * bus. Lives in a subpackage of
   * org.apache.spark.sql solely for access; nothing in Spark is modified or
   * overridden. */
 object GraftSqlShim {
@@ -47,4 +48,9 @@ object GraftSqlShim {
     * cache misses; a cache hit compiles nothing). Diff two reads to count
     * the compilations of the work in between. */
   def codegenCompilations(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Block until the listener bus has delivered every event posted so far,
+    * so a listener read afterwards has seen all of the work before the
+    * call (job ends and task ends arrive asynchronously). */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
