@@ -68,37 +68,32 @@ object Bench {
     // unlike wall clock — the A/B signal for perf bisection on a noisy
     // host; job counts alone hide the driver's Janino compile time)
     val jobStats = sys.env.get("SPARK_GRAFT_JOBSTATS").contains("1")
-    val jobCount = new java.util.concurrent.atomic.AtomicLong
-    val taskTimeMs = new java.util.concurrent.atomic.AtomicLong
-    if (jobStats) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
+    val stats =
+      if (!jobStats) None
+      else Some(new JobStats {
         override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobCount.incrementAndGet()
+          super.onJobStart(j)
           if (sys.env.get("SPARK_GRAFT_JOBTRACE").contains("1"))
             System.err.println(s"JOBTRACE ${j.jobId} stages=${j.stageInfos.size} " +
               Option(j.properties.getProperty("spark.job.description"))
                 .orElse(Option(j.properties.getProperty("callSite.short")))
                 .getOrElse("?").replace('\n', ' ').take(140))
-          ()
-        }
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          if (t.taskMetrics != null) taskTimeMs.addAndGet(t.taskMetrics.executorRunTime)
-          ()
         }
       })
+    stats.foreach(spark.sparkContext.addSparkListener)
     val results = selected.map { case (name, fn) =>
       val gc0 = gcMillis()
-      val (j0, tt0) = (jobCount.get(), taskTimeMs.get())
+      val (j0, tt0) = stats.fold((0L, 0L))(s => (s.jobs, s.taskTimeMs))
       val c0 = GraftSqlShim.codegenCompilations()
       val t0 = System.nanoTime()
       val outcome =
         try { fn(spark, sfDir).count(); None }
         catch { case e: Throwable => Some(Option(e.getMessage).getOrElse(e.toString).take(200)) }
       val sec = (System.nanoTime() - t0) / 1e9
-      if (jobStats) {
-        Thread.sleep(300) // let straggler listener events drain
-        System.err.println(s"JOBSTATS $name jobs=${jobCount.get() - j0} " +
-          s"taskTimeMs=${taskTimeMs.get() - tt0} " +
+      stats.foreach { st =>
+        JobStats.drain(spark.sparkContext)
+        System.err.println(s"JOBSTATS $name jobs=${st.jobs - j0} " +
+          s"taskTimeMs=${st.taskTimeMs - tt0} " +
           s"compiles=${GraftSqlShim.codegenCompilations() - c0} " +
           s"wallSec=$sec")
       }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import scala.collection.mutable
 
 /** Scratch diagnostic: replay one gate entry with a job listener and print
@@ -15,17 +15,15 @@ object JobAudit {
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", TempDirs.sparkLocalDir())
       .config("spark.cleaner.referenceTracking", "false")
-      // diagnostic A/B only (never the bench path): SPARK_GRAFT_AQE=0
-      // replays the entry with AQE globally off
-      .config("spark.sql.adaptive.enabled",
-        !sys.env.get("SPARK_GRAFT_AQE").contains("0"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sites = mutable.Map.empty[String, Int].withDefaultValue(0)
     val stageTime = mutable.Map.empty[String, Long].withDefaultValue(0L)
     val stageCnt = mutable.Map.empty[String, Int].withDefaultValue(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
+    // attached after the warm-up runs below: only the reported run counts
+    val stats = new JobStats {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
+        super.onJobStart(j)
         val site = j.stageInfos.map(_.name).map(n =>
           if (n.contains("CompletableFuture")) "fut" else n)
           .distinct.sorted.mkString(" | ")
@@ -42,8 +40,7 @@ object JobAudit {
           .groupBy(identity).map { case (k, v) => s"$k×${v.size}" }.mkString(",")
         sites.synchronized { sites(s"DETAIL[e=$exec r=$root] [$stages] $det") += 1 }
       }
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         val frame = s.stageInfo.details.linesIterator
           .find(l => l.contains("graft.") && !l.contains("JobAudit"))
           .map(_.trim.stripPrefix("at "))
@@ -58,17 +55,7 @@ object JobAudit {
           stageCnt(frame) += 1
         }
       }
-    })
-    val jobSpans = mutable.ArrayBuffer.empty[(Long, Long)]
-    val jobStartMs = mutable.Map.empty[Int, Long]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobStartMs.synchronized { jobStartMs(j.jobId) = j.time }
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        jobStartMs.synchronized {
-          jobStartMs.remove(e.jobId).foreach(s => jobSpans += ((s, e.time)))
-        }
-    })
+    }
     // per-SQL-execution wall + top plan node: where the driver's planning/
     // execution round-trips go inside one entry (descriptions are empty on
     // AQE stage futures, so job-level traces can't attribute them)
@@ -102,23 +89,15 @@ object JobAudit {
     while (i < repeats) {
       fn(spark, dir).count(); System.err.println(s"--- warmup run $i done ---"); i += 1
     }
-    if (repeats > 1) { // report the warm run only
-      Thread.sleep(300)
-      jobSpans.clear(); sites.clear(); stageTime.clear(); stageCnt.clear()
-    }
+    JobStats.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(stats)
     val t0 = System.currentTimeMillis()
     val n = fn(spark, dir).count()
     val wallMs = System.currentTimeMillis() - t0
-    // merge job spans → time covered by at least one running job; the rest
-    // of the wall is pure driver work (planning, FS metadata, scheduling)
-    val merged = jobSpans.sortBy(_._1).foldLeft(List.empty[(Long, Long)]) {
-      case ((s0, e0) :: rest, (s, e)) if s <= e0 => (s0, math.max(e0, e)) :: rest
-      case (acc, span) => span :: acc
-    }
-    val covered = merged.map(x => x._2 - x._1).sum
+    JobStats.drain(spark.sparkContext)
+    val covered = JobStats.coveredMs(stats.spans)
     println(s"WALLMS=$wallMs JOBCOVEREDMS=$covered DRIVERONLYMS=${wallMs - covered}")
-    Thread.sleep(500)
-    println(s"ROWS=$n TOTALJOBS=${sites.values.sum}")
+    println(s"ROWS=$n TOTALJOBS=${stats.jobs}")
     sites.toSeq.sortBy(-_._2).foreach { case (s, c) => println(f"$c%4d  $s") }
     println("== stage executorRunTime ms (count) ==")
     stageTime.toSeq.sortBy(-_._2).take(20).foreach { case (s, t) =>
