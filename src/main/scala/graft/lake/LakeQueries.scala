@@ -1097,9 +1097,8 @@ object LakeQueries {
       .start()
     try q.processAllAvailable() finally q.stop()
     val all = spark.read.parquet(outDir)
-    val w = Window.partitionBy("user_id").orderBy(col("_commit_seqno").desc)
     graft.TempDirs.materializeAndDelete(
-      all.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+      CommitRows.latestPerKey(all, Seq(col("user_id")), Seq(col("_commit_seqno").desc))
         .filter(!col("_deleted"))
         .select("user_id", "event_id", "event_type", "value", "ts_ms"), path)
   }

@@ -287,7 +287,7 @@ object MatViews {
     // — folded into the SAME delta commit as the refreshed groups (they
     // are key-disjoint by construction), one commit round instead of two
     val dead = touched.join(refreshed.select(g.map(col): _*), g, "left_anti")
-    vt.upsertAndDelete(refreshed, dead, batchId = 2L * to)
+    vt.upsertAndDelete(refreshed, dead, batchId = 2L * to + 1)
     val done = spec.copy(maintainedSeq = to)
     upsertSpec(spark, basePath, done)
     done

@@ -3,7 +3,6 @@ package graft.lake
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import java.nio.charset.StandardCharsets
 
 /** Merge-on-read keyed-upsert lake table — the engine-native analog of the
@@ -86,47 +85,19 @@ final class MorTable(
   private val hPath = new Path(path)
   private def fs: FileSystem = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** WRITE EXPECTATIONS (the Hudi pre-commit-validator / Delta CHECK
-    * constraint analog): named predicates every NON-tombstone row of a
-    * commit must satisfy. Three modes:
-    *
-    *  - FAIL (default): a violating batch is REFUSED before its instant
-    *    publishes — the violation count piggybacks on the commit write
-    *    itself via an Observation (zero extra jobs; the staged dir is
-    *    removed, the timeline never sees it).
-    *  - DROP (`dropViolations = true`): violating rows are silently
-    *    filtered out of the batch (quarantine-by-omission — the C4-style
-    *    "drop rows failing the gate" ingest), a map-side filter with no
-    *    extra job either. Applied to the RAW batch BEFORE per-key dedup
-    *    on the upsert family, so a violating latest version never
-    *    shadows an older passing version of the same key.
-    *  - QUARANTINE (`withExpectations(exps, "quarantine")` — the DLT
-    *    `expect_or_quarantine` parity mode): violating rows land in the
-    *    table's side relation (`<path>/quarantine/`, read back via
-    *    [[readQuarantine]]) tagged with the failed rule name(s), and the
-    *    commit proceeds with the survivors. Both sides are map-side
-    *    filters of the same batch — the only added cost is the one
-    *    quarantine write job.
-    *
-    * SQL CHECK-constraint null semantics: a predicate evaluating to NULL
-    * (e.g. over a null column) PASSES — only a definite FALSE violates.
-    * Per-HANDLE write configuration like Hudi validators, not persisted
-    * table state. */
+  /** Write expectations ([[Expectations]] — modes, null semantics) on
+    * this handle's commits: FAIL (default) refuses a violating commit,
+    * `dropViolations = true` filters violating rows out of the batch. */
   def withExpectations(exps: Seq[(String, Column)],
                        dropViolations: Boolean = false): MorTable =
     withExpectations(exps, if (dropViolations) "drop" else "fail")
 
   /** [[withExpectations]] by mode name: `fail` | `drop` | `quarantine`. */
   def withExpectations(exps: Seq[(String, Column)], mode: String): MorTable = {
-    require(MorTable.expectModes(mode),
-      s"expectation mode must be one of ${MorTable.expectModes.mkString(", ")}, got '$mode'")
-    expectations = exps
-    expectMode = mode
+    expectations = new Expectations(exps, mode)
     this
   }
-  @transient private var expectations: Seq[(String, Column)] = Nil
-  @transient private var expectMode: String = "fail"
-  private def expectDrop: Boolean = expectMode != "fail"
+  @transient private var expectations: Expectations = Expectations.none
 
   // ---------------------------------------------------------------- timeline
 
@@ -330,64 +301,13 @@ final class MorTable(
     // replayed batch: no-op BEFORE dropViolating — its quarantine write is
     // eager, and a committed batch must not re-append its violators
     if (isCommitted(batchId)) return this
-    commitDelta(withMeta(dedupBatch(dropViolating(batch, batchId), orderWithinBatch),
-      deleted = false), batchId)
+    commitDelta(withMeta(dedupBatch(expectations.dropViolating(batch, batchId, path),
+      orderWithinBatch), deleted = false), batchId)
     this
   }
 
-  /** DROP/QUARANTINE-mode expectations filter, applied to the RAW batch
-    * BEFORE the per-key dedup: a violating latest version must be
-    * quarantined without shadowing an older passing version of the same
-    * key (ingest-gate semantics). QUARANTINE mode additionally lands the
-    * violating rows in `<path>/quarantine/` tagged `_rule` (the failed
-    * rule names) and `_qtime` — both sides are map-side filters of the
-    * same batch; the quarantine write is the only added job. FAIL mode is
-    * enforced at commit instead ([[commitDelta]] — validates what is
-    * actually being committed, the Hudi pre-commit-validator scope). Null
-    * predicate results PASS (SQL CHECK rule). */
-  private def dropViolating(batch: DataFrame, batchId: Long = -1L): DataFrame =
-    if (expectations.isEmpty || !expectDrop) batch
-    else {
-      if (expectMode == "quarantine") {
-        val failed = concat_ws(",", expectations.map { case (n, p) =>
-          when(!coalesce(p, lit(true)), lit(n)) }: _*)
-        batch.filter(expectations.map { case (_, p) =>
-          !coalesce(p, lit(true)) }.reduce(_ || _))
-          .withColumn("_rule", failed)
-          .withColumn("_qtime", lit(MorTable.commitTimeString(System.currentTimeMillis())))
-          .withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(s"$path/quarantine")
-      }
-      batch.filter(expectations.map { case (_, p) =>
-        coalesce(p, lit(true)) }.reduce(_ && _))
-    }
-
-  /** The QUARANTINE side relation: rows refused by quarantine-mode
-    * expectations ([[withExpectations]]), each tagged with the failed
-    * rule name(s) (`_rule`), the refusal time (`_qtime`), and the
-    * micro-batch id (`_batch`; -1 for ad-hoc upserts).
-    *
-    * CONTRACT — at-least-once: the quarantine write lands BEFORE the
-    * commit claims its seq. A COMMITTED batch never re-appends (replays
-    * no-op before the expectations filter), but a commit that fails
-    * mid-publish (OCC loss, crash) re-evaluates the batch on retry and
-    * appends its violators AGAIN — dedup replays by `_batch` (e.g.
-    * `row_number() over (partition by <key>, _batch …) = 1`) when
-    * exactly-once matters. A NONDETERMINISTIC batch is additionally
-    * evaluated twice (violator filter vs survivor filter) and the two
-    * sides can disagree — pin such a batch (localCheckpoint) before
-    * upserting. Loud when nothing was ever quarantined (there is no
-    * schema to show). */
-  def readQuarantine(): DataFrame = {
-    val q = new Path(s"$path/quarantine")
-    if (!fs.exists(q)) throw new IllegalStateException(
-      s"MorTable at $path has no quarantined rows")
-    // mergeSchema: pre-upgrade quarantine files lack `_batch`; without the
-    // merge the resolved schema is file-listing-dependent and `_batch` can
-    // silently disappear from the documented dedup-by-_batch replay recipe
-    spark.read.option("mergeSchema", "true")
-      .parquet(MorTable.globSafe(q.toString))
-  }
+  /** The quarantine side relation ([[Expectations.readQuarantine]]). */
+  def readQuarantine(): DataFrame = Expectations.readQuarantine(spark, path)
 
   /** [[upsert]] for a batch the CALLER proved key-distinct (e.g. the
     * output of a per-key argmax): skips the per-key dedup window — one
@@ -396,7 +316,8 @@ final class MorTable(
     * violating batch surfaces as nondeterministic LWW within the commit. */
   def upsertDistinct(batch: DataFrame, batchId: Long = -1L): MorTable = {
     if (isCommitted(batchId)) return this // see upsert: pre-quarantine no-op
-    commitDelta(withMeta(dropViolating(batch, batchId), deleted = false), batchId)
+    commitDelta(withMeta(expectations.dropViolating(batch, batchId, path), deleted = false),
+      batchId)
     this
   }
 
@@ -707,16 +628,15 @@ final class MorTable(
   }
 
   /** Delete by key — writes tombstones (CDC `op = D`). `keys` needs the key
-    * columns only. `seqno` overrides the stored `_commit_seqno` (used by
-    * PartitionedMorTable, whose commit counter is table-global). */
-  def delete(keys: DataFrame, batchId: Long = -1L, seqno: Option[Long] = None): MorTable = {
+    * columns only. */
+  def delete(keys: DataFrame, batchId: Long = -1L): MorTable = {
     val schema = snapshotSchema()
     // pad the tombstone rows to the full table schema (nulls for data cols)
     val padded = schema.fields.filterNot(f => keys.columns.contains(f.name))
       .foldLeft(keys.select(keyCols.map(col): _*)) { (df, f) =>
         df.withColumn(f.name, lit(null).cast(f.dataType))
       }
-    commitDelta(withMeta(padded, deleted = true), batchId, seqno)
+    commitDelta(withMeta(padded, deleted = true), batchId)
     this
   }
 
@@ -1007,17 +927,16 @@ final class MorTable(
     * shuffle entirely. */
   def applyChangelog(envelope: DataFrame, batchId: Long,
                      insertOnly: Boolean): MorTable = {
-    val w = Window.partitionBy(col("key")).orderBy(col("seq").desc)
     val last =
       if (insertOnly) envelope
-      else envelope.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+      else CommitRows.latestPerKey(envelope, Seq(col("key")), Seq(col("seq").desc))
     val rows = last.select(
       // D rows keep the before-image (tombstone still carries the key cols)
       when(col("op") === "D", col("before")).otherwise(col("after")).as("__r"),
       (col("op") === "D").as("__del"))
       .select(col("__r.*"), col("__del"))
     val withM = rows
-      .withColumn("_record_key", concat_ws("|", keyCols.map(c => col(c).cast("string")): _*))
+      .withColumn("_record_key", CommitRows.recordKey(keyCols.map(col)))
       .withColumnRenamed("__del", "_deleted")
     commitDelta(withM, batchId, insertOnly = insertOnly)
     this
@@ -1073,26 +992,8 @@ final class MorTable(
   }
 
   private def updateOver(base: DataFrame, set: Map[String, Column],
-                         batchId: Long): MorTable = {
-    // the single projection APPLIES only assignments whose column exists —
-    // a typo'd SET column would otherwise become a silent per-assignment
-    // no-op (the old withColumn fold at least added it). SET keys resolve
-    // CASE-INSENSITIVELY against the table schema (Spark's default
-    // resolution; mirrors addColumns) — the projected output keeps the
-    // table's own column spelling.
-    val byLower = set.map { case (k, v) => k.toLowerCase -> v }
-    require(byLower.size == set.size,
-      s"update: SET names duplicate columns (case-insensitive): " +
-        set.keys.mkString(", "))
-    val known = base.columns.map(_.toLowerCase).toSet
-    val unknown = byLower.keySet.filterNot(known.contains)
-    require(unknown.isEmpty,
-      s"update: unknown column(s) ${unknown.mkString(", ")} " +
-        s"(table columns: ${base.columns.mkString(", ")})")
-    val updated = base.select(base.columns.map(c =>
-      byLower.get(c.toLowerCase).map(_.as(c)).getOrElse(col(c))): _*)
-    upsert(updated, keyCols.map(col), batchId)
-  }
+                         batchId: Long): MorTable =
+    upsert(MorTable.updatedImages(base, set), keyCols.map(col), batchId)
 
   /** Conditional MERGE (the SQL:2016 `MERGE INTO` / Hudi payload-combine /
     * Delta merge surface — the reference's writes are all key-merge
@@ -1147,7 +1048,7 @@ final class MorTable(
       when(delCond, lit("D"))
         .when(matched, lit("U"))
         .when(insertWhen, lit("I")).as("op"),
-      concat_ws("|", keyCols.map(k => col(s"s.$k").cast("string")): _*).as("key"),
+      CommitRows.recordKey(keyCols.map(k => col(s"s.$k"))).as("key"),
       beforeImage.as("before"),
       afterImage.as("after"),
       lit(0L).as("seq"))
@@ -1190,7 +1091,7 @@ final class MorTable(
       return (pinned, read())
     }
     val keyed = pinned.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__n"))
-      .select(concat_ws("|", keyCols.map(k => col(k).cast("string")): _*).as("__pk"),
+      .select(CommitRows.recordKey(keyCols.map(col)).as("__pk"),
         col("__n"))
     val head = keyed.limit(MorTable.mergeKeyCollectCap + 1).collect()
     if (head.length <= MorTable.mergeKeyCollectCap) {
@@ -1290,20 +1191,15 @@ final class MorTable(
     upsertDistinct(resolved, batchId)
   }
 
-  private def dedupBatch(batch: DataFrame, order: Seq[Column]): DataFrame = {
+  private def dedupBatch(batch: DataFrame, order: Seq[Column]): DataFrame =
     if (order.isEmpty) batch
-    else {
-      val w = Window.partitionBy(keyCols.map(col): _*).orderBy(order.map(_.desc): _*)
-      batch.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-    }
-  }
+    else CommitRows.latestPerKey(batch, keyCols.map(col), order.map(_.desc))
 
   private def withMeta(df: DataFrame, deleted: Boolean): DataFrame =
-    df.withColumn("_record_key", concat_ws("|", keyCols.map(c => col(c).cast("string")): _*))
+    df.withColumn("_record_key", CommitRows.recordKey(keyCols.map(col)))
       .withColumn("_deleted", lit(deleted))
 
   private def commitDelta(df: DataFrame, batchId: Long,
-                          seqno: Option[Long] = None,
                           insertOnly: Boolean = false): Unit = synchronized {
     // the initial load of an empty table is trivially insert-only (every
     // key is new), so first commits get the merge-skip flag for free —
@@ -1315,21 +1211,9 @@ final class MorTable(
     val firstCommit = timeline().isEmpty && inflightDeltaSeqs().isEmpty
     val seq = allocateSeq("delta")
     val now = System.currentTimeMillis()
-    // write expectations (see withExpectations): DROP mode is a map-side
-    // filter; FAIL mode counts violations on the commit write itself via
-    // an Observation — neither adds a job
-    val (checked, expectObs) =
-      if (expectations.isEmpty || expectDrop) (df, None)
-      else {
-        val viol = expectations.map { case (_, p) =>
-          !col("_deleted") && !coalesce(p, lit(true)) }.reduce(_ || _)
-        val obs = new org.apache.spark.sql.Observation(
-          s"graft_expect_${seq}_${System.nanoTime()}")
-        (df.observe(obs, sum(when(viol, 1L).otherwise(0L)).as("bad")), Some(obs))
-      }
-    val out0 = checked
-      .withColumn("_commit_seqno", lit(seqno.getOrElse(seq)))
-      .withColumn("_commit_time", lit(commitTimeString(now)))
+    // FAIL-mode expectations count violations on the commit write itself
+    val (checked, guard) = expectations.guard(df)
+    val out0 = CommitRows.stamp(checked, seq, now)
     // bound files-per-commit (write.tasks). For a batch that is nothing
     // but narrow ops over already-materialized blocks (the micro-batch
     // shape: a pinned changelog slice projected into the envelope), a
@@ -1358,18 +1242,9 @@ final class MorTable(
     // The inflight marker goes too: a deliberate refusal is not a crash,
     // and a leftover marker would make rollback/restore refuse with
     // 'mid-publish' for the next lease
-    expectObs.foreach { obs =>
-      val bad = obs.get.get("bad") match {
-        case Some(l: java.lang.Long) => l.longValue()
-        case _ => 0L
-      }
-      if (bad > 0L) {
-        fs.delete(new Path(s"$path/delta/$seq"), true)
-        fs.delete(new Path(hPath, s"timeline/$seq.delta.inflight"), false)
-        throw new IllegalArgumentException(
-          s"write expectations (${expectations.map(_._1).mkString(", ")}) " +
-            s"violated by $bad row(s) — commit $seq refused")
-      }
+    guard.refuseIfViolated(s"commit $seq") {
+      fs.delete(new Path(s"$path/delta/$seq"), true)
+      fs.delete(new Path(hPath, s"timeline/$seq.delta.inflight"), false)
     }
     // the writer knows the exact on-disk schema: register the commit dir's
     // relation so no later scan pays the footer-inference job (scanDir)
@@ -1417,6 +1292,10 @@ final class MorTable(
     (lastCompact, deltas)
   }
 
+  /** Last-write-wins over commit rows: the highest `_commit_seqno` per key. */
+  private def lwwLatest(df: DataFrame): DataFrame =
+    CommitRows.latestPerKey(df, Seq(col("_record_key")), Seq(col("_commit_seqno").desc))
+
   private def snapshotOf(tl: Seq[Instant]): DataFrame =
     snapshotMerged(tl).filter(!col("_deleted"))
 
@@ -1440,9 +1319,7 @@ final class MorTable(
       // shallow CLONE base: another table's compacted base — keys and
       // tombstones are real on disk; seqno/time REBASED to this instant
       // so the clone's own deltas (fresh local seqs) outrank adopted rows
-      scanDir(d)
-        .withColumn("_commit_seqno", lit(c.seq))
-        .withColumn("_commit_time", lit(MorTable.commitTimeString(c.commitMs)))
+      CommitRows.stamp(scanDir(d), c.seq, c.commitMs)
     case Some(d) =>
       // a partitioned-bootstrap child's external files follow standard
       // Hive layout — the partition value lives only in the directory
@@ -1453,12 +1330,7 @@ final class MorTable(
         case Some((pc, pv, pt)) => scanDir(d).withColumn(pc, lit(pv).cast(pt))
         case None => scanDir(d)
       }
-      raw
-        .withColumn("_record_key",
-          concat_ws("|", keyCols.map(k => col(k).cast("string")): _*))
-        .withColumn("_deleted", lit(false))
-        .withColumn("_commit_seqno", lit(c.seq))
-        .withColumn("_commit_time", lit(MorTable.commitTimeString(c.commitMs)))
+      CommitRows.stamp(withMeta(raw, deleted = false), c.seq, c.commitMs)
     case None => scanDir(s"$path/base/${c.seq}")
   }
 
@@ -1525,11 +1397,7 @@ final class MorTable(
     // (a base tombstone for a re-inserted key is dropped by the reader's
     // `_deleted` filter, never shadowing the newer insert).
     if (parts.size == 1 || deltas.forall(_.insertOnly)) unioned
-    else {
-      val w = Window.partitionBy(col("_record_key")).orderBy(col("_commit_seqno").desc)
-      unioned
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-    }
+    else lwwLatest(unioned)
   }
 
   /** Incremental query (the Hudi incremental-pull analog): the net effect
@@ -1545,11 +1413,7 @@ final class MorTable(
     if (deltas.isEmpty) return snapshot().limit(0)
     val parts = deltas.map(d => scanDir(s"$path/delta/${d.seq}"))
     val unioned = parts.reduce(_.unionByName(_, allowMissingColumns = true))
-    if (parts.size == 1) unioned
-    else {
-      val w = Window.partitionBy(col("_record_key")).orderBy(col("_commit_seqno").desc)
-      unioned.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-    }
+    if (parts.size == 1) unioned else lwwLatest(unioned)
   }
 
   /** CDC read (the Hudi cdc-query analog): net ROW-LEVEL CHANGES in the
@@ -1581,11 +1445,7 @@ final class MorTable(
       } else {
         val parts = deltas.map(d => scanDir(s"$path/delta/${d.seq}"))
         val unioned = parts.reduce(_.unionByName(_, allowMissingColumns = true))
-        val w = Window.partitionBy(col("_record_key")).orderBy(col("_commit_seqno").desc)
-        val net =
-          if (parts.size == 1) unioned
-          else unioned.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn")
+        val net = if (parts.size == 1) unioned else lwwLatest(unioned)
         val beforeTl = timeline().filter(_.seq <= fromSeq)
         val before =
           (if (beforeTl.isEmpty) snapshot().limit(0) else snapshotOf(beforeTl))
@@ -3642,19 +3502,31 @@ object MorTable {
         new Path(p.getParent, s".${p.getName}.crc").toUri.getPath))
     }
 
+  /** `base` with the UPDATE `set` assignments applied in ONE projection,
+    * every assignment evaluated against the original row (SQL UPDATE
+    * semantics). SET keys resolve CASE-INSENSITIVELY against the table
+    * schema (Spark's default resolution; mirrors addColumns) and the output
+    * keeps the table's own column spelling; a key naming no column is
+    * refused — it would otherwise commit the matched rows unchanged. */
+  private[lake] def updatedImages(base: DataFrame, set: Map[String, Column]): DataFrame = {
+    val byLower = set.map { case (k, v) => k.toLowerCase -> v }
+    require(byLower.size == set.size,
+      s"update: SET names duplicate columns (case-insensitive): " +
+        set.keys.mkString(", "))
+    val known = base.columns.map(_.toLowerCase).toSet
+    val unknown = byLower.keySet.filterNot(known.contains)
+    require(unknown.isEmpty,
+      s"update: unknown column(s) ${unknown.mkString(", ")} " +
+        s"(table columns: ${base.columns.mkString(", ")})")
+    base.select(base.columns.map(c =>
+      byLower.get(c.toLowerCase).map(_.as(c)).getOrElse(col(c))): _*)
+  }
+
   /** Lock paths held by the CURRENT thread (reentrancy bookkeeping for
     * [[withTableLock]]). */
   private val heldLocks = new ThreadLocal[Set[String]] {
     override def initialValue(): Set[String] = Set.empty
   }
-
-  /** Legal [[MorTable.withExpectations]] modes. */
-  private[graft] val expectModes: Set[String] = Set("fail", "drop", "quarantine")
-
-  private[lake] def commitTimeString(ms: Long): String =
-    java.time.format.DateTimeFormatter.ofPattern("yyyyMMddHHmmssSSS")
-      .withZone(java.time.ZoneOffset.UTC)
-      .format(java.time.Instant.ofEpochMilli(ms))
 
   private[lake] def readFully(fs: FileSystem, p: Path): Array[Byte] = {
     val in = fs.open(p)

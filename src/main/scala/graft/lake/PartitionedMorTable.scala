@@ -334,117 +334,79 @@ final class PartitionedMorTable(
     catch { case _: java.io.FileNotFoundException => Nil }
   }
 
-  /** WRITE EXPECTATIONS, partitioned form ([[MorTable.withExpectations]]
-    * semantics): DROP mode filters the raw batch before the per-(partition,
-    * key) dedup; FAIL mode counts violations via an Observation on the ONE
-    * staged cluster write and refuses before any child adopts. */
+  /** Write expectations ([[Expectations]]) on this handle's commits:
+    * DROP mode filters the raw batch before the per-(partition, key)
+    * dedup; FAIL mode refuses a violating staged write before any child
+    * adopts it. */
   def withExpectations(exps: Seq[(String, Column)],
                        dropViolations: Boolean = false): PartitionedMorTable =
     withExpectations(exps, if (dropViolations) "drop" else "fail")
 
   /** [[withExpectations]] by mode name: `fail` | `drop` | `quarantine`
-    * ([[MorTable.withExpectations]] semantics; the quarantine side
-    * relation lives at the PARENT level, one for the whole table). */
+    * (the quarantine side relation lives at the PARENT level, one for the
+    * whole table). */
   def withExpectations(exps: Seq[(String, Column)],
                        mode: String): PartitionedMorTable = {
-    require(MorTable.expectModes(mode),
-      s"expectation mode must be one of ${MorTable.expectModes.mkString(", ")}, got '$mode'")
-    expectations = exps
-    expectMode = mode
+    expectations = new Expectations(exps, mode)
     this
   }
-  @transient private var expectations: Seq[(String, Column)] = Nil
-  @transient private var expectMode: String = "fail"
-  private def expectDrop: Boolean = expectMode != "fail"
+  @transient private var expectations: Expectations = Expectations.none
 
-  private def dropViolating(batch: DataFrame, batchId: Long = -1L): DataFrame =
-    if (expectations.isEmpty || !expectDrop) batch
-    else {
-      if (expectMode == "quarantine") {
-        val failed = concat_ws(",", expectations.map { case (n, p) =>
-          when(!coalesce(p, lit(true)), lit(n)) }: _*)
-        batch.filter(expectations.map { case (_, p) =>
-          !coalesce(p, lit(true)) }.reduce(_ || _))
-          .withColumn("_rule", failed)
-          .withColumn("_qtime",
-            lit(MorTable.commitTimeString(System.currentTimeMillis())))
-          .withColumn("_batch", lit(batchId))
-          .write.mode("append").parquet(s"$path/quarantine")
+  /** The parent-level quarantine side relation
+    * ([[Expectations.readQuarantine]]). */
+  def readQuarantine(): DataFrame = Expectations.readQuarantine(spark, path)
+
+  /** The one staged partitioned commit every write verb runs: claim a
+    * parent token of `kind`, stamp `rows` (commit rows short of the
+    * stamp) with it, route every row to its partition in ONE
+    * `partitionBy` write, refuse the write on a FAIL-mode expectation
+    * violation, then adopt each staged partition dir into its child and
+    * publish the parent instant. `prove` sees the stamped rows before the
+    * write and returns the rows to write plus a per-partition
+    * insert-only verdict ([[upsertIfNew]]); the verdicts are returned. */
+  private def stagedCommit(kind: String, batchId: Long, rows: DataFrame,
+                           prove: DataFrame => (DataFrame, Map[String, Boolean]) =
+                             staged => (staged, Map.empty)): Map[String, Boolean] = {
+    val token = nextToken(kind)
+    renewingParentMarker(token, kind) {
+      val now = System.currentTimeMillis()
+      val (staged, verdicts) = prove(CommitRows.stamp(rows, token, now)
+        .withColumn("__p", col(partCol).cast("string")))
+      val (checked, guard) = expectations.guard(staged)
+      val stagingDir = new Path(hPath, s".staging/$token")
+      checked.write.partitionBy("__p").mode("overwrite").parquet(stagingDir.toString)
+      // a refusal is not a crash: remove the claim with the staged rows
+      guard.refuseIfViolated(s"partitioned commit $token") {
+        fs.delete(stagingDir, true)
+        fs.delete(new Path(hPath, s"_timeline/$token.$kind.inflight"), false)
       }
-      batch.filter(expectations.map { case (_, p) =>
-        coalesce(p, lit(true)) }.reduce(_ && _))
+      adoptStaged(stagingDir, batchId, verdicts.filter(_._2).keySet,
+        schemaHint = Some(staged.drop("__p").schema))
+      writeParentInstant(MorTable.Instant(token, kind, batchId, now))
+      verdicts
     }
-
-  /** The parent-level QUARANTINE side relation ([[MorTable
-    * .readQuarantine]] semantics and AT-LEAST-ONCE contract — committed
-    * batches never re-append, mid-publish retries do; dedup by
-    * `_batch`). */
-  def readQuarantine(): DataFrame = {
-    val q = new Path(hPath, "quarantine")
-    if (!fs.exists(q)) throw new IllegalStateException(
-      s"PartitionedMorTable at $path has no quarantined rows")
-    // mergeSchema: see MorTable.readQuarantine — old files may lack _batch
-    spark.read.option("mergeSchema", "true")
-      .parquet(MorTable.globSafe(q.toString))
   }
+
+  /** `df` with its record key and tombstone flag. */
+  private def withMeta(df: DataFrame, deleted: Boolean): DataFrame =
+    df.withColumn("_record_key", CommitRows.recordKey(keyCols.map(col)))
+      .withColumn("_deleted", lit(deleted))
+
+  /** Per-(partition, key) batch dedup, last by `order`. */
+  private def dedupBatch(batch: DataFrame, order: Seq[Column]): DataFrame =
+    if (order.isEmpty) batch
+    else CommitRows.latestPerKey(batch, (partCol +: keyCols).map(col), order.map(_.desc))
 
   /** Keyed upsert of a batch: ONE staged cluster write partitioned by the
     * partition column, then a metadata-only adoption per touched partition,
     * all tagged with `batchId`. A key must not move between partitions
     * (same rule as Hudi's default key/partition-path contract); use the
     * partition column as part of the key if it can. */
-  def upsert(batch0: DataFrame, orderWithinBatch: Seq[Column],
+  def upsert(batch: DataFrame, orderWithinBatch: Seq[Column],
              batchId: Long = -1L): PartitionedMorTable = {
     if (isCommitted(batchId)) return this // fully replayed batch — no-op
-    val batch = dropViolating(batch0, batchId)
-    val token = nextToken("delta")
-    renewingParentMarker(token, "delta") {
-    val now = System.currentTimeMillis()
-    val deduped =
-      if (orderWithinBatch.isEmpty) batch
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy((partCol +: keyCols).map(col): _*)
-          .orderBy(orderWithinBatch.map(_.desc): _*)
-        batch.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-      }
-    val staged = deduped
-      .withColumn("_record_key",
-        concat_ws("|", keyCols.map(c => col(c).cast("string")): _*))
-      .withColumn("_deleted", lit(false))
-      .withColumn("_commit_seqno", lit(token))
-      .withColumn("_commit_time", lit(MorTable.commitTimeString(now)))
-      .withColumn("__p", col(partCol).cast("string"))
-    val stagingDir = new Path(hPath, s".staging/$token")
-    // FAIL-mode expectations ride the one staged write as an Observation;
-    // a violating batch removes the staging dir before ANY child adopts
-    val (stagedV, expectObs) =
-      if (expectations.isEmpty || expectDrop) (staged, None)
-      else {
-        val viol = expectations.map { case (_, p) =>
-          !coalesce(p, lit(true)) }.reduce(_ || _)
-        val obs = new org.apache.spark.sql.Observation(
-          s"graft_pexpect_${token}_${System.nanoTime()}")
-        (staged.observe(obs, sum(when(viol, 1L).otherwise(0L)).as("bad")), Some(obs))
-      }
-    stagedV.write.partitionBy("__p").mode("overwrite").parquet(stagingDir.toString)
-    expectObs.foreach { obs =>
-      val bad = obs.get.get("bad") match {
-        case Some(l: java.lang.Long) => l.longValue()
-        case _ => 0L
-      }
-      if (bad > 0L) {
-        fs.delete(stagingDir, true)
-        throw new IllegalArgumentException(
-          s"write expectations (${expectations.map(_._1).mkString(", ")}) " +
-            s"violated by $bad row(s) — partitioned commit $token refused")
-      }
-    }
-    adoptStaged(stagingDir, batchId,
-      schemaHint = Some(staged.drop("__p").schema))
-    writeParentInstant(MorTable.Instant(token, "delta", batchId, now))
-    }
+    stagedCommit("delta", batchId, withMeta(dedupBatch(
+      expectations.dropViolating(batch, batchId, path), orderWithinBatch), deleted = false))
     if (autoCompact) { maybeCompact(); () }
     this
   }
@@ -492,92 +454,73 @@ final class PartitionedMorTable(
                   bloomBits: Int = 1 << 17): Map[String, Boolean] = {
     if (isCommitted(batchId)) return Map.empty
     graft.GraftFunctions.register(spark)
-    val token = nextToken("delta")
-    val verdicts = renewingParentMarker(token, "delta") {
-    val now = System.currentTimeMillis()
-    val deduped =
-      if (orderWithinBatch.isEmpty) batch
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy((partCol +: keyCols).map(col): _*)
-          .orderBy(orderWithinBatch.map(_.desc): _*)
-        batch.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
+    // the stamped batch is pinned, its keys summarized per partition and
+    // probed against each child before the one staged write
+    def prove(stamped: DataFrame): (DataFrame, Map[String, Boolean]) = {
+      val staged = stamped.localCheckpoint(true) // pinned: stats agg + probe + write reuse it
+      val stats = staged.groupBy(col("__p"))
+        .agg(call_function("key_bloom_agg", col("_record_key"), lit(bloomBits)).as("f"),
+          min(col("_record_key")).as("mn"), max(col("_record_key")).as("mx"))
+        .collect() // touched-partitions-sized by construction
+      val existing = partitions().toSet
+      // a child still on a meta-less bootstrap base has no on-disk
+      // _record_key to probe — FAIL CLOSED: downgrade it to the normal
+      // merge path (a false "proven new" would corrupt LWW; a missed
+      // fast path only costs the dedup window)
+      val bootDowngrade: Set[String] = stats.toSeq.map(_.getString(0))
+        .filter(p => existing(p) && child(p).metalessBootstrapBase().isDefined)
+        .toSet
+      val toScan = stats.toSeq.flatMap { r =>
+        val p = r.getString(0)
+        val paths =
+          if (existing(p) && !bootDowngrade(p))
+            child(p).probePaths(r.getString(2), r.getString(3))
+          else Nil // a partition born in this batch is trivially all-new
+        if (paths.isEmpty) None
+        else Some((p, paths, r.getAs[Array[Byte]]("f")))
       }
-    val staged = deduped
-      .withColumn("_record_key",
-        concat_ws("|", keyCols.map(c => col(c).cast("string")): _*))
-      .withColumn("_deleted", lit(false))
-      .withColumn("_commit_seqno", lit(token))
-      .withColumn("_commit_time", lit(MorTable.commitTimeString(now)))
-      .withColumn("__p", col(partCol).cast("string"))
-      .localCheckpoint(true) // pinned: stats agg + probe + write reuse it
-    val stats = staged.groupBy(col("__p"))
-      .agg(call_function("key_bloom_agg", col("_record_key"), lit(bloomBits)).as("f"),
-        min(col("_record_key")).as("mn"), max(col("_record_key")).as("mx"))
-      .collect() // touched-partitions-sized by construction
-    val existing = partitions().toSet
-    // a child still on a meta-less bootstrap base has no on-disk
-    // _record_key to probe — FAIL CLOSED: downgrade it to the normal
-    // merge path (a false "proven new" would corrupt LWW; a missed
-    // fast path only costs the dedup window)
-    val bootDowngrade: Set[String] = stats.toSeq.map(_.getString(0))
-      .filter(p => existing(p) && child(p).metalessBootstrapBase().isDefined)
-      .toSet
-    val toScan = stats.toSeq.flatMap { r =>
-      val p = r.getString(0)
-      val paths =
-        if (existing(p) && !bootDowngrade(p))
-          child(p).probePaths(r.getString(2), r.getString(3))
-        else Nil // a partition born in this batch is trivially all-new
-      if (paths.isEmpty) None
-      else Some((p, paths, r.getAs[Array[Byte]]("f")))
+      val hitParts: Set[String] =
+        if (toScan.isEmpty) Set.empty
+        else {
+          // ONE probe job across every child: each row checks against its
+          // OWN partition's batch filter. THREE representations of a
+          // partition value are in play — the raw value (child dirs are
+          // `p=<raw>`; stats rows carry it), Hive's escapePathName (staged
+          // `__p=` dirs), and the Hadoop-Path URI encoding that
+          // input_file_name() yields (FileScanRDD's urlEncodedPath). The
+          // probe map is keyed by the LAST one, computed driver-side with
+          // the same Path→URI machinery, so the extracted `__part` segment
+          // and the map key agree by construction for any value; `encToRaw`
+          // maps verdicts back without a second (possibly disagreeing)
+          // decoder.
+          def encSeg(v: String): String =
+            new Path(s"/p=$v").toUri.getRawPath.stripPrefix("/p=")
+          val encToRaw = toScan.map { case (p, _, _) => encSeg(p) -> p }.toMap
+          val bloomMap = map(toScan.flatMap { case (p, _, f) =>
+            Seq(lit(encSeg(p)), lit(f))
+          }: _*)
+          val partOf = regexp_extract(input_file_name(), "/p=([^/]+)/", 1)
+          // FAIL CLOSED: a missed map lookup makes element_at null and the
+          // bloom probe null — coalesce(…, true) keeps the row, so an
+          // unmatchable segment downgrades its child to the normal merge
+          // path instead of silently proving newness (a false "proven new"
+          // would flag the commit insertOnly and corrupt LWW merges — the
+          // no-false-proof invariant).
+          val hitSegs = spark.read.parquet(MorTable.globSafe(toScan.flatMap(_._2)): _*)
+            .select(col("_record_key"), partOf.as("__part"))
+            .filter(coalesce(call_function("key_bloom_contains",
+              element_at(bloomMap, col("__part")), col("_record_key")), lit(true)))
+            .select("__part").distinct().collect().map(_.getString(0)).toSeq
+          if (hitSegs.exists(s => !encToRaw.contains(s)))
+            toScan.map(_._1).toSet // unmapped segment → fail closed everywhere
+          else hitSegs.map(encToRaw).toSet
+        }
+      val proven = stats.map(_.getString(0)).filterNot(hitParts)
+        .filterNot(bootDowngrade).toSet
+      (staged, stats.map(r => r.getString(0) -> proven(r.getString(0))).toMap)
     }
-    val hitParts: Set[String] =
-      if (toScan.isEmpty) Set.empty
-      else {
-        // ONE probe job across every child: each row checks against its
-        // OWN partition's batch filter. THREE representations of a
-        // partition value are in play — the raw value (child dirs are
-        // `p=<raw>`; stats rows carry it), Hive's escapePathName (staged
-        // `__p=` dirs), and the Hadoop-Path URI encoding that
-        // input_file_name() yields (FileScanRDD's urlEncodedPath). The
-        // probe map is keyed by the LAST one, computed driver-side with
-        // the same Path→URI machinery, so the extracted `__part` segment
-        // and the map key agree by construction for any value; `encToRaw`
-        // maps verdicts back without a second (possibly disagreeing)
-        // decoder.
-        def encSeg(v: String): String =
-          new Path(s"/p=$v").toUri.getRawPath.stripPrefix("/p=")
-        val encToRaw = toScan.map { case (p, _, _) => encSeg(p) -> p }.toMap
-        val bloomMap = map(toScan.flatMap { case (p, _, f) =>
-          Seq(lit(encSeg(p)), lit(f))
-        }: _*)
-        val partOf = regexp_extract(input_file_name(), "/p=([^/]+)/", 1)
-        // FAIL CLOSED: a missed map lookup makes element_at null and the
-        // bloom probe null — coalesce(…, true) keeps the row, so an
-        // unmatchable segment downgrades its child to the normal merge
-        // path instead of silently proving newness (a false "proven new"
-        // would flag the commit insertOnly and corrupt LWW merges — the
-        // no-false-proof invariant).
-        val hitSegs = spark.read.parquet(MorTable.globSafe(toScan.flatMap(_._2)): _*)
-          .select(col("_record_key"), partOf.as("__part"))
-          .filter(coalesce(call_function("key_bloom_contains",
-            element_at(bloomMap, col("__part")), col("_record_key")), lit(true)))
-          .select("__part").distinct().collect().map(_.getString(0)).toSeq
-        if (hitSegs.exists(s => !encToRaw.contains(s)))
-          toScan.map(_._1).toSet // unmapped segment → fail closed everywhere
-        else hitSegs.map(encToRaw).toSet
-      }
-    val proven = stats.map(_.getString(0)).filterNot(hitParts)
-      .filterNot(bootDowngrade).toSet
-    val stagingDir = new Path(hPath, s".staging/$token")
-    staged.write.partitionBy("__p").mode("overwrite").parquet(stagingDir.toString)
-    adoptStaged(stagingDir, batchId, proven,
-      schemaHint = Some(staged.drop("__p").schema))
-    writeParentInstant(MorTable.Instant(token, "delta", batchId, now))
-    stats.map(r => r.getString(0) -> proven(r.getString(0))).toMap
-    }
+    val verdicts = stagedCommit("delta", batchId,
+      withMeta(dedupBatch(batch, orderWithinBatch), deleted = false), prove)
     if (autoCompact) { maybeCompact(); () }
     verdicts
   }
@@ -619,11 +562,9 @@ final class PartitionedMorTable(
 
   private def updateOver(base: DataFrame, set: Map[String, Column],
                          batchId: Long): PartitionedMorTable = {
-    require(!set.contains(partCol),
+    require(!set.keys.exists(_.equalsIgnoreCase(partCol)),
       s"updateWhere cannot move rows across partitions ($partCol is part of the PK)")
-    val updated = base.select(base.columns.map(c =>
-      set.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-    upsert(updated, keyCols.map(col), batchId)
+    upsert(MorTable.updatedImages(base, set), keyCols.map(col), batchId)
   }
 
   /** Apply one changelog micro-batch (the op/before/after/seq envelope of
@@ -661,32 +602,16 @@ final class PartitionedMorTable(
         pOf(col("before")) =!= pOf(col("after")))
       .select(col("before").as("__r"), lit(true).as("__del"),
         col("key"), col("seq"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(pOf(col("__r")), col("key"))
-      // tombstone-first tie-break: a move-out tombstone shares its seq with
-      // same-key rows only in the BEFORE partition, where it must win
-      .orderBy(Seq(col("seq").desc, col("__del").desc) ++
-        tiebreak.map(f => col("__r").getField(f).desc): _*)
-    val rows = events.unionByName(moveTombstones)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
+    val by = Seq(pOf(col("__r")), col("key"))
+    // tombstone-first tie-break: a move-out tombstone shares its seq with
+    // same-key rows only in the BEFORE partition, where it must win
+    val order = Seq(col("seq").desc, col("__del").desc) ++
+      tiebreak.map(f => col("__r").getField(f).desc)
+    val rows = CommitRows.latestPerKey(events.unionByName(moveTombstones), by, order)
       .select(col("__r.*"), col("__del"))
-    val token = nextToken("delta")
-    renewingParentMarker(token, "delta") {
-    val now = System.currentTimeMillis()
-    val staged = rows
-      .withColumn("_record_key",
-        concat_ws("|", keyCols.map(c => col(c).cast("string")): _*))
-      .withColumnRenamed("__del", "_deleted")
-      .withColumn("_commit_seqno", lit(token))
-      .withColumn("_commit_time", lit(MorTable.commitTimeString(now)))
-      .withColumn("__p", col(partCol).cast("string"))
-    val stagingDir = new Path(hPath, s".staging/$token")
-    staged.write.partitionBy("__p").mode("overwrite").parquet(stagingDir.toString)
-    adoptStaged(stagingDir, batchId,
-      schemaHint = Some(staged.drop("__p").schema))
-    writeParentInstant(MorTable.Instant(token, "delta", batchId, now))
-    }
+    stagedCommit("delta", batchId, rows
+      .withColumn("_record_key", CommitRows.recordKey(keyCols.map(col)))
+      .withColumnRenamed("__del", "_deleted"))
     if (autoCompact) { maybeCompact(); () }
     this
   }
@@ -700,22 +625,8 @@ final class PartitionedMorTable(
     * commit token so delete/upsert LWW ordering stays table-global. */
   def delete(keys: DataFrame, batchId: Long = -1L): PartitionedMorTable = {
     if (isCommitted(batchId)) return this
-    val token = nextToken("delete")
-    renewingParentMarker(token, "delete") {
-    val now = System.currentTimeMillis()
-    val staged = keys.select((partCol +: keyCols).distinct.map(col): _*)
-      .withColumn("_record_key",
-        concat_ws("|", keyCols.map(c => col(c).cast("string")): _*))
-      .withColumn("_deleted", lit(true))
-      .withColumn("_commit_seqno", lit(token))
-      .withColumn("_commit_time", lit(MorTable.commitTimeString(now)))
-      .withColumn("__p", col(partCol).cast("string"))
-    val stagingDir = new Path(hPath, s".staging/$token")
-    staged.write.partitionBy("__p").mode("overwrite").parquet(stagingDir.toString)
-    adoptStaged(stagingDir, batchId,
-      schemaHint = Some(staged.drop("__p").schema))
-    writeParentInstant(MorTable.Instant(token, "delete", batchId, now))
-    }
+    stagedCommit("delete", batchId,
+      withMeta(keys.select((partCol +: keyCols).distinct.map(col): _*), deleted = true))
     this
   }
 
@@ -801,13 +712,9 @@ final class PartitionedMorTable(
   }
 
   /** Table-global last-write-wins: `_commit_seqno` is the parent token. */
-  private def lwwLatest(df: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(partCol), col("_record_key"))
-      .orderBy(col("_commit_seqno").desc)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-  }
+  private def lwwLatest(df: DataFrame): DataFrame =
+    CommitRows.latestPerKey(df, Seq(col(partCol), col("_record_key")),
+      Seq(col("_commit_seqno").desc))
 
   /** User-facing column order: keys, partition, then remaining data
     * columns in scan order (mergeSchema's field order depends on file
@@ -1662,13 +1569,7 @@ final class PartitionedMorTable(
     val scan = spark.read.option("basePath", parent.bootstrapDir.get)
       .option("mergeSchema", "true")
       .parquet(MorTable.globSafe(boots.map(_._2.bootstrapDir.get)): _*)
-    Some(scan
-      .withColumn("_record_key",
-        concat_ws("|", keyCols.map(c => col(c).cast("string")): _*))
-      .withColumn("_deleted", lit(false))
-      .withColumn("_commit_seqno", lit(parent.seq))
-      .withColumn("_commit_time",
-        lit(MorTable.commitTimeString(parent.commitMs))))
+    Some(CommitRows.stamp(withMeta(scan, deleted = false), parent.seq, parent.commitMs))
   }
 
   /** Shallow CLONE, partitioned form ([[MorTable.cloneTo]] semantics
@@ -1946,7 +1847,7 @@ final class PartitionedMorTable(
     * restricted to the range. */
   def readForKeyRange(lo: String, hi: String,
                       values: Seq[String] = Seq.empty): DataFrame = {
-    val recordKey = concat_ws("|", keyCols.map(c => col(c).cast("string")): _*)
+    val recordKey = CommitRows.recordKey(keyCols.map(col))
     read(values).filter(recordKey >= lit(lo) && recordKey < lit(hi))
   }
 

@@ -234,7 +234,7 @@ object DefaultSource {
         k.substring("expect.".length) -> org.apache.spark.sql.functions.expr(v)
     }.sortBy(_._1)
     val mode = parameters.find(_._1.equalsIgnoreCase("expect.mode")).map(_._2) match {
-      case Some(m) if graft.lake.MorTable.expectModes(m) => m
+      case Some(m) if graft.lake.Expectations.modes(m) => m
       case None => "fail"
       case Some(other) => throw new IllegalArgumentException(
         s"expect.mode must be 'fail', 'drop' or 'quarantine', got '$other'")

@@ -584,7 +584,7 @@ case class GraftMergeCommand(rel: MorRelation, source: LogicalPlan,
     // NOT MATCHED BY SOURCE must see every target row, so it keeps the
     // full read
     val srcKeys = keyEquiSrc.map(ks =>
-      src.select(concat_ws("|", ks.map(_.cast("string")): _*).as("__pk")))
+      src.select(graft.lake.CommitRows.recordKey(ks).as("__pk")))
       .filter(_ => nmbs.isEmpty)
     val readDf = srcKeys match {
       case Some(k) => rel.table.readForKeyBatch(k, rel.partitionValues)
@@ -616,10 +616,9 @@ case class GraftMergeCommand(rel: MorRelation, source: LogicalPlan,
         .when(srcOnly, chainOr(inserts, a => a.set.getOrElse(c, lit(null)), lit(null)))
         .otherwise(chainOr(nmbs, a => a.set.getOrElse(c, tCol), tCol))
     }
-    val keyOf = concat_ws("|", keyCols.map(k =>
+    val keyOf = graft.lake.CommitRows.recordKey(keyCols.map(k =>
       when(isMatched || tgtOnly, col(s"t.$k"))
-        .otherwise(chainOr(inserts, a => a.set.getOrElse(k, lit(null)), lit(null)))
-        .cast("string")): _*)
+        .otherwise(chainOr(inserts, a => a.set.getOrElse(k, lit(null)), lit(null)))))
     val env = joined.select(
       op.as("op"), keyOf.as("key"),
       struct(dataCols.map(c => col(s"t.$c").cast(readDf.schema(c).dataType).as(c)): _*).as("before"),

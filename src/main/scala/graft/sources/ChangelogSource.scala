@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
+import graft.lake.CommitRows
 
 /** CDC changelog ingestion — the Spark-native analog of the reference's
   * Flink Postgres-CDC sources (reference `CDC-Hudi-Notebook.zpln:1060`
@@ -39,7 +40,7 @@ object ChangelogSource {
     val dataCols = snap.columns.toSeq
     snap.select(
       lit(OpInsert).as("op"),
-      keyExpr(keyCols).as("key"),
+      CommitRows.recordKey(keyCols.map(col)).as("key"),
       lit(null).cast(structTypeOf(snap)).as("before"),
       struct(dataCols.map(col): _*).as("after"),
       lit(0L).as("seq"))
@@ -56,11 +57,11 @@ object ChangelogSource {
     // A delete with no prior row in THIS log still carries its image in the
     // data columns (REPLICA IDENTITY FULL: the WAL ships the full old row),
     // so D falls back to the row's own columns — `before` is never null on D.
-    val w = Window.partitionBy(keyExpr(keyCols)).orderBy(col(seqCol))
+    val w = Window.partitionBy(CommitRows.recordKey(keyCols.map(col))).orderBy(col(seqCol))
     val lagged = lag(rowStruct, 1).over(w)
     rows.select(
       col(opCol).as("op"),
-      keyExpr(keyCols).as("key"),
+      CommitRows.recordKey(keyCols.map(col)).as("key"),
       when(col(opCol) === OpInsert, lit(null))
         .when(col(opCol) === OpDelete, coalesce(lagged, rowStruct))
         .otherwise(lagged).as("before"),
@@ -76,7 +77,7 @@ object ChangelogSource {
     val rowStruct = struct(dataCols.map(col): _*)
     rows.select(
       lit(OpInsert).as("op"),
-      keyExpr(keyCols).as("key"),
+      CommitRows.recordKey(keyCols.map(col)).as("key"),
       lit(null).cast(structTypeOf(rows.select(dataCols.map(col): _*))).as("before"),
       rowStruct.as("after"),
       col(seqCol).cast("long").as("seq"))
@@ -102,14 +103,13 @@ object ChangelogSource {
     * merges over the prior state. */
   def applyToState(state: DataFrame, batch: DataFrame, keyCols: Seq[String],
                    tiebreak: Seq[Column] = Nil): DataFrame = {
-    val wb = Window.partitionBy(col("key")).orderBy(col("seq").desc +: tiebreak: _*)
-    val lastPerKey = batch
-      .withColumn("__rn", row_number().over(wb)).filter(col("__rn") === 1).drop("__rn")
+    val lastPerKey = CommitRows.latestPerKey(batch, Seq(col("key")), col("seq").desc +: tiebreak)
     val upserts = lastPerKey.filter(col("op") =!= OpDelete).select(col("after.*"))
     val touchedKeys = lastPerKey.select(col("key").as("__touched_key"))
     // micro-batches are small next to the state — broadcast the touched keys
     state
-      .join(broadcast(touchedKeys), keyExpr(keyCols) === col("__touched_key"), "left_anti")
+      .join(broadcast(touchedKeys),
+        CommitRows.recordKey(keyCols.map(col)) === col("__touched_key"), "left_anti")
       .unionByName(upserts)
   }
 
@@ -123,9 +123,7 @@ object ChangelogSource {
     * on both sides of an oracle comparison. */
   def materialize(changelog: DataFrame, keyCols: Seq[String],
                   tiebreak: Seq[Column] = Nil): DataFrame = {
-    val w = Window.partitionBy(col("key")).orderBy(col("seq").desc +: tiebreak: _*)
-    changelog
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+    CommitRows.latestPerKey(changelog, Seq(col("key")), col("seq").desc +: tiebreak)
       .filter(col("op") =!= OpDelete)
       .select(col("after.*"))
   }
@@ -144,9 +142,6 @@ object ChangelogSource {
       (s, e)
     }.filter { case (s, e) => e >= s }
   }
-
-  private def keyExpr(keyCols: Seq[String]): Column =
-    concat_ws("|", keyCols.map(c => col(c).cast("string")): _*)
 
   private def structTypeOf(df: DataFrame): StructType = StructType(df.schema.fields)
 }

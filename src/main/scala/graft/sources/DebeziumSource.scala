@@ -140,9 +140,9 @@ object DebeziumSource {
         when(p.getField("op").isin("c", "r"), ChangelogSource.OpInsert)
           .when(p.getField("op") === "u", ChangelogSource.OpUpdate)
           .otherwise(ChangelogSource.OpDelete).as("op"),
-        concat_ws("|", table.keyCols.map(k =>
-          coalesce(p.getField("after").getField(k), p.getField("before").getField(k))
-            .cast("string")): _*).as("key"),
+        graft.lake.CommitRows.recordKey(table.keyCols.map(k =>
+          coalesce(p.getField("after").getField(k), p.getField("before").getField(k))))
+          .as("key"),
         img("before").as("before"),
         img("after").as("after"),
         p.getField("source").getField("lsn").as("seq"))

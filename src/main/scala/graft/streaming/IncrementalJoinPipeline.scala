@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.lake.MorTable
 
 /** The continuous CDC pipeline — Entry point B of the reference
@@ -221,10 +220,7 @@ final class IncrementalJoinPipeline(
     // -- recompute the view for affected persons over NEW state ------------
     val newOut = project(joinAll(pState.read(), tState.read(), hState.read(), Some(affected)))
       .cache()
-    // last transaction per sink key (the PK-upsert collapse, zpln:2119)
-    val w = Window.partitionBy(col(sinkKey)).orderBy(histOrder.map(col(_).desc): _*)
-    val newRows = newOut.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    val newRows = lastPerSinkKey(newOut)
 
     // -- retract sink keys that vanished (person renamed / no hist left) ---
     // upserts + retractions go to the sink as ONE changelog commit, so a
@@ -282,9 +278,6 @@ final class IncrementalJoinPipeline(
     // append-only batch re-probes pinned blocks instead of re-joining the
     // two unchanged state tables every batch
     val joined = dimJoin().join(newHSide, col(histTicketFk) === col(ticketKey))
-    val w = Window.partitionBy(col(sinkKey)).orderBy(histOrder.map(col(_).desc): _*)
-    def argmaxPerKey(df: DataFrame): DataFrame = df
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
     val ordStruct = struct(histOrder.map(col): _*)
     def conditionalOut(candTop: DataFrame, curSnap: DataFrame): DataFrame = {
       val cur = curSnap.select(col(sinkKey).as("__cur_key"),
@@ -306,7 +299,7 @@ final class IncrementalJoinPipeline(
         // feeds the commit AND the image advance.
         val img =
           if (n <= IncrementalJoinPipeline.MaxBroadcastDeltaRows) broadcast(img0) else img0
-        val out = conditionalOut(argmaxPerKey(project(joined)), img)
+        val out = conditionalOut(lastPerSinkKey(project(joined)), img)
           .localCheckpoint(true)
         sink.upsertDistinct(out, batchId = batchId)
         advanceSinkImage(out, outRows = hRows) // ≥ |out|: bound, not a count job
@@ -319,7 +312,7 @@ final class IncrementalJoinPipeline(
         // replay / backfill) touches most keys anyway — one-plan full
         // compare, no cache/collect overhead.
         if (hRows <= IncrementalJoinPipeline.MaxPushedSinkKeys) {
-          val candTop = argmaxPerKey(project(joined)).cache()
+          val candTop = lastPerSinkKey(project(joined)).cache()
           try {
             val candKeys = candTop.select(col(sinkKey).cast("string"))
               .distinct().collect().map(_.getString(0)).toSeq
@@ -330,7 +323,7 @@ final class IncrementalJoinPipeline(
             sink.upsertDistinct(conditionalOut(candTop, cur), batchId = batchId)
           } finally { candTop.unpersist(); () }
         } else sink.upsertDistinct(
-          conditionalOut(argmaxPerKey(project(joined)), sink.read()), batchId = batchId)
+          conditionalOut(lastPerSinkKey(project(joined)), sink.read()), batchId = batchId)
     }
   }
 
@@ -338,6 +331,10 @@ final class IncrementalJoinPipeline(
     * `limit(0)` envelope folds to an empty LocalRelation — the common
     * "this table had no changes this batch" shape); falls back to the
     * isEmpty action otherwise. Saves two jobs per append-only batch. */
+  /** The last transaction per sink key (the PK-upsert collapse, zpln:2119). */
+  private def lastPerSinkKey(df: DataFrame): DataFrame =
+    graft.lake.CommitRows.latestPerKey(df, Seq(col(sinkKey)), histOrder.map(col(_).desc))
+
   private def knownEmpty(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan match {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l.data.isEmpty

@@ -29,7 +29,7 @@ class MultiWriterSpec extends AnyFunSuite {
       .withColumn("_record_key", col("k").cast("string"))
       .withColumn("_deleted", lit(false))
       .withColumn("_commit_seqno", lit(seq))
-      .withColumn("_commit_time", lit(MorTable.commitTimeString(seq)))
+      .withColumn("_commit_time", lit(CommitRows.commitTimeString(seq)))
       .write.mode("overwrite").parquet(s"$path/delta/$seq")
   }
 
@@ -43,7 +43,7 @@ class MultiWriterSpec extends AnyFunSuite {
     df.withColumn("_record_key", col("k").cast("string"))
       .withColumn("_deleted", lit(false))
       .withColumn("_commit_seqno", lit(seq))
-      .withColumn("_commit_time", lit(MorTable.commitTimeString(seq)))
+      .withColumn("_commit_time", lit(CommitRows.commitTimeString(seq)))
       .write.mode("overwrite").parquet(s"$path/delta/$seq")
   }
 

@@ -200,4 +200,31 @@ class TableServicesSpec extends AnyFunSuite {
     assert(!svc.runOnce())
   }
 
+  test("materialized-view refresh completes a half-done refresh of the two-commit form") {
+    // an older refresh wrote the refreshed groups at batch 2*to and the
+    // dead groups at 2*to+1; a crash between the two left the upsert
+    // committed, the delete not, and the watermark unmoved
+    val basePath = TestSpark.tmpDir("mv-orphan-base")
+    val viewPath = TestSpark.tmpDir("mv-orphan-view")
+    val t = new MorTable(spark, basePath, Seq("k"),
+      compactionDeltaCommits = 100, autoCompact = false)
+    t.upsert(Seq(("k1", "a", 1L), ("k2", "b", 2L)).toDF("k", "g", "v"), Nil, batchId = 1L)
+    val spec = MatViews.build(spark, basePath, Seq("k"), None,
+      MatViews.ViewSpec("orphan_mv", viewPath, Seq("g"),
+        Seq(MatViews.MeasureSpec("count", ""), MatViews.MeasureSpec("sum", "v")), 0L))
+    t.upsert(Seq(("k3", "a", 10L)).toDF("k", "g", "v"), Nil, batchId = 2L)
+    t.delete(Seq("k2").toDF("k"), batchId = 3L) // group b dies
+    val to = t.timeline().last.seq
+    val vt = MorTable.resolve(spark, viewPath, Seq("g"))
+    vt.upsert(vt.read().filter(col("g") === "a")
+      .withColumn("n", lit(2L)).withColumn("sum_v", lit(11L)), Nil, batchId = 2L * to)
+    val done = MatViews.refresh(spark, basePath, Seq("k"), None, spec)
+    assert(done.maintainedSeq == to)
+    assert(vt.read().collect().map(r => (r.getAs[String]("g"),
+      r.getAs[Long]("n"), r.getAs[Long]("sum_v"))).toSet == Set(("a", 2L, 11L)),
+      "the dead group must leave the view")
+    // a re-run at the same watermark is a no-op
+    assert(MatViews.refresh(spark, basePath, Seq("k"), None, done) == done)
+  }
+
 }
