@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
 import scala.collection.mutable
 
 /** Scratch diagnostic: replay one gate entry with a job listener and print
@@ -20,6 +20,7 @@ object JobAudit {
     val sites = mutable.Map.empty[String, Int].withDefaultValue(0)
     val stageTime = mutable.Map.empty[String, Long].withDefaultValue(0L)
     val stageCnt = mutable.Map.empty[String, Int].withDefaultValue(0)
+    val execStart = new java.util.concurrent.ConcurrentHashMap[Long, (Long, String)]()
     // attached after the warm-up runs below: only the reported run counts
     val stats = new JobStats {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
@@ -55,13 +56,10 @@ object JobAudit {
           stageCnt(frame) += 1
         }
       }
-    }
-    // per-SQL-execution wall + top plan node: where the driver's planning/
-    // execution round-trips go inside one entry (descriptions are empty on
-    // AQE stage futures, so job-level traces can't attribute them)
-    val execStart = new java.util.concurrent.ConcurrentHashMap[Long, (Long, String)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+      // per-SQL-execution wall + top plan node: where the driver's planning/
+      // execution round-trips go inside one entry (descriptions are empty on
+      // AQE stage futures, so job-level traces can't attribute them)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
           execStart.put(s.executionId,
             (s.time, s.physicalPlanDescription.linesIterator
@@ -73,7 +71,7 @@ object JobAudit {
           }
         case _ => ()
       }
-    })
+    }
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     // SPARK_GRAFT_AUDIT=<gate entry name> audits that entry; default s8 core
     val fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =

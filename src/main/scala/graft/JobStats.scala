@@ -8,21 +8,18 @@ import scala.collection.mutable
 
 /** The one Spark listener graft's diagnostics share (`Bench`'s JOBSTATS
   * line, `JobAudit`, the job-budget spec): jobs started, summed task run
-  * time, and the wall span of every finished job. Events arrive on the
-  * listener bus asynchronously — call [[JobStats.drain]] before reading.
-  * Open for extension: a diagnostic that needs more per-job detail
-  * overrides a callback and calls `super`. */
+  * time, and the wall span of every finished job. Call [[JobStats.drain]]
+  * before reading. A diagnostic needing more detail overrides a callback
+  * and calls `super`. */
 class JobStats extends SparkListener {
   private val jobCount = new AtomicLong
   private val taskMs = new AtomicLong
   private val startMs = mutable.Map.empty[Int, Long]
   private val spanBuf = mutable.ArrayBuffer.empty[(Long, Long)]
 
-  /** Jobs started so far. */
   def jobs: Long = jobCount.get()
-  /** Summed executor run time of finished tasks, ms. */
   def taskTimeMs: Long = taskMs.get()
-  /** (start, end) epoch-ms of every finished job. */
+  /** (start, end) epoch ms of every finished job. */
   def spans: Seq[(Long, Long)] = synchronized(spanBuf.toList)
 
   override def onJobStart(j: SparkListenerJobStart): Unit = {

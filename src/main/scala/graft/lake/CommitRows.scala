@@ -5,14 +5,15 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** What a commit row is, for both lake table forms and every writer that
-  * produces or reads their rows (the Hudi key generator, precombine rule
-  * and commit metadata, written once). Every stored row carries
-  * `_record_key` ([[recordKey]]), `_deleted`, and the [[stamp]]
-  * columns `_commit_seqno` and `_commit_time`; the surviving version of a
-  * key is [[latestPerKey]]; [[Expectations]] guard what a commit may hold.
-  * A new write verb goes through these — never its own copy. */
+/** What a commit row is, for both lake table forms and every path that
+  * writes or reads their rows (the Hudi key generator, precombine rule and
+  * commit metadata): the record key, the stamp, the surviving version of a
+  * key. [[Expectations]] guard what a commit may hold. A new write verb
+  * goes through these, never its own copy. */
 object CommitRows {
+  /** The lake columns every stored row carries. */
+  val metaCols: Seq[String] = Seq("_record_key", "_deleted", "_commit_seqno", "_commit_time")
+
   /** The record key: the key columns cast to string, joined by `|`. */
   def recordKey(cols: Seq[Column]): Column = concat_ws("|", cols.map(_.cast("string")): _*)
 
@@ -28,6 +29,17 @@ object CommitRows {
     df.withColumn("_commit_seqno", lit(seqno))
       .withColumn("_commit_time", lit(commitTimeString(commitMs)))
 
+  /** An external source adopted as commit rows (bootstrap) carries every
+    * key column and no lake column. */
+  def requireSource(fieldNames: Seq[String], keyCols: Seq[String], source: String): Unit = {
+    val missing = keyCols.filterNot(fieldNames.contains)
+    require(missing.isEmpty,
+      s"bootstrap source $source lacks key column(s): ${missing.mkString(", ")}")
+    val clash = fieldNames.filter(metaCols.contains)
+    require(clash.isEmpty,
+      s"bootstrap source $source carries reserved lake column(s): ${clash.mkString(", ")}")
+  }
+
   /** `_commit_time`'s format: UTC `yyyyMMddHHmmssSSS`. */
   def commitTimeString(ms: Long): String =
     java.time.format.DateTimeFormatter.ofPattern("yyyyMMddHHmmssSSS")
@@ -37,24 +49,17 @@ object CommitRows {
 
 /** WRITE EXPECTATIONS (the Hudi pre-commit-validator / Delta CHECK
   * constraint analog): named predicates every NON-tombstone row of a
-  * commit must satisfy. Three modes:
-  *
-  *  - `fail` (default): a violating commit is REFUSED before its instant
-  *    publishes — [[guard]] counts violations on the commit write itself
-  *    via an Observation (zero extra jobs), and the caller removes what it
-  *    staged.
+  * commit must satisfy, per table handle (not persisted). A predicate
+  * evaluating to NULL passes (SQL CHECK semantics). Modes:
+  *  - `fail` (default): [[guard]] counts violations on the commit write
+  *    itself (an Observation, no extra job); the commit is refused before
+  *    its instant publishes.
   *  - `drop`: [[dropViolating]] filters violating rows out of the raw
-  *    batch (quarantine-by-omission), a map-side filter with no extra job.
-  *    Applied BEFORE per-key dedup on the upsert family, so a violating
-  *    latest version never shadows an older passing version of the key.
-  *  - `quarantine` (the DLT `expect_or_quarantine` parity mode): as
-  *    `drop`, and the violating rows land in the table's side relation
-  *    (`<path>/quarantine/`, read back via [[Expectations.readQuarantine]])
-  *    tagged with the failed rule name(s) — the one added job.
-  *
-  * SQL CHECK-constraint null semantics: a predicate evaluating to NULL
-  * PASSES — only a definite FALSE violates. Per-HANDLE write
-  * configuration like Hudi validators, not persisted table state. */
+  *    batch, before per-key dedup, so a violating latest version never
+  *    shadows an older passing one.
+  *  - `quarantine` (DLT `expect_or_quarantine`): as `drop`, and the
+  *    violating rows land in `<path>/quarantine/`
+  *    ([[Expectations.readQuarantine]]) — the one added job. */
 final class Expectations(exps: Seq[(String, Column)], mode: String) {
   require(Expectations.modes(mode),
     s"expectation mode must be one of ${Expectations.modes.mkString(", ")}, got '$mode'")
@@ -62,10 +67,9 @@ final class Expectations(exps: Seq[(String, Column)], mode: String) {
   private def filtering = exps.nonEmpty && mode != "fail"
   private def names = exps.map(_._1).mkString(", ")
 
-  /** DROP/QUARANTINE mode: the batch's passing rows. QUARANTINE mode first
-    * appends the violating rows to `<tablePath>/quarantine`, tagged `_rule`
-    * (the failed rule names), `_qtime` and `_batch`. Identity in FAIL
-    * mode, which [[guard]] enforces at commit instead. */
+  /** The batch's passing rows (identity in FAIL mode). QUARANTINE mode
+    * first appends the violators to `<tablePath>/quarantine`, tagged
+    * `_rule` (failed rule names), `_qtime` and `_batch`. */
   def dropViolating(batch: DataFrame, batchId: Long, tablePath: String): DataFrame =
     if (!filtering) batch
     else {
@@ -81,9 +85,8 @@ final class Expectations(exps: Seq[(String, Column)], mode: String) {
       batch.filter(exps.map { case (_, p) => coalesce(p, lit(true)) }.reduce(_ && _))
     }
 
-  /** FAIL mode: `rows` (carrying `_deleted`) observed for violations by
-    * their next action, and the [[Expectations.Guard]] to check once that
-    * action — the commit write — has run. A no-op guard otherwise. */
+  /** FAIL mode: `rows` (carrying `_deleted`) observed for violations, and
+    * the guard to check once the commit write has run them. */
   def guard(rows: DataFrame): (DataFrame, Expectations.Guard) =
     if (exps.isEmpty || mode != "fail") (rows, Expectations.Guard.none)
     else {
@@ -120,29 +123,18 @@ object Expectations {
   }
   object Guard { private[Expectations] val none = new Guard(None, "") }
 
-  /** The QUARANTINE side relation of the table at `tablePath`: rows refused
-    * by quarantine-mode expectations, tagged `_rule` (failed rule names),
-    * `_qtime` (refusal time) and `_batch` (micro-batch id; -1 for ad-hoc
-    * writes).
-    *
-    * CONTRACT — at-least-once: the quarantine write lands BEFORE the
-    * commit claims its seq. A COMMITTED batch never re-appends (replays
-    * no-op before the expectations filter), but a commit that fails
-    * mid-publish (OCC loss, crash) re-evaluates the batch on retry and
-    * appends its violators AGAIN — dedup replays by `_batch` (e.g.
-    * `row_number() over (partition by <key>, _batch …) = 1`) when
-    * exactly-once matters. A NONDETERMINISTIC batch is additionally
-    * evaluated twice (violator filter vs survivor filter) and the two
-    * sides can disagree — pin such a batch (localCheckpoint) before
-    * upserting. Loud when nothing was ever quarantined (there is no
-    * schema to show). */
+  /** The quarantine side relation of the table at `tablePath`.
+    * AT-LEAST-ONCE: the quarantine write lands before the commit claims
+    * its seq. A committed batch never re-appends (replays no-op first),
+    * but a commit that fails mid-publish appends its violators again on
+    * retry — dedup by `_batch` when exactly-once matters. Pin a
+    * nondeterministic batch (localCheckpoint) first: it is evaluated
+    * twice. Loud when nothing was ever quarantined. */
   def readQuarantine(spark: SparkSession, tablePath: String): DataFrame = {
     val q = new Path(s"$tablePath/quarantine")
     if (!q.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(q))
       throw new IllegalStateException(s"lake table at $tablePath has no quarantined rows")
-    // mergeSchema: pre-upgrade quarantine files lack `_batch`; without the
-    // merge the resolved schema is file-listing-dependent and `_batch` can
-    // silently disappear from the documented dedup-by-_batch replay recipe
+    // mergeSchema: older quarantine files lack `_batch`
     spark.read.option("mergeSchema", "true").parquet(MorTable.globSafe(q.toString))
   }
 }

@@ -357,15 +357,8 @@ final class MorTable(
       s"bootstrap requires an empty table, but $path has commits")
     val src = new Path(sourceDir)
     require(fs.exists(src), s"bootstrap source $sourceDir does not exist")
-    val schema = scanDir(sourceDir).schema // parquet footers only, no job
-    val missing = keyCols.filterNot(schema.fieldNames.contains)
-    require(missing.isEmpty,
-      s"bootstrap source $sourceDir lacks key column(s): ${missing.mkString(", ")}")
-    val metaClash = schema.fieldNames.filter(Set(
-      "_record_key", "_deleted", "_commit_seqno", "_commit_time"))
-    require(metaClash.isEmpty,
-      s"bootstrap source $sourceDir carries reserved lake column(s): " +
-        metaClash.mkString(", "))
+    // parquet footers only, no job
+    CommitRows.requireSource(scanDir(sourceDir).schema.fieldNames.toSeq, keyCols, sourceDir)
     val seq = allocateSeq("compact")
     // same marker-then-timeline listing order as adoptBase: a delta that
     // slipped in below our seq must stay replayed, not silently folded
@@ -2089,7 +2082,7 @@ final class MorTable(
     dropMeta(snapshotExcludingBatch(batchId))
 
   private def dropMeta(df: DataFrame): DataFrame =
-    df.drop("_record_key", "_deleted", "_commit_seqno", "_commit_time")
+    df.drop(CommitRows.metaCols: _*)
 
   /** Data schema for tombstone padding. Derived from the full snapshot
     * plan on purpose: schema analysis only reads parquet footers (no jobs),
@@ -3572,7 +3565,7 @@ object MorTable {
     }
     val raw = spark.read.parquet(globSafe(files): _*)
     val live = if (raw.columns.contains("_deleted")) raw.filter(!col("_deleted")) else raw
-    live.drop("_record_key", "_deleted", "_commit_seqno", "_commit_time")
+    live.drop(CommitRows.metaCols: _*)
   }
 
   /** Open an existing table or prepare a handle for a new one. */

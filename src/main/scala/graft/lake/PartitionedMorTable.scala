@@ -356,21 +356,24 @@ final class PartitionedMorTable(
     * ([[Expectations.readQuarantine]]). */
   def readQuarantine(): DataFrame = Expectations.readQuarantine(spark, path)
 
-  /** The one staged partitioned commit every write verb runs: claim a
-    * parent token of `kind`, stamp `rows` (commit rows short of the
-    * stamp) with it, route every row to its partition in ONE
-    * `partitionBy` write, refuse the write on a FAIL-mode expectation
-    * violation, then adopt each staged partition dir into its child and
-    * publish the parent instant. `prove` sees the stamped rows before the
-    * write and returns the rows to write plus a per-partition
+  /** The one staged partitioned commit every write verb runs. A replayed
+    * batch is a no-op before `rows` (commit rows short of the stamp) is
+    * built. Otherwise: claim a parent token of `kind`, stamp the rows with
+    * it, route every row to its partition in ONE `partitionBy` write,
+    * refuse the write on a FAIL-mode expectation violation, adopt each
+    * staged partition dir into its child, publish the parent instant, and
+    * (for a `delta`) compact what is due. `prove` sees the stamped rows
+    * before the write and returns the rows to write plus a per-partition
     * insert-only verdict ([[upsertIfNew]]); the verdicts are returned. */
-  private def stagedCommit(kind: String, batchId: Long, rows: DataFrame,
+  private def stagedCommit(kind: String, batchId: Long, rows: => DataFrame,
                            prove: DataFrame => (DataFrame, Map[String, Boolean]) =
                              staged => (staged, Map.empty)): Map[String, Boolean] = {
+    if (isCommitted(batchId)) return Map.empty
+    val unstamped = rows
     val token = nextToken(kind)
-    renewingParentMarker(token, kind) {
+    val verdicts = renewingParentMarker(token, kind) {
       val now = System.currentTimeMillis()
-      val (staged, verdicts) = prove(CommitRows.stamp(rows, token, now)
+      val (staged, verdicts) = prove(CommitRows.stamp(unstamped, token, now)
         .withColumn("__p", col(partCol).cast("string")))
       val (checked, guard) = expectations.guard(staged)
       val stagingDir = new Path(hPath, s".staging/$token")
@@ -385,6 +388,8 @@ final class PartitionedMorTable(
       writeParentInstant(MorTable.Instant(token, kind, batchId, now))
       verdicts
     }
+    if (kind == "delta" && autoCompact) maybeCompact()
+    verdicts
   }
 
   /** `df` with its record key and tombstone flag. */
@@ -404,10 +409,8 @@ final class PartitionedMorTable(
     * partition column as part of the key if it can. */
   def upsert(batch: DataFrame, orderWithinBatch: Seq[Column],
              batchId: Long = -1L): PartitionedMorTable = {
-    if (isCommitted(batchId)) return this // fully replayed batch — no-op
     stagedCommit("delta", batchId, withMeta(dedupBatch(
       expectations.dropViolating(batch, batchId, path), orderWithinBatch), deleted = false))
-    if (autoCompact) { maybeCompact(); () }
     this
   }
 
@@ -452,7 +455,6 @@ final class PartitionedMorTable(
   def upsertIfNew(batch: DataFrame, orderWithinBatch: Seq[Column],
                   batchId: Long = -1L,
                   bloomBits: Int = 1 << 17): Map[String, Boolean] = {
-    if (isCommitted(batchId)) return Map.empty
     graft.GraftFunctions.register(spark)
     // the stamped batch is pinned, its keys summarized per partition and
     // probed against each child before the one staged write
@@ -519,10 +521,8 @@ final class PartitionedMorTable(
         .filterNot(bootDowngrade).toSet
       (staged, stats.map(r => r.getString(0) -> proven(r.getString(0))).toMap)
     }
-    val verdicts = stagedCommit("delta", batchId,
+    stagedCommit("delta", batchId,
       withMeta(dedupBatch(batch, orderWithinBatch), deleted = false), prove)
-    if (autoCompact) { maybeCompact(); () }
-    verdicts
   }
 
   /** Predicate delete across partitions (`DELETE FROM t WHERE …`):
@@ -592,7 +592,6 @@ final class PartitionedMorTable(
     * as `ChangelogSource.materialize`). */
   def applyChangelog(envelope: DataFrame, batchId: Long,
                      tiebreak: Seq[String]): PartitionedMorTable = {
-    if (isCommitted(batchId)) return this // replayed micro-batch — no-op
     val pOf = (image: Column) => image.getField(partCol).cast("string")
     val events = envelope.select(
       when(col("op") === "D", col("before")).otherwise(col("after")).as("__r"),
@@ -612,7 +611,6 @@ final class PartitionedMorTable(
     stagedCommit("delta", batchId, rows
       .withColumn("_record_key", CommitRows.recordKey(keyCols.map(col)))
       .withColumnRenamed("__del", "_deleted"))
-    if (autoCompact) { maybeCompact(); () }
     this
   }
 
@@ -624,7 +622,6 @@ final class PartitionedMorTable(
     * rows never surface, so no schema padding is needed. Consumes a parent
     * commit token so delete/upsert LWW ordering stays table-global. */
   def delete(keys: DataFrame, batchId: Long = -1L): PartitionedMorTable = {
-    if (isCommitted(batchId)) return this
     stagedCommit("delete", batchId,
       withMeta(keys.select((partCol +: keyCols).distinct.map(col): _*), deleted = true))
     this
@@ -640,9 +637,6 @@ final class PartitionedMorTable(
   // O(partitions) work left is the per-child timeline listing, issued
   // concurrently below; the data-file listing inside the single scan is
   // Spark's own parallel InMemoryFileIndex.
-
-  private val metaCols =
-    Seq("_record_key", "_deleted", "_commit_seqno", "_commit_time")
 
   /** Run one task per selected partition concurrently (child timelines
     * are independent; a sequential loop over 1000 partitions would make
@@ -721,7 +715,7 @@ final class PartitionedMorTable(
     * listing order, so pin the prefix deterministically). */
   private def orderedDataCols(scanCols: Seq[String]): Seq[String] =
     (keyCols :+ partCol) ++
-      scanCols.filterNot(c => metaCols.contains(c) ||
+      scanCols.filterNot(c => CommitRows.metaCols.contains(c) ||
         c == partCol || keyCols.contains(c))
 
   /** Snapshot read over the named partitions only (partition pruning), or
@@ -1354,7 +1348,7 @@ final class PartitionedMorTable(
       // catalog: schema from the base scan (footers only, no jobs); meta
       // columns dropped — external readers apply the declared filter first
       val schema = org.apache.spark.sql.types.StructType(
-        scanDirs(bases).schema.filterNot(f => metaCols.contains(f.name)))
+        scanDirs(bases).schema.filterNot(f => CommitRows.metaCols.contains(f.name)))
       def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
       // declared compaction/write policy travels with the catalog entry so
       // an external catalog sync sees the full table definition (kept
@@ -1529,14 +1523,7 @@ final class PartitionedMorTable(
     val disc = spark.read.option("basePath", sourceDir)
       .option("mergeSchema", "true")
       .parquet(MorTable.globSafe(parts.map(_._2)): _*)
-    val missing = keyCols.filterNot(disc.schema.fieldNames.contains)
-    require(missing.isEmpty,
-      s"bootstrap source $sourceDir lacks key column(s): ${missing.mkString(", ")}")
-    val metaClash = disc.schema.fieldNames.filter(Set(
-      "_record_key", "_deleted", "_commit_seqno", "_commit_time"))
-    require(metaClash.isEmpty,
-      s"bootstrap source $sourceDir carries reserved lake column(s): " +
-        metaClash.mkString(", "))
+    CommitRows.requireSource(disc.schema.fieldNames.toSeq, keyCols, sourceDir)
     // the value must live ONLY in the dir name: a data-side copy would
     // make the discovery scan ambiguous and the synthesis double-bind it
     val fileSchema = spark.read.parquet(MorTable.globSafe(parts.head._2)).schema
