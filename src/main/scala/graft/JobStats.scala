@@ -1,7 +1,6 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.graft.GraftSqlShim
 import scala.collection.mutable
@@ -34,15 +33,8 @@ class JobStats extends SparkListener {
 }
 
 object JobStats {
-  /** A new [[JobStats]] registered on `sc`. */
-  def attach(sc: SparkContext): JobStats = {
-    val s = new JobStats
-    sc.addSparkListener(s)
-    s
-  }
-
   /** Block until every listener event posted so far has been delivered. */
-  def drain(sc: SparkContext): Unit = GraftSqlShim.drainListenerBus(sc)
+  def drain(sc: org.apache.spark.SparkContext): Unit = GraftSqlShim.drainListenerBus(sc)
 
   /** Wall time covered by at least one running job: overlapping spans
     * merged, so the rest of a call's wall is driver-only work (planning,

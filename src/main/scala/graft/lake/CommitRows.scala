@@ -17,6 +17,11 @@ object CommitRows {
   /** The record key: the key columns cast to string, joined by `|`. */
   def recordKey(cols: Seq[Column]): Column = concat_ws("|", cols.map(_.cast("string")): _*)
 
+  /** `df` with its record key over `keyCols` and its tombstone flag. */
+  def withMeta(df: DataFrame, keyCols: Seq[String], deleted: Boolean): DataFrame =
+    df.withColumn("_record_key", recordKey(keyCols.map(col)))
+      .withColumn("_deleted", lit(deleted))
+
   /** The one last-write-wins window: per `by` group, the row that sorts
     * first by `order` (pass descending orders for "latest"). */
   def latestPerKey(df: DataFrame, by: Seq[Column], order: Seq[Column]): DataFrame = {
@@ -121,7 +126,7 @@ object Expectations {
       }
     }
   }
-  object Guard { private[Expectations] val none = new Guard(None, "") }
+  object Guard { private[lake] val none = new Guard(None, "") }
 
   /** The quarantine side relation of the table at `tablePath`.
     * AT-LEAST-ONCE: the quarantine write lands before the commit claims

@@ -301,8 +301,8 @@ final class MorTable(
     // replayed batch: no-op BEFORE dropViolating — its quarantine write is
     // eager, and a committed batch must not re-append its violators
     if (isCommitted(batchId)) return this
-    commitDelta(withMeta(dedupBatch(expectations.dropViolating(batch, batchId, path),
-      orderWithinBatch), deleted = false), batchId)
+    commitDelta(CommitRows.withMeta(dedupBatch(expectations.dropViolating(batch, batchId, path),
+      orderWithinBatch), keyCols, deleted = false), batchId)
     this
   }
 
@@ -316,7 +316,8 @@ final class MorTable(
     * violating batch surfaces as nondeterministic LWW within the commit. */
   def upsertDistinct(batch: DataFrame, batchId: Long = -1L): MorTable = {
     if (isCommitted(batchId)) return this // see upsert: pre-quarantine no-op
-    commitDelta(withMeta(expectations.dropViolating(batch, batchId, path), deleted = false),
+    commitDelta(CommitRows.withMeta(expectations.dropViolating(batch, batchId, path),
+      keyCols, deleted = false),
       batchId)
     this
   }
@@ -568,7 +569,7 @@ final class MorTable(
                   batchId: Long = -1L, bloomBits: Int = 1 << 17): Boolean = {
     if (isCommitted(batchId)) return false // replayed micro-batch — no-op
     graft.GraftFunctions.register(spark)
-    val deduped = withMeta(dedupBatch(batch, orderWithinBatch), deleted = false)
+    val deduped = CommitRows.withMeta(dedupBatch(batch, orderWithinBatch), keyCols, deleted = false)
       .localCheckpoint(true) // one materialization: probe agg + commit write
     val a = deduped.agg(
       call_function("key_bloom_agg", col("_record_key"), lit(bloomBits)).as("f"),
@@ -629,7 +630,7 @@ final class MorTable(
       .foldLeft(keys.select(keyCols.map(col): _*)) { (df, f) =>
         df.withColumn(f.name, lit(null).cast(f.dataType))
       }
-    commitDelta(withMeta(padded, deleted = true), batchId)
+    commitDelta(CommitRows.withMeta(padded, keyCols, deleted = true), batchId)
     this
   }
 
@@ -647,8 +648,8 @@ final class MorTable(
       .foldLeft(deadKeys.select(keyCols.map(col): _*)) { (df, f) =>
         df.withColumn(f.name, lit(null).cast(f.dataType))
       }
-    commitDelta(withMeta(rows, deleted = false)
-      .unionByName(withMeta(padded, deleted = true)), batchId)
+    commitDelta(CommitRows.withMeta(rows, keyCols, deleted = false)
+      .unionByName(CommitRows.withMeta(padded, keyCols, deleted = true)), batchId)
     this
   }
 
@@ -1146,7 +1147,8 @@ final class MorTable(
       cur.fields ++ newCols.map(_.copy(nullable = true)))
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], widened)
-    commitDelta(withMeta(empty, deleted = false), batchId = -1L, insertOnly = true)
+    commitDelta(CommitRows.withMeta(empty, keyCols, deleted = false), batchId = -1L,
+      insertOnly = true)
     this
   }
 
@@ -1187,10 +1189,6 @@ final class MorTable(
   private def dedupBatch(batch: DataFrame, order: Seq[Column]): DataFrame =
     if (order.isEmpty) batch
     else CommitRows.latestPerKey(batch, keyCols.map(col), order.map(_.desc))
-
-  private def withMeta(df: DataFrame, deleted: Boolean): DataFrame =
-    df.withColumn("_record_key", CommitRows.recordKey(keyCols.map(col)))
-      .withColumn("_deleted", lit(deleted))
 
   private def commitDelta(df: DataFrame, batchId: Long,
                           insertOnly: Boolean = false): Unit = synchronized {
@@ -1323,7 +1321,7 @@ final class MorTable(
         case Some((pc, pv, pt)) => scanDir(d).withColumn(pc, lit(pv).cast(pt))
         case None => scanDir(d)
       }
-      CommitRows.stamp(withMeta(raw, deleted = false), c.seq, c.commitMs)
+      CommitRows.stamp(CommitRows.withMeta(raw, keyCols, deleted = false), c.seq, c.commitMs)
     case None => scanDir(s"$path/base/${c.seq}")
   }
 

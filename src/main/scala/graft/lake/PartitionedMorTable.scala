@@ -360,7 +360,8 @@ final class PartitionedMorTable(
     * batch is a no-op before `rows` (commit rows short of the stamp) is
     * built. Otherwise: claim a parent token of `kind`, stamp the rows with
     * it, route every row to its partition in ONE `partitionBy` write,
-    * refuse the write on a FAIL-mode expectation violation, adopt each
+    * refuse the write on a FAIL-mode expectation violation (a `delete`
+    * holds only tombstones and is not checked), adopt each
     * staged partition dir into its child, publish the parent instant, and
     * (for a `delta`) compact what is due. `prove` sees the stamped rows
     * before the write and returns the rows to write plus a per-partition
@@ -375,7 +376,9 @@ final class PartitionedMorTable(
       val now = System.currentTimeMillis()
       val (staged, verdicts) = prove(CommitRows.stamp(unstamped, token, now)
         .withColumn("__p", col(partCol).cast("string")))
-      val (checked, guard) = expectations.guard(staged)
+      val (checked, guard) =
+        if (kind == "delete") (staged, Expectations.Guard.none)
+        else expectations.guard(staged)
       val stagingDir = new Path(hPath, s".staging/$token")
       checked.write.partitionBy("__p").mode("overwrite").parquet(stagingDir.toString)
       // a refusal is not a crash: remove the claim with the staged rows
@@ -392,11 +395,6 @@ final class PartitionedMorTable(
     verdicts
   }
 
-  /** `df` with its record key and tombstone flag. */
-  private def withMeta(df: DataFrame, deleted: Boolean): DataFrame =
-    df.withColumn("_record_key", CommitRows.recordKey(keyCols.map(col)))
-      .withColumn("_deleted", lit(deleted))
-
   /** Per-(partition, key) batch dedup, last by `order`. */
   private def dedupBatch(batch: DataFrame, order: Seq[Column]): DataFrame =
     if (order.isEmpty) batch
@@ -409,8 +407,9 @@ final class PartitionedMorTable(
     * partition column as part of the key if it can. */
   def upsert(batch: DataFrame, orderWithinBatch: Seq[Column],
              batchId: Long = -1L): PartitionedMorTable = {
-    stagedCommit("delta", batchId, withMeta(dedupBatch(
-      expectations.dropViolating(batch, batchId, path), orderWithinBatch), deleted = false))
+    stagedCommit("delta", batchId, CommitRows.withMeta(dedupBatch(
+      expectations.dropViolating(batch, batchId, path), orderWithinBatch),
+      keyCols, deleted = false))
     this
   }
 
@@ -522,7 +521,7 @@ final class PartitionedMorTable(
       (staged, stats.map(r => r.getString(0) -> proven(r.getString(0))).toMap)
     }
     stagedCommit("delta", batchId,
-      withMeta(dedupBatch(batch, orderWithinBatch), deleted = false), prove)
+      CommitRows.withMeta(dedupBatch(batch, orderWithinBatch), keyCols, deleted = false), prove)
   }
 
   /** Predicate delete across partitions (`DELETE FROM t WHERE …`):
@@ -623,7 +622,8 @@ final class PartitionedMorTable(
     * commit token so delete/upsert LWW ordering stays table-global. */
   def delete(keys: DataFrame, batchId: Long = -1L): PartitionedMorTable = {
     stagedCommit("delete", batchId,
-      withMeta(keys.select((partCol +: keyCols).distinct.map(col): _*), deleted = true))
+      CommitRows.withMeta(keys.select((partCol +: keyCols).distinct.map(col): _*),
+        keyCols, deleted = true))
     this
   }
 
@@ -1556,7 +1556,8 @@ final class PartitionedMorTable(
     val scan = spark.read.option("basePath", parent.bootstrapDir.get)
       .option("mergeSchema", "true")
       .parquet(MorTable.globSafe(boots.map(_._2.bootstrapDir.get)): _*)
-    Some(CommitRows.stamp(withMeta(scan, deleted = false), parent.seq, parent.commitMs))
+    Some(CommitRows.stamp(CommitRows.withMeta(scan, keyCols, deleted = false),
+      parent.seq, parent.commitMs))
   }
 
   /** Shallow CLONE, partitioned form ([[MorTable.cloneTo]] semantics

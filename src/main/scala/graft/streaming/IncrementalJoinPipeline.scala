@@ -327,14 +327,14 @@ final class IncrementalJoinPipeline(
     }
   }
 
-  /** Emptiness without a cluster job when the optimizer can prove it (a
-    * `limit(0)` envelope folds to an empty LocalRelation — the common
-    * "this table had no changes this batch" shape); falls back to the
-    * isEmpty action otherwise. Saves two jobs per append-only batch. */
   /** The last transaction per sink key (the PK-upsert collapse, zpln:2119). */
   private def lastPerSinkKey(df: DataFrame): DataFrame =
     graft.lake.CommitRows.latestPerKey(df, Seq(col(sinkKey)), histOrder.map(col(_).desc))
 
+  /** Emptiness without a cluster job when the optimizer can prove it (a
+    * `limit(0)` envelope folds to an empty LocalRelation — the common
+    * "this table had no changes this batch" shape); falls back to the
+    * isEmpty action otherwise. Saves two jobs per append-only batch. */
   private def knownEmpty(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan match {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l.data.isEmpty

@@ -14,21 +14,24 @@ class CommitRowsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** A table form: its name, how to open a fresh one at a path, and its
+  /** A table form: its name, how to open a fresh one at a path, its
     * `upsertIfNew` (not a [[LakeTable]] verb: the two forms return
-    * different verdicts). */
+    * different verdicts) and its `delete` of (k, p) rows. */
   private case class Form(name: String, open: String => LakeTable,
-                          upsertIfNew: (LakeTable, DataFrame, Long) => Any)
+                          upsertIfNew: (LakeTable, DataFrame, Long) => Any,
+                          delete: (LakeTable, DataFrame, Long) => Any)
 
   private val forms = Seq(
     Form("unpartitioned",
       path => new MorTable(spark, path, Seq("k"), compactionDeltaCommits = 1000,
         autoCompact = false),
-      (t, b, id) => t.asInstanceOf[MorTable].upsertIfNew(b, Nil, batchId = id)),
+      (t, b, id) => t.asInstanceOf[MorTable].upsertIfNew(b, Nil, batchId = id),
+      (t, keys, id) => t.asInstanceOf[MorTable].delete(keys.select("k"), batchId = id)),
     Form("partitioned",
       path => new PartitionedMorTable(spark, path, Seq("k"), "p",
         compactionDeltaCommits = 1000, autoCompact = false),
-      (t, b, id) => t.asInstanceOf[PartitionedMorTable].upsertIfNew(b, Nil, batchId = id)))
+      (t, b, id) => t.asInstanceOf[PartitionedMorTable].upsertIfNew(b, Nil, batchId = id),
+      (t, keys, id) => t.asInstanceOf[PartitionedMorTable].delete(keys, batchId = id)))
 
   private def rows(rs: (Long, String, Int)*): DataFrame = rs.toDF("k", "p", "v")
 
@@ -70,6 +73,19 @@ class CommitRowsSpec extends AnyFunSuite {
       t.applyChangelog(envelope.withColumn("after",
         col("after").withField("v", lit(11))), batchId = 4L)
       assert(current(t) == Seq((1L, "a", 11)))
+    }
+
+    test(s"${form.name}: FAIL-mode expectations let delete and deleteWhere commit " +
+      "(tombstones never violate) and leave no inflight marker") {
+      val path = TestSpark.tmpDir("commit-rows-delete")
+      val t = form.open(path)
+      t.upsert(rows((1L, "a", 10), (2L, "b", 20), (3L, "c", 30)), Nil, batchId = 1L)
+      t.withExpectations(Seq("v_positive" -> (col("v") > 0)), "fail")
+      form.delete(t, Seq((1L, "a")).toDF("k", "p"), 2L)
+      t.deleteWhere(col("k") === 2L, batchId = 3L)
+      assert(current(t) == Seq((3L, "c", 30)))
+      assert(!commitFiles(path).exists(f => f.endsWith(".inflight") || f.contains(".staging")),
+        commitFiles(path))
     }
 
     test(s"${form.name}: updateWhere refuses an unknown SET column and commits nothing; " +

@@ -13,7 +13,11 @@ import graft.{JobStats, TestSpark}
   * change removes a job, never raise one. */
 class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
-  private lazy val stats = JobStats.attach(spark.sparkContext)
+  private lazy val stats = {
+    val s = new JobStats
+    spark.sparkContext.addSparkListener(s)
+    s
+  }
 
   override def afterAll(): Unit = {
     spark.sparkContext.removeSparkListener(stats)
