@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.graft.GraftSqlShim
 import scala.collection.mutable
@@ -34,7 +35,7 @@ class JobStats extends SparkListener {
 
 object JobStats {
   /** Block until every listener event posted so far has been delivered. */
-  def drain(sc: org.apache.spark.SparkContext): Unit = GraftSqlShim.drainListenerBus(sc)
+  def drain(sc: SparkContext): Unit = GraftSqlShim.drainListenerBus(sc)
 
   /** Wall time covered by at least one running job: overlapping spans
     * merged, so the rest of a call's wall is driver-only work (planning,
