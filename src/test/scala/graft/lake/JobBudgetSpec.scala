@@ -66,6 +66,29 @@ class JobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     "updateWhere" -> jobs(t.updateWhere(col("k") < 30, Map("v" -> lit(0)), batchId = 6L)),
     "read" -> jobs(t.read().collect()))
 
+  /** Compaction and clean on a table with two deltas, then minor
+    * compaction after one more delta over part of the key range. */
+  private def services(t: LakeTable, parts: Int): Seq[(String, Long)] = {
+    t.upsert(rows(0 until 40, parts), Nil, batchId = 1L)
+    t.upsert(rows(20 until 60, parts, v = 2), Nil, batchId = 2L)
+    val compact = jobs(t.runCompaction("full"))
+    t.upsert(rows(50 until 55, parts, v = 3), Nil, batchId = 3L)
+    val minor = jobs(t.runCompaction("minor"))
+    Seq("compact" -> compact, "compactMinor" -> minor, "clean" -> jobs(t.clean()))
+  }
+
+  test("unpartitioned compaction and clean stay within their job budgets") {
+    val t = new MorTable(spark, graft.TempDirs.create("budget-mor-svc"), Seq("k"),
+      compactionDeltaCommits = 1000, autoCompact = false, writePartitions = 2)
+    assertWithin(Map("compact" -> 6L, "compactMinor" -> 11L, "clean" -> 0L), services(t, 1))
+  }
+
+  test("partitioned compaction and clean stay within their job budgets (4 partitions)") {
+    val t = new PartitionedMorTable(spark, graft.TempDirs.create("budget-pmor-svc"), Seq("k"),
+      "p", compactionDeltaCommits = 1000, autoCompact = false, writePartitions = 2)
+    assertWithin(Map("compact" -> 15L, "compactMinor" -> 28L, "clean" -> 0L), services(t, 4))
+  }
+
   test("unpartitioned verbs stay within their job budgets") {
     val t = new MorTable(spark, graft.TempDirs.create("budget-mor"), Seq("k"),
       compactionDeltaCommits = 1000, autoCompact = false)
