@@ -112,15 +112,15 @@ object Expectations {
 
   /** The FAIL-mode check on one commit write. */
   final class Guard private[Expectations] (obs: Option[Observation], names: String) {
-    /** After the observed write ran: when a row violated, run `discard`
-      * (remove what the commit staged) and refuse `commit`. */
-    def refuseIfViolated(commit: String)(discard: => Unit): Unit = obs.foreach { o =>
+    /** After the observed write ran: when a row violated, refuse `commit`
+      * (throw inside [[Timeline.commit]], which releases the claim and
+      * removes what the commit staged). */
+    def refuseIfViolated(commit: String): Unit = obs.foreach { o =>
       val bad = o.get.get("bad") match {
         case Some(l: java.lang.Long) => l.longValue()
         case _ => 0L
       }
       if (bad > 0L) {
-        discard
         throw new IllegalArgumentException(
           s"write expectations ($names) violated by $bad row(s) — $commit refused")
       }

@@ -12,20 +12,15 @@ import java.nio.charset.StandardCharsets
   *
   * On-disk layout (all paths via Hadoop FileSystem):
   * {{{
-  *   <path>/timeline/<seq>.<type>.json   commit metadata (a commit is visible
-  *                                       iff its timeline file exists; data
-  *                                       files land first)
+  *   <path>/timeline/...                     commit instants and claims ([[Timeline]]:
+  *                                           a commit is visible iff its
+  *                                           instant exists; data lands first)
   *   <path>/delta/<seq>/part-…parquet        one delta commit (upserts + deletes)
   *   <path>/base/<seq>/part-…parquet         compacted snapshot as of <seq>
   * }}}
   *
-  * Commit visibility and multi-writer OCC rely on two FS primitives:
-  * atomic rename (instant publish) and atomic exclusive create (seq
-  * claim, [[MorTable.allocateSeq]]). Both hold on HDFS-class filesystems
-  * and the local FS. Plain S3A provides NEITHER (rename is copy+delete;
-  * create-no-overwrite is exists-then-create), so on object stores
-  * without conditional writes a single writer per table — or an external
-  * lock provider, as Hudi documents for its S3 OCC — is required.
+  * Commit visibility and multi-writer OCC (and their filesystem
+  * requirements) are [[Timeline]]'s.
   *
   * Every stored row carries the lake metadata columns (the `_hoodie_*` analog,
   * reference `lib/rds-cdc-flink-hudi-stack.ts:470-489`):
@@ -134,161 +129,22 @@ final class MorTable(
     }
   }
 
-  /** Parse cache: instant CONTENT by seq. One `listStatus` per operation
-    * stays the source of truth (other handles/processes may have committed),
-    * but instant files are immutable once renamed into place, so their
-    * parsed JSON never needs re-reading. Before this cache every operation
-    * re-read EVERY timeline file — O(total commits) driver-side FS round
-    * trips per op, the S3 metadata bottleneck at a 1-min commit cadence.
-    * Now an op costs 1 list + reads only for instants it has never seen
-    * (typically 0), and [[clean]] archival bounds the list itself. */
-  // (cross-handle since r14, keyed (canonical table path, instant FILE
-  // name + length + mtime) — the file name pins seq AND kind; the
-  // (len, mtime) suffix from the operation's own fresh listing pins the
-  // CONTENT, so a seq reclaimed and republished by ANOTHER process (which
-  // this JVM's rollback purge can't see) misses the cache instead of
-  // serving a stale parse. Consulted only for names in THIS listing, so
-  // deleted instants are never served.)
+  /** This table's commit timeline: claims, instants, archive
+    * ([[Timeline]]). */
+  @transient private[lake] lazy val commitLog: Timeline = Timeline.child(fs, hPath)
+
   private def canonTablePath: String = MorTable.canonPath(path)
 
-  /** All committed instants, ascending by seq. */
-  def timeline(): Seq[Instant] = {
-    val dir = new Path(hPath, "timeline")
-    val stats =
-      try { MorTable.timelineLists.incrementAndGet(); fs.listStatus(dir).toSeq }
-      catch { case _: java.io.FileNotFoundException => return Seq.empty }
-    val tp = canonTablePath
-    stats.filter(st => instantFileRe.matcher(st.getPath.getName).matches).map { st =>
-      // cache key carries (len, mtime) from THIS listing: an ANOTHER-process
-      // rollback that reclaims a seq and republishes the same file NAME with
-      // different content (batchId/insertOnly/unfolded) yields a different
-      // status, so the stale parse is never served — the in-process purge
-      // (rollback → purgeCaches) only covers this JVM's own deletes.
-      // listStatus already returned FileStatus, so validation is free.
-      val n = st.getPath.getName
-      val key = (tp, s"$n@${st.getLen}@${st.getModificationTime}")
-      val hit = MorTable.instantCacheG.get(key)
-      if (hit != null) hit
-      else {
-        MorTable.instantReads.incrementAndGet()
-        val i = parseInstant(new String(readFully(fs, st.getPath), StandardCharsets.UTF_8))
-        if (MorTable.instantCacheG.size > 65536) MorTable.instantCacheG.clear()
-        MorTable.instantCacheG.put(key, i)
-        i
-      }
-    }.sortBy(_.seq)
-  }
+  private def deltaDir(seq: Long): Path = new Path(hPath, s"delta/$seq")
 
-  private val instantFileRe = java.util.regex.Pattern.compile("\\d+\\.[a-z]+\\.json")
-  private def instantFileName(i: Instant): String = s"${i.seq}.${i.kind}.json"
+  /** All committed instants, ascending by seq. */
+  def timeline(): Seq[Instant] = commitLog.instants()
 
   private def lastSeq(tl: Seq[Instant]): Long = tl.lastOption.map(_.seq).getOrElse(0L)
 
-  /** Claim this table's next commit seq (see [[MorTable.allocateSeq]]). */
-  private def allocateSeq(kind: String): Long =
-    MorTable.allocateSeq(fs, new Path(hPath, "timeline"), kind)
-
-  /** Inflight markers younger than `maxAgeMs` — evidence of a writer
-    * MID-PUBLISH right now, as opposed to a marker orphaned by a crash
-    * (which must not wedge destructive services forever: allocateSeq's
-    * contract is that an orphan is a token-space gap, never a wedge). */
-  private[lake] def freshInflightMarkers(maxAgeMs: Long): Seq[String] = {
-    val dir = new Path(hPath, "timeline")
-    val now = System.currentTimeMillis()
-    try fs.listStatus(dir).toSeq
-      .filter(st => st.getPath.getName.endsWith(".inflight") &&
-        now - st.getModificationTime < maxAgeMs)
-      .map(_.getPath.getName)
-    catch { case _: java.io.FileNotFoundException => Nil }
-  }
-
-  /** Delta seqs currently claimed but unpublished (inflight markers). */
-  private def inflightDeltaSeqs(): Set[Long] = {
-    val dir = new Path(hPath, "timeline")
-    val names =
-      try fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      catch { case _: java.io.FileNotFoundException => return Set.empty }
-    names.filter(_.endsWith(".delta.inflight"))
-      .flatMap(_.takeWhile(_ != '.') match {
-        case s if s.nonEmpty && s.forall(_.isDigit) => Some(s.toLong)
-        case _ => None
-      }).toSet
-  }
-
-  /** Liveness heartbeat for a claimed-but-unpublished commit: touch
-    * `marker`'s mtime every `periodMs` while `body` runs, so marker age
-    * means "ms since the writer last proved liveness" — which is what
-    * [[freshInflightMarkers]]' orphan classification actually wants —
-    * rather than "ms since the claim". Daemon thread, stopped (and joined)
-    * whether `body` completes or throws; a vanished marker (the publish
-    * already released it) is ignored. */
-  private[lake] def renewingMarker[T](marker: Path,
-                                      periodMs: Long = 15000L)(body: => T): T =
-    MorTable.renewingMarker(fs, marker, periodMs)(body)
-
-  /** Publish the committed instant claimed by [[allocateSeq]] and release
-    * its inflight marker. */
-  private def publishInstant(i: Instant): Unit = {
-    writeInstant(i)
-    fs.delete(new Path(hPath, s"timeline/${i.seq}.${i.kind}.inflight"), false)
-    ()
-  }
-
-  /** True iff this micro-batch id already committed (exactly-once replays).
-    * Checks live instants first, then the archived-batch summary (instants
-    * folded away by [[clean]] keep their batch ids there). */
-  def isCommitted(batchId: Long): Boolean =
-    batchId >= 0 &&
-      (timeline().exists(_.batchId == batchId) || archivedBatchIds.contains(batchId))
-
-  private def writeInstant(i: Instant): Unit = {
-    val dir = new Path(hPath, "timeline")
-    fs.mkdirs(dir)
-    val tmp = new Path(dir, s".${instantFileName(i)}.tmp")
-    val dst = new Path(dir, instantFileName(i))
-    // OCC allocation makes a same-seq publish impossible; if one happens
-    // anyway (bypassed allocation), fail loudly rather than silently
-    // replacing a committed instant (local-FS rename overwrites)
-    if (fs.exists(dst)) throw new java.io.IOException(
-      s"instant already published — refusing to overwrite committed $dst")
-    val out = fs.create(tmp, true)
-    try out.write(i.toJson.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"commit rename failed: $dst")
-    // pre-populate under the SAME (name, len, mtime) key timeline() probes
-    // (one metadata round-trip — not a content read), so the writer's own
-    // next op stays at zero instant reads; if the status is somehow
-    // unavailable the next timeline() just re-reads the file
-    try {
-      val st = fs.getFileStatus(dst)
-      MorTable.instantCacheG.put(
-        (canonTablePath, s"${instantFileName(i)}@${st.getLen}@${st.getModificationTime}"), i)
-    } catch { case _: java.io.IOException => () }
-    ()
-  }
-
-  // ------------------------------------------------------- archived timeline
-
-  private def archivePath = new Path(hPath, "timeline/_archived")
-
-  /** Batch ids of instants archived by [[clean]] (loaded once per handle;
-    * refreshed by clean() on this handle). Single-cleaner assumption, same
-    * as Hudi's table-service lock. */
-  @transient @volatile private var archivedCache: Set[Long] = _
-
-  private def archivedBatchIds: Set[Long] = {
-    var c = archivedCache
-    if (c == null) {
-      c = readArchivedBatchIds()
-      archivedCache = c
-    }
-    c
-  }
-
-  private def readArchivedBatchIds(): Set[Long] =
-    try {
-      val json = new String(readFully(fs, archivePath), StandardCharsets.UTF_8)
-      "-?\\d+".r.findAllIn(json.dropWhile(_ != '[')).map(_.toLong).toSet
-    } catch { case _: java.io.IOException => Set.empty }
+  /** True iff this micro-batch id already committed (exactly-once replays),
+    * instants archived by [[clean]] included. */
+  def isCommitted(batchId: Long): Boolean = commitLog.isCommitted(batchId)
 
   // ---------------------------------------------------------------- writes
 
@@ -353,25 +209,31 @@ final class MorTable(
     * writers are handled the [[adoptBase]] way: any delta claimed below
     * the bootstrap seq is recorded `unfolded` so its replay survives. */
   def bootstrap(sourceDir: String, batchId: Long = -1L): MorTable = synchronized {
-    if (isCommitted(batchId)) return this
-    require(timeline().isEmpty,
+    val l = commitLog.listing()
+    if (commitLog.isCommitted(l, batchId)) return this
+    require(l.instants.isEmpty,
       s"bootstrap requires an empty table, but $path has commits")
     val src = new Path(sourceDir)
     require(fs.exists(src), s"bootstrap source $sourceDir does not exist")
     // parquet footers only, no job
     CommitRows.requireSource(scanDir(sourceDir).schema.fieldNames.toSeq, keyCols, sourceDir)
-    val seq = allocateSeq("compact")
-    // same marker-then-timeline listing order as adoptBase: a delta that
-    // slipped in below our seq must stay replayed, not silently folded
-    val pending = inflightDeltaSeqs()
+    commitLog.commit("compact") { seq =>
+      (Instant(seq, "compact", batchId, System.currentTimeMillis(),
+        firstBaseUnfolded(seq, "bootstrap"), bootstrapDir = Some(sourceDir)), ())
+    }
+    this
+  }
+
+  /** Under the claimed first-base seq `seq` (bootstrap, clone): refuse
+    * when a base already exists, and return every delta claimed or
+    * published below `seq` — recorded `unfolded` so its replay survives.
+    * Markers are listed BEFORE the instants, as in [[adoptBase]]. */
+  private def firstBaseUnfolded(seq: Long, verb: String): Seq[Long] = {
+    val pending = commitLog.pending("delta")
     val tl = timeline()
     require(!tl.exists(_.kind == "compact"),
-      s"bootstrap lost the first-commit race on $path — table already has a base")
-    val unfolded = (tl.filter(_.kind == "delta").map(_.seq) ++ pending)
-      .distinct.filter(_ < seq).sorted
-    publishInstant(Instant(seq, "compact", batchId, System.currentTimeMillis(),
-      unfolded, bootstrapDir = Some(sourceDir)))
-    this
+      s"$verb lost the first-commit race on $path — table already has a base")
+    (tl.filter(_.kind == "delta").map(_.seq) ++ pending).distinct.filter(_ < seq).sorted
   }
 
   /** Shallow CLONE (the Delta `CREATE TABLE … SHALLOW CLONE` / Hudi
@@ -493,20 +355,15 @@ final class MorTable(
         i.bootstrapDir.contains(sourceDir))) return // crash-retry: already adopted
     require(tl0.isEmpty,
       s"bootstrap child $path already has commits")
-    val seq = allocateSeq("compact")
-    require(seq == expectSeq,
-      s"bootstrap child $path allocated seq $seq, expected the parent " +
-        s"token $expectSeq — seqno synthesis would diverge between the " +
-        "child and parent scans")
-    val pending = inflightDeltaSeqs()
-    val tl = timeline()
-    require(!tl.exists(_.kind == "compact"),
-      s"bootstrap lost the first-commit race on $path")
-    val unfolded = (tl.filter(_.kind == "delta").map(_.seq) ++ pending)
-      .distinct.filter(_ < seq).sorted
-    publishInstant(Instant(seq, "compact", -1L, System.currentTimeMillis(),
-      unfolded, bootstrapDir = Some(sourceDir),
-      bootstrapPart = Some((partCol, partValue, partType))))
+    commitLog.commit("compact") { seq =>
+      require(seq == expectSeq,
+        s"bootstrap child $path allocated seq $seq, expected the parent " +
+          s"token $expectSeq — seqno synthesis would diverge between the " +
+          "child and parent scans")
+      (Instant(seq, "compact", -1L, System.currentTimeMillis(),
+        firstBaseUnfolded(seq, "bootstrap"), bootstrapDir = Some(sourceDir),
+        bootstrapPart = Some((partCol, partValue, partType))), ())
+    }
   }
 
   /** The live base instant when it is a META-LESS bootstrap (external
@@ -523,15 +380,11 @@ final class MorTable(
   private[lake] def adoptClonedBase(srcBaseDir: String): Unit = synchronized {
     require(timeline().isEmpty,
       s"clone destination $path already has commits")
-    val seq = allocateSeq("compact")
-    val pending = inflightDeltaSeqs()
-    val tl = timeline()
-    require(!tl.exists(_.kind == "compact"),
-      s"clone lost the first-commit race on $path")
-    val unfolded = (tl.filter(_.kind == "delta").map(_.seq) ++ pending)
-      .distinct.filter(_ < seq).sorted
-    publishInstant(Instant(seq, "compact", -1L, System.currentTimeMillis(),
-      unfolded, bootstrapDir = Some(srcBaseDir), bootstrapMeta = true))
+    commitLog.commit("compact") { seq =>
+      (Instant(seq, "compact", -1L, System.currentTimeMillis(),
+        firstBaseUnfolded(seq, "clone"), bootstrapDir = Some(srcBaseDir),
+        bootstrapMeta = true), ())
+    }
   }
 
   /** [[upsert]] with WRITE-PATH INDEX TAGGING — the Hudi bloom-index
@@ -567,9 +420,10 @@ final class MorTable(
     * same-key writers on the plain [[upsert]] path or serialize them. */
   def upsertIfNew(batch: DataFrame, orderWithinBatch: Seq[Column],
                   batchId: Long = -1L, bloomBits: Int = 1 << 17): Boolean = {
-    if (isCommitted(batchId)) return false // replayed micro-batch — no-op
+    if (isCommitted(batchId)) return false // see upsert: pre-quarantine no-op
     graft.GraftFunctions.register(spark)
-    val deduped = CommitRows.withMeta(dedupBatch(batch, orderWithinBatch), keyCols, deleted = false)
+    val deduped = CommitRows.withMeta(dedupBatch(expectations.dropViolating(batch, batchId, path),
+      orderWithinBatch), keyCols, deleted = false)
       .localCheckpoint(true) // one materialization: probe agg + commit write
     val a = deduped.agg(
       call_function("key_bloom_agg", col("_record_key"), lit(bloomBits)).as("f"),
@@ -661,20 +515,22 @@ final class MorTable(
   private[lake] def adoptDelta(src: Path, batchId: Long,
                                insertOnly: Boolean = false,
                                schemaHint: Option[org.apache.spark.sql.types.StructType] = None): Unit = synchronized {
-    if (isCommitted(batchId)) { fs.delete(src, true); return } // replay no-op
+    val l = commitLog.listing()
+    if (commitLog.isCommitted(l, batchId)) { fs.delete(src, true); return } // replay no-op
     // same first-commit rule as commitDelta: nothing to collide with
-    val firstCommit = timeline().isEmpty && inflightDeltaSeqs().isEmpty
-    val seq = allocateSeq("delta")
-    val dst = new Path(hPath, s"delta/$seq")
-    fs.mkdirs(dst.getParent)
-    if (!fs.rename(src, dst)) throw new java.io.IOException(s"delta adopt rename failed: $dst")
-    // the stager knows the written schema (commitDelta's rule): register
-    // the relation so no later snapshot read pays a footer-inference job —
-    // measured 1 job per child per staged commit on the partitioned replays
-    schemaHint.foreach(sch => cacheScan(s"$path/delta/$seq",
-      spark.read.schema(sch).parquet(MorTable.globSafe(s"$path/delta/$seq"))))
-    publishInstant(Instant(seq, "delta", batchId, System.currentTimeMillis(),
-      insertOnly = insertOnly || firstCommit))
+    val firstCommit = l.instants.isEmpty && l.pending("delta").isEmpty
+    commitLog.commit("delta", seq => Some(deltaDir(seq))) { seq =>
+      val dst = deltaDir(seq)
+      fs.mkdirs(dst.getParent)
+      if (!fs.rename(src, dst)) throw new java.io.IOException(s"delta adopt rename failed: $dst")
+      // the stager knows the written schema (commitDelta's rule): register
+      // the relation so no later snapshot read pays a footer-inference job —
+      // measured 1 job per child per staged commit on the partitioned replays
+      schemaHint.foreach(sch => cacheScan(s"$path/delta/$seq",
+        spark.read.schema(sch).parquet(MorTable.globSafe(s"$path/delta/$seq"))))
+      (Instant(seq, "delta", batchId, System.currentTimeMillis(),
+        insertOnly = insertOnly || firstCommit), ())
+    }
     // compaction is the parent's job (it batches all due partitions into one
     // cluster write) — see PartitionedMorTable.maybeCompact
   }
@@ -690,34 +546,36 @@ final class MorTable(
     * shadowing a slow concurrent writer's commit. */
   private[lake] def adoptBase(src: Path, foldedDeltaSeqs: Set[Long],
                               schemaHint: Option[org.apache.spark.sql.types.StructType] = None): Unit = synchronized {
-    val seq = allocateSeq("compact")
-    // markers listed BEFORE the timeline read (same order prepareCompact
-    // documents): a writer that publishes its instant and deletes its
-    // marker between the two listings then shows up in the TIMELINE; with
-    // the inverted order it would appear in neither set and its commit
-    // would be silently excluded from `unfolded` — a lost write
-    val pending = inflightDeltaSeqs()
-    val tl = timeline()
-    val lastC = tl.filter(_.kind == "compact").lastOption
-    val candidates =
-      (tl.filter(_.kind == "delta").map(_.seq) ++ pending).distinct
-    val unfolded = candidates.filter(_ < seq).filterNot(foldedDeltaSeqs).filter { s =>
-      // below the previous compact, only its own unfolded set is still
-      // outstanding — everything else is in the ancestor base already
-      lastC.forall(c => s > c.seq || c.unfolded.contains(s))
-    }.sorted
-    val dst = new Path(hPath, s"base/$seq")
-    fs.mkdirs(dst.getParent)
-    if (!fs.rename(src, dst)) throw new java.io.IOException(s"base adopt rename failed: $dst")
-    // the compactor knows the staged schema: register the base relation so
-    // neither the manifest stats pass nor any later snapshot read pays a
-    // footer-inference job (carried files may be schema-narrower - the
-    // explicit schema reads their missing columns as null, exactly the
-    // allowMissingColumns contract)
-    schemaHint.foreach(sch => cacheScan(s"$path/base/$seq",
-      spark.read.schema(sch).parquet(MorTable.globSafe(s"$path/base/$seq"))))
-    publishInstant(Instant(seq, "compact", -1L, System.currentTimeMillis(), unfolded))
-    writeManifest(seq, dst)
+    val baseDir = (seq: Long) => new Path(hPath, s"base/$seq")
+    val (seq, lastC) = commitLog.commit("compact", seq => Some(baseDir(seq))) { seq =>
+      // markers listed BEFORE the timeline read (same order prepareCompact
+      // documents): a writer that publishes its instant and deletes its
+      // marker between the two listings then shows up in the TIMELINE; with
+      // the inverted order it would appear in neither set and its commit
+      // would be silently excluded from `unfolded` — a lost write
+      val pending = commitLog.pending("delta")
+      val tl = timeline()
+      val lastC = tl.filter(_.kind == "compact").lastOption
+      val candidates =
+        (tl.filter(_.kind == "delta").map(_.seq) ++ pending).distinct
+      val unfolded = candidates.filter(_ < seq).filterNot(foldedDeltaSeqs).filter { s =>
+        // below the previous compact, only its own unfolded set is still
+        // outstanding — everything else is in the ancestor base already
+        lastC.forall(c => s > c.seq || c.unfolded.contains(s))
+      }.sorted
+      val dst = baseDir(seq)
+      fs.mkdirs(dst.getParent)
+      if (!fs.rename(src, dst)) throw new java.io.IOException(s"base adopt rename failed: $dst")
+      // the compactor knows the staged schema: register the base relation so
+      // neither the manifest stats pass nor any later snapshot read pays a
+      // footer-inference job (carried files may be schema-narrower - the
+      // explicit schema reads their missing columns as null, exactly the
+      // allowMissingColumns contract)
+      schemaHint.foreach(sch => cacheScan(s"$path/base/$seq",
+        spark.read.schema(sch).parquet(MorTable.globSafe(s"$path/base/$seq"))))
+      (Instant(seq, "compact", -1L, System.currentTimeMillis(), unfolded), (seq, lastC))
+    }
+    writeManifest(seq, baseDir(seq))
     // an existing record-level index follows the table across compactions
     // (carried-file postings rewrite instead of rescanning — see
     // refreshRecordIndex); absent the opt-in, zero cost
@@ -1196,53 +1054,42 @@ final class MorTable(
     // key is new), so first commits get the merge-skip flag for free —
     // provided the write path deduped the batch (callers pass a per-key
     // collapsed batch; applyChangelog's LWW window or upsert's dedupBatch)
-    if (isCommitted(batchId)) return // replayed micro-batch — exactly-once no-op
+    val l = commitLog.listing()
+    if (commitLog.isCommitted(l, batchId)) return // replayed micro-batch — exactly-once no-op
     // no published instant AND no concurrent claim → nothing this load
     // could collide with
-    val firstCommit = timeline().isEmpty && inflightDeltaSeqs().isEmpty
-    val seq = allocateSeq("delta")
-    val now = System.currentTimeMillis()
-    // FAIL-mode expectations count violations on the commit write itself
-    val (checked, guard) = expectations.guard(df)
-    val out0 = CommitRows.stamp(checked, seq, now)
-    // bound files-per-commit (write.tasks). For a batch that is nothing
-    // but narrow ops over already-materialized blocks (the micro-batch
-    // shape: a pinned changelog slice projected into the envelope), a
-    // shuffle-free coalesce gives the SAME write parallelism as the hash
-    // repartition with one exchange fewer — at a 1-min commit cadence
-    // that exchange is a pure driver-job tax (AQE materializes each one
-    // as its own stage job). Heavy un-materialized plans keep the
-    // repartition, which bounds ONLY the write stage, never the upstream
-    // compute's parallelism.
-    val out =
-      if (writePartitions > 0 && MorTable.narrowOverMaterialized(out0.queryExecution.optimizedPlan))
-        out0.coalesce(writePartitions)
-      else if (writePartitions > 0) out0.repartition(writePartitions, col("_record_key"))
-      else out0
-    // the marker heartbeat keeps the inflight marker's mtime fresh for the
-    // duration of the data write: the destructive verbs classify markers
-    // older than a lease as crash orphans (they must never wedge forever),
-    // and without renewal a legitimately slow write (> lease — plausible
-    // on a cold object store or a loaded disk) would be misclassified and
-    // its claimed dir deleted mid-write
-    renewingMarker(new Path(hPath, s"timeline/$seq.delta.inflight")) {
+    val firstCommit = l.instants.isEmpty && l.pending("delta").isEmpty
+    // the claim's lease keeps its marker fresh for the whole write (a
+    // slow write is never taken for a crash orphan), and a throw before
+    // the publish — a FAIL-mode refusal included — removes the claimed
+    // dir and the marker: the timeline never saw the commit
+    commitLog.commit("delta", seq => Some(deltaDir(seq))) { seq =>
+      val now = System.currentTimeMillis()
+      // FAIL-mode expectations count violations on the commit write itself
+      val (checked, guard) = expectations.guard(df)
+      val out0 = CommitRows.stamp(checked, seq, now)
+      // bound files-per-commit (write.tasks). For a batch that is nothing
+      // but narrow ops over already-materialized blocks (the micro-batch
+      // shape: a pinned changelog slice projected into the envelope), a
+      // shuffle-free coalesce gives the SAME write parallelism as the hash
+      // repartition with one exchange fewer — at a 1-min commit cadence
+      // that exchange is a pure driver-job tax (AQE materializes each one
+      // as its own stage job). Heavy un-materialized plans keep the
+      // repartition, which bounds ONLY the write stage, never the upstream
+      // compute's parallelism.
+      val out =
+        if (writePartitions > 0 && MorTable.narrowOverMaterialized(out0.queryExecution.optimizedPlan))
+          out0.coalesce(writePartitions)
+        else if (writePartitions > 0) out0.repartition(writePartitions, col("_record_key"))
+        else out0
       out.write.mode("overwrite").parquet(s"$path/delta/$seq")
+      guard.refuseIfViolated(s"commit $seq")
+      // the writer knows the exact on-disk schema: register the commit dir's
+      // relation so no later scan pays the footer-inference job (scanDir)
+      cacheScan(s"$path/delta/$seq",
+        spark.read.schema(out0.schema).parquet(MorTable.globSafe(s"$path/delta/$seq")))
+      (Instant(seq, "delta", batchId, now, insertOnly = insertOnly || firstCommit), ())
     }
-    // FAIL-mode expectations: refuse the commit BEFORE its instant
-    // publishes — the staged dir is removed, the timeline never saw it.
-    // The inflight marker goes too: a deliberate refusal is not a crash,
-    // and a leftover marker would make rollback/restore refuse with
-    // 'mid-publish' for the next lease
-    guard.refuseIfViolated(s"commit $seq") {
-      fs.delete(new Path(s"$path/delta/$seq"), true)
-      fs.delete(new Path(hPath, s"timeline/$seq.delta.inflight"), false)
-    }
-    // the writer knows the exact on-disk schema: register the commit dir's
-    // relation so no later scan pays the footer-inference job (scanDir)
-    cacheScan(s"$path/delta/$seq",
-      spark.read.schema(out0.schema).parquet(MorTable.globSafe(s"$path/delta/$seq")))
-    publishInstant(Instant(seq, "delta", batchId, now,
-      insertOnly = insertOnly || firstCommit))
     if (autoCompact) maybeCompact()
   }
 
@@ -2110,24 +1957,25 @@ final class MorTable(
 
   /** What a compaction must stage: the merged snapshot DataFrame and the
     * delta seqs folded into it. Tombstones are DROPPED from the staged
-    * base when no claimed-but-unpublished delta is outstanding (the common
+    * base when no live claimed-but-unpublished delta is outstanding (the common
     * case — today's behavior); while a straggler IS outstanding they are
     * retained, because the straggler's rows may carry a lower
     * `_commit_seqno` than a folded delete and must still lose the LWW
     * merge when replayed (dropping the tombstone would resurrect the key).
     * The next straggler-free compaction drops them again.
     *
-    * `forceKeepTombstones`: [[PartitionedMorTable]] passes true while any
-    * PARENT-level commit is inflight — a parent writer stages child data
+    * `forceKeepTombstones`: [[PartitionedMorTable]] passes true while a
+    * live PARENT-level claim exists — a parent writer stages child data
     * before any child-level marker exists, so the child listing alone
-    * cannot see it. */
+    * cannot see it. An orphaned claim (past [[Timeline.leaseMs]]) counts
+    * for neither. */
   private[lake] def prepareCompact(forceKeepTombstones: Boolean = false,
                                    baseFiles: Option[Seq[String]] = None,
                                    onlyDeltas: Option[Set[Long]] = None): MorTable.CompactPrep = {
     // markers listed BEFORE the timeline read: a delta publishing between
     // the two shows up in the timeline (→ folded); later claims allocate
     // past the compact seq and are replayed as ordinary newer deltas
-    val pending = inflightDeltaSeqs()
+    val pending = commitLog.pending("delta")
     val tl = timeline()
     // onlyDeltas: the minor path folds EXACTLY the deltas its plan saw — a
     // delta that published after the plan's listing may touch a CARRIED
@@ -2596,7 +2444,8 @@ final class MorTable(
     * Call only when no in-flight multi-table batch might still
     * recovery-read the removed deltas. Returns #data dirs removed. */
   def clean(): Int = synchronized {
-    val tl = timeline()
+    val l = commitLog.listing()
+    val tl = l.instants
     tl.filter(_.kind == "compact").lastOption match {
       case None => 0
       case Some(c) =>
@@ -2623,19 +2472,8 @@ final class MorTable(
           }
           if (fs.exists(dir)) { fs.delete(dir, true); 1 } else 0
         }.sum
+        commitLog.archive(l, old)
         MorTable.purgeCaches(canonTablePath)
-        if (old.nonEmpty) {
-          val ids = (archivedBatchIds ++ old.map(_.batchId).filter(_ >= 0)).toSeq.sorted
-          val tmp = new Path(hPath, "timeline/._archived.tmp")
-          val out = fs.create(tmp, true)
-          try out.write(s"""{"batchIds":[${ids.mkString(",")}]}"""
-            .getBytes(StandardCharsets.UTF_8)) finally out.close()
-          fs.delete(archivePath, false)
-          if (!fs.rename(tmp, archivePath))
-            throw new java.io.IOException(s"archive rename failed: $archivePath")
-          archivedCache = ids.toSet
-          old.foreach(i => fs.delete(new Path(hPath, s"timeline/${instantFileName(i)}"), false))
-        }
         removed
     }
   }
@@ -2654,17 +2492,18 @@ final class MorTable(
     // data dir deleted out from under it — refuse loudly (quiesce writers
     // first, the Hudi restore contract). Markers older than a lease are
     // crash orphans and must not wedge the service.
-    val busy = freshInflightMarkers(60000L)
+    val l = commitLog.listing()
+    val busy = l.markers.filter(_.live).map(_.name)
     require(busy.isEmpty,
       s"rollback: writer(s) mid-publish on $path (${busy.mkString(", ")}) — " +
         "quiesce writers first")
-    val tl = timeline()
+    val tl = l.instants
     require(toSeq == 0 || tl.exists(_.seq <= toSeq),
       s"rollback($toSeq): target predates the cleaned horizon " +
         s"(earliest available instant: ${tl.headOption.map(_.seq).getOrElse("none")})")
     val doomed = tl.filter(_.seq > toSeq)
     doomed.reverse.foreach { i =>
-      fs.delete(new Path(hPath, s"timeline/${instantFileName(i)}"), false)
+      commitLog.delete(i)
       if (i.kind == "compact") { // external readers take the HIGHEST manifest:
         fs.delete(new Path(hPath, s"manifest/${i.seq}.json"), false)
         fs.delete(new Path(hPath, s"manifest/stats/${i.seq}"), true)
@@ -2821,8 +2660,9 @@ object MorTable {
   final case class FsView(lastCompactSeq: Option[Long], baseFiles: Int,
       baseBytes: Long, liveDeltas: Int, deltaFiles: Int, deltaBytes: Long)
 
-  /** FS-cost telemetry for the timeline (asserted in MorTableSpec: read
-    * cost must not grow with timeline length). */
+  /** FS-cost telemetry for timelines of both forms: [[Timeline.listing]]
+    * calls and instant-file reads (asserted in MorTableSpec: read cost
+    * must not grow with timeline length). */
   private[lake] val timelineLists = new java.util.concurrent.atomic.AtomicLong
   private[lake] val instantReads = new java.util.concurrent.atomic.AtomicLong
 
@@ -2841,9 +2681,7 @@ object MorTable {
   // should do almost no data work", §6 file-listing cost).
   //
   // Soundness: identical to the old per-handle caches —
-  //  - instants: consulted only for file names returned by THIS operation's
-  //    fresh listing, so a deleted instant is never served; content per name
-  //    is immutable (seqs are only reclaimed after rollback, which purges).
+  //  - timeline files: see Timeline.listing (keyed by name@len@mtime).
   //  - scan relations: keyed by (session, dir); dirs are immutable until a
   //    purge-site deletes them.
   //  - headers/stats: manifest/<seq>.json is immutable per seq modulo
@@ -2852,8 +2690,6 @@ object MorTable {
   // cache only costs re-reads).
   private[lake] val scanCacheG =
     new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
-  private[lake] val instantCacheG =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Instant]()
   private[lake] val headerCacheG =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), ManifestHeader]()
   private[lake] val statsCacheG =
@@ -2885,7 +2721,8 @@ object MorTable {
     // scan keys: single dirs (prefix match) AND the partitioned multi-dir
     // sets ("|"-joined) — containment over-purges at worst (benign re-read)
     scanCacheG.keySet.removeIf { case (_, d) => matches(d) || d.contains(path) }
-    instantCacheG.keySet.removeIf { case (p, _) => matches(p) }
+    Timeline.instantCache.keySet.removeIf { case (p, _) => matches(p) }
+    Timeline.archiveCache.keySet.removeIf { case (p, _) => matches(p) }
     headerCacheG.keySet.removeIf { case (p, _) => matches(p) }
     statsCacheG.keySet.removeIf { case (p, _) => matches(p) }
     ()
@@ -3120,71 +2957,6 @@ object MorTable {
       json.contains("\"bootstrapMeta\":true"), bp)
   }
 
-  /** Multi-writer commit-seq allocation (the Hudi inflight/OCC analog),
-    * shared by child timelines and [[PartitionedMorTable]]'s parent token
-    * space: claim the next seq by EXCLUSIVE-creating
-    * `<dir>/<seq>.<kind>.inflight` before any data is written. Two writers
-    * racing to one seq cannot both win the O_EXCL create — the loser
-    * re-lists (inflight markers count as taken, so it allocates PAST the
-    * winner) and retries. A marker orphaned by a crash just leaves a gap in
-    * the seq space (readers only parse `*.json`); it never wedges the table.
-    *
-    * Atomicity requirement: exclusive create must be atomic — true on
-    * HDFS-class filesystems and the local FS (via java.nio). On object
-    * stores without conditional writes (plain S3A) `create(…, false)` is
-    * exists-then-create, so OCC needs an external lock provider there —
-    * the same caveat Hudi documents for its S3 OCC. */
-  private[lake] def allocateSeq(fs: FileSystem, dir: Path, kind: String): Long = {
-    fs.mkdirs(dir)
-    var attempt = 0
-    while (true) {
-      val names = fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      val taken = names.flatMap(_.takeWhile(_ != '.') match {
-        case s if s.nonEmpty && s.forall(_.isDigit) => Some(s.toLong)
-        case _ => None
-      })
-      val seq = taken.foldLeft(0L)(math.max) + 1
-      val marker = new Path(dir, s"$seq.$kind.inflight")
-      try {
-        if (fs.getScheme == "file")
-          // java.nio createFile is O_EXCL-atomic; Hadoop's create(…, false)
-          // on the local FS is exists-then-create (a TOCTOU window)
-          java.nio.file.Files.createFile(java.nio.file.Paths.get(marker.toUri.getPath))
-        else {
-          val out = fs.create(marker, false); out.close()
-        }
-        // POST-CLAIM VERIFY — the exclusive create alone is not enough,
-        // because markers are RELEASED at publish: a writer holding a
-        // pre-claim listing can win the create for a seq whose previous
-        // claimer already published (json present, marker gone), and two
-        // writers of different KINDS claim under different marker names.
-        // Re-list and yield to ANY other same-seq entry. No tie-break
-        // between concurrent markers: a "winner" rule could steal from a
-        // claimer that already passed ITS verify and returned, so both
-        // back off and re-list (their next listings carry at least the
-        // published history, and timing jitter breaks the symmetry —
-        // bounded by the attempt cap, correct at every interleaving).
-        val contested = fs.listStatus(dir).toSeq.map(_.getPath.getName)
-          .exists(n => n != marker.getName &&
-            n.takeWhile(_ != '.') == seq.toString)
-        if (!contested) return seq
-        fs.delete(marker, false)
-        attempt += 1
-        if (attempt > 50) throw new java.io.IOException(
-          s"seq allocation lost $attempt races at $dir — writer storm?")
-      } catch {
-        // ONLY a lost race retries; any other IO failure (permissions,
-        // disk full) propagates with its cause instead of spinning
-        case _: java.nio.file.FileAlreadyExistsException |
-             _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          attempt += 1
-          if (attempt > 50) throw new java.io.IOException(
-            s"seq allocation lost $attempt races at $dir — writer storm?")
-      }
-    }
-    0L // unreachable
-  }
-
   /** JSON string-escape shared by every hand-built metadata file (manifest
     * stats, savepoints): the ONE escaper, so values round-trip identically
     * through every parser ([[jsUnescape]] is its exact inverse). */
@@ -3273,7 +3045,7 @@ object MorTable {
     * lease expired mid-critical-section can never disturb its successor
     * (its own WRITES are still protected by the OCC seq claim — the lease
     * bounds mutual exclusion, not correctness). Same atomic-create/rename
-    * requirement as [[allocateSeq]]: HDFS-class and local filesystems
+    * requirement as [[Timeline.claim]]: HDFS-class and local filesystems
     * yes; plain S3 needs conditional puts or an external provider, as
     * Hudi documents. Clock skew across writer hosts erodes lease accuracy
     * (the scheme's standing assumption), never rename atomicity.
@@ -3382,28 +3154,6 @@ object MorTable {
         }
       } catch { case _: java.io.IOException => () }
     }
-  }
-
-  /** Liveness heartbeat for a claimed-but-unpublished commit (static form —
-    * shared by the unpartitioned delta write and the partitioned
-    * parent-token writes): touch `marker`'s mtime every `periodMs` while
-    * `body` runs, so marker age means "ms since the writer last proved
-    * liveness" — which is what the fresh-inflight orphan classification
-    * actually wants — rather than "ms since the claim". Daemon thread,
-    * stopped (and joined) whether `body` completes or throws; a vanished
-    * marker (the publish already released it) is ignored. */
-  private[lake] def renewingMarker[T](fs: FileSystem, marker: Path,
-                                      periodMs: Long = 15000L)(body: => T): T = {
-    val stop = new java.util.concurrent.CountDownLatch(1)
-    val t = new Thread(() => {
-      while (!stop.await(periodMs, java.util.concurrent.TimeUnit.MILLISECONDS)) {
-        try fs.setTimes(marker, System.currentTimeMillis(), -1)
-        catch { case _: java.io.IOException => () }
-      }
-    }, s"graft-marker-renew-${marker.getName}")
-    t.setDaemon(true)
-    t.start()
-    try body finally { stop.countDown(); t.join(1000) }
   }
 
   private def tombstonePath(dir: Path, genNonce: String): Path =

@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *    commit cost is O(batch) cluster work + O(touched partitions) driver
   *    metadata, never O(partitions) Spark jobs.
   *
-  * Exactly-once: the parent records each batchId on its own `_timeline`
+  * Exactly-once: the parent records each batchId on its own timeline
   * (a fully replayed batch is skipped before any cluster work), and the
   * children share the caller's batchId, so a crash mid-adoption re-runs
   * only children that had not committed (their `isCommitted` is false).
@@ -69,8 +69,8 @@ final class PartitionedMorTable(
     * same file-count declaration as the parent's batched staged writes. */
   def child(value: String): MorTable = {
     // memoized per value: parChildren builds handles per CALL, and a fresh
-    // handle re-derives per-handle state (archived-batch cache, inherited
-    // stats/index columns) each time — the commit-dir/instant caches are
+    // handle re-derives per-handle state (inherited stats/index columns)
+    // each time — the commit-dir/instant caches are
     // cross-handle (MorTable.scanCacheG family) but handle construction
     // itself is not free at a per-op fan-out of O(partitions)
     val t = childHandles.computeIfAbsent(value, v =>
@@ -141,198 +141,27 @@ final class PartitionedMorTable(
 
   // ------------------------------------------------------- parent timeline
 
-  /** Parse cache for parent instants (same shape as MorTable's child
-    * cache): instant files are immutable once renamed into place, so one
-    * `listStatus` per operation stays the source of truth while parsed
-    * JSON is never re-read. Without it every isCommitted/nextToken re-read
-    * EVERY parent instant — O(total commits) driver FS round trips per
-    * commit, the S3 metadata bottleneck at a 1-minute cadence. */
-  @transient @volatile private var parentInstantCache: Map[Long, MorTable.Instant] = Map.empty
+  /** The table-global token timeline ([[Timeline]]): the `_commit_seqno`
+    * counter and the whole-batch exactly-once record. */
+  @transient private[lake] lazy val parentLog: Timeline = Timeline.parent(fs, hPath)
 
-  /** Parent-level commit instants: the table-global `_commit_seqno` counter
-    * and the whole-batch exactly-once record. The same listing also
-    * refreshes the archived-batch cache when a newer `_archived.v<N>`
-    * appears — cross-handle archival becomes visible with ZERO extra FS
-    * calls, instead of each handle pinning whatever version it first read. */
-  def parentTimeline(): Seq[MorTable.Instant] = {
-    val dir = new Path(hPath, "_timeline")
-    if (!fs.exists(dir)) return Seq.empty
-    val names = fs.listStatus(dir).toSeq.map(_.getPath.getName)
-    val av = names.flatMap(archivedVersionOf)
-    if (av.nonEmpty && av.max > parentArchivedVersion) refreshArchived(av.max)
-    val cached = parentInstantCache
-    val all = names
-      .filter(n => n.endsWith(".json") && !n.startsWith("_"))
-      .map { n =>
-        val seq = n.takeWhile(_ != '.').toLong
-        cached.getOrElse(seq, MorTable.parseInstant(new String(
-          MorTable.readFully(fs, new Path(dir, n)), java.nio.charset.StandardCharsets.UTF_8)))
-      }.sortBy(_.seq)
-    parentInstantCache = all.map(i => i.seq -> i).toMap
-    all
-  }
+  /** Parent-level commit instants, ascending by token. */
+  def parentTimeline(): Seq[MorTable.Instant] = parentLog.instants()
 
-  /** Batch ids folded away by [[cleanParentTimeline]]. Archive summaries
-    * are IMMUTABLE VERSIONED files `_timeline/_archived.v<N>` (the plain
-    * `_archived` name reads as v0 for back-compat): a new version is
-    * renamed into place under a fresh name and older versions deleted
-    * after, so no reader ever observes a window with NO archive file —
-    * the delete-then-rename gap that could resurrect a replayed batch.
-    * Ids only accumulate across versions, so reading any present version
-    * is never wrong, merely possibly stale by one clean. */
-  @transient @volatile private var parentArchivedCache: Set[Long] = _
-  @transient @volatile private var parentArchivedVersion: Long = -1L
-
-  private def archivedVersionOf(name: String): Option[Long] =
-    if (name == "_archived") Some(0L)
-    else if (name.startsWith("_archived.v")) name.stripPrefix("_archived.v").toLongOption
-    else None
-
-  private def archivedFileName(v: Long): String =
-    if (v == 0L) "_archived" else s"_archived.v$v"
-
-  private def refreshArchived(version: Long): Unit = {
-    // a concurrent clean may delete the version between list and read —
-    // re-list and take the newest that survives
-    var v = version
-    var attempts = 0
-    while (attempts < 5) {
-      try {
-        val json = new String(MorTable.readFully(fs,
-          new Path(hPath, s"_timeline/${archivedFileName(v)}")),
-          java.nio.charset.StandardCharsets.UTF_8)
-        parentArchivedCache = "-?\\d+".r.findAllIn(json.dropWhile(_ != '[')).map(_.toLong).toSet
-        parentArchivedVersion = v
-        return
-      } catch {
-        case _: java.io.IOException =>
-          attempts += 1
-          val av = (try fs.listStatus(new Path(hPath, "_timeline")).toSeq
-            .map(_.getPath.getName) catch {
-              case _: java.io.FileNotFoundException => Seq.empty[String]
-            }).flatMap(archivedVersionOf)
-          if (av.isEmpty) return // nothing archived (fresh table) — keep cache
-          v = av.max
-      }
-    }
-    throw new java.io.IOException(
-      s"parent archive summary unreadable after $attempts attempts at $path")
-  }
-
-  private def parentArchivedBatchIds: Set[Long] = {
-    if (parentArchivedCache == null) {
-      val av = (try fs.listStatus(new Path(hPath, "_timeline")).toSeq
-        .map(_.getPath.getName) catch {
-          case _: java.io.FileNotFoundException => Seq.empty[String]
-        }).flatMap(archivedVersionOf)
-      if (av.isEmpty) parentArchivedCache = Set.empty else refreshArchived(av.max)
-    }
-    parentArchivedCache
-  }
-
-  /** Bound the parent instant listing (the child `clean()` analog): fold
-    * the batch ids of all but the newest `keepLast` instants into the next
-    * versioned archive summary and delete their files. Keeping a tail
-    * of live instants preserves the token allocator's max-seq floor, so an
+  /** Bound the parent instant listing (the child `clean()` analog):
+    * archive all but the newest `keepLast` instants. Keeping a tail of
+    * live instants preserves the token claim's max-seq floor, so an
     * archived token can never be re-claimed. Returns #instants archived. */
   def cleanParentTimeline(keepLast: Int = 100): Int = {
-    val tl = parentTimeline()
-    val doomed = tl.dropRight(keepLast)
-    if (doomed.isEmpty) return 0
-    val ids = (parentArchivedBatchIds ++ doomed.map(_.batchId).filter(_ >= 0)).toSeq.sorted
-    val nextV = math.max(0L, parentArchivedVersion) + 1
-    val tmp = new Path(hPath, s"_timeline/._archived.v$nextV.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"batchIds":[${ids.mkString(",")}]}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
-    val dst = new Path(hPath, s"_timeline/${archivedFileName(nextV)}")
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"parent archive rename failed: $dst")
-    parentArchivedCache = ids.toSet
-    parentArchivedVersion = nextV
-    // older versions (subsets of the new one) go only AFTER the new one is
-    // durable — a reader always finds at least one version
-    (0L until nextV).foreach(v =>
-      fs.delete(new Path(hPath, s"_timeline/${archivedFileName(v)}"), false))
-    doomed.foreach(i =>
-      fs.delete(new Path(hPath, s"_timeline/${i.seq}.${i.kind}.json"), false))
-    parentInstantCache = parentInstantCache -- doomed.map(_.seq)
+    val l = parentLog.listing()
+    val doomed = l.instants.dropRight(keepLast)
+    parentLog.archive(l, doomed)
     doomed.size
   }
 
   /** True iff this batchId fully committed (all touched partitions
     * adopted) — live instants first, then the archived summary. */
-  def isCommitted(batchId: Long): Boolean =
-    batchId >= 0 && (parentTimeline().exists(_.batchId == batchId) ||
-      parentArchivedBatchIds.contains(batchId))
-
-  /** Publish the parent instant claimed by [[nextToken]] and release its
-    * inflight marker. Refuses to overwrite a committed instant (local-FS
-    * rename silently replaces) — with OCC token allocation a same-token
-    * publish can only mean a bypassed allocation, which must fail loudly. */
-  private[lake] def writeParentInstant(i: MorTable.Instant): Unit = {
-    val dir = new Path(hPath, "_timeline")
-    fs.mkdirs(dir)
-    val tmp = new Path(dir, s".${i.seq}.${i.kind}.json.tmp")
-    val dst = new Path(dir, s"${i.seq}.${i.kind}.json")
-    if (fs.exists(dst)) throw new java.io.IOException(
-      s"parent instant already published — refusing to overwrite committed $dst")
-    val out = fs.create(tmp, true)
-    try out.write(i.toJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, dst)) throw new java.io.IOException(s"parent commit rename failed: $dst")
-    fs.delete(new Path(dir, s"${i.seq}.${i.kind}.inflight"), false)
-    parentInstantCache += (i.seq -> i)
-    ()
-  }
-
-  /** Claim the next table-global commit token via the same inflight-marker
-    * OCC as child commit seqs ([[MorTable.allocateSeq]]): two uncoordinated
-    * partitioned writers can no longer claim one token, clobber each
-    * other's `.staging/<token>` dir, or replace each other's parent
-    * instant. The marker is released by [[writeParentInstant]]; one
-    * orphaned by a crash leaves a token-space gap, never a wedged table. */
-  private def nextToken(kind: String): Long =
-    MorTable.allocateSeq(fs, new Path(hPath, "_timeline"), kind)
-
-  /** Run `body` (a staged cluster write + adoption) under a liveness
-    * heartbeat on the claimed parent inflight marker
-    * ([[MorTable.renewingMarker]]): a staged write slower than the 60 s
-    * orphan lease must stay classified as mid-publish by
-    * [[freshParentInflight]] — restore/dropPartitions would otherwise
-    * treat the live writer as a crash orphan and proceed against it. The
-    * marker is released by [[writeParentInstant]] inside `body`; the
-    * renewer ignores the vanished marker. */
-  private[lake] def renewingParentMarker[T](token: Long, kind: String,
-                                            periodMs: Long = 15000L)(body: => T): T =
-    MorTable.renewingMarker(fs,
-      new Path(hPath, s"_timeline/$token.$kind.inflight"), periodMs)(body)
-
-  /** True iff any parent-level commit is claimed but unpublished. A parent
-    * writer stages child data BEFORE any child-level marker exists, so
-    * child compaction must treat an inflight parent commit as an
-    * outstanding straggler (tombstone retention — see
-    * [[MorTable.prepareCompact]]). */
-  private def parentInflight(): Boolean = {
-    val dir = new Path(hPath, "_timeline")
-    val names =
-      try fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      catch { case _: java.io.FileNotFoundException => return false }
-    names.exists(_.endsWith(".inflight"))
-  }
-
-  /** Parent inflight markers younger than `maxAgeMs` (see
-    * [[MorTable.freshInflightMarkers]] — mid-publish evidence, not crash
-    * orphans). */
-  private def freshParentInflight(maxAgeMs: Long): Seq[String] = {
-    val dir = new Path(hPath, "_timeline")
-    val now = System.currentTimeMillis()
-    try fs.listStatus(dir).toSeq
-      .filter(st => st.getPath.getName.endsWith(".inflight") &&
-        now - st.getModificationTime < maxAgeMs)
-      .map(_.getPath.getName)
-    catch { case _: java.io.FileNotFoundException => Nil }
-  }
+  def isCommitted(batchId: Long): Boolean = parentLog.isCommitted(batchId)
 
   /** Write expectations ([[Expectations]]) on this handle's commits:
     * DROP mode filters the raw batch before the per-(partition, key)
@@ -358,40 +187,36 @@ final class PartitionedMorTable(
 
   /** The one staged partitioned commit every write verb runs. A replayed
     * batch is a no-op before `rows` (commit rows short of the stamp) is
-    * built. Otherwise: claim a parent token of `kind`, stamp the rows with
-    * it, route every row to its partition in ONE `partitionBy` write,
-    * refuse the write on a FAIL-mode expectation violation (a `delete`
-    * holds only tombstones and is not checked), adopt each
-    * staged partition dir into its child, publish the parent instant, and
-    * (for a `delta`) compact what is due. `prove` sees the stamped rows
-    * before the write and returns the rows to write plus a per-partition
-    * insert-only verdict ([[upsertIfNew]]); the verdicts are returned. */
+    * built. Otherwise, as one [[Timeline.commit]] on the parent timeline:
+    * claim a token of `kind`, stamp the rows with it, route every row to
+    * its partition in ONE `partitionBy` write, refuse the write on a
+    * FAIL-mode expectation violation (a `delete` holds only tombstones and
+    * is not checked), adopt each staged partition dir into its child and
+    * publish the parent instant; a throw before the publish removes the
+    * staged dir and the claim. Then compact what is due. `prove` sees the
+    * stamped rows before the write and returns the rows to write plus a
+    * per-partition insert-only verdict ([[upsertIfNew]]); the verdicts are
+    * returned. */
   private def stagedCommit(kind: String, batchId: Long, rows: => DataFrame,
                            prove: DataFrame => (DataFrame, Map[String, Boolean]) =
                              staged => (staged, Map.empty)): Map[String, Boolean] = {
     if (isCommitted(batchId)) return Map.empty
     val unstamped = rows
-    val token = nextToken(kind)
-    val verdicts = renewingParentMarker(token, kind) {
+    val stagingDir = (token: Long) => new Path(hPath, s".staging/$token")
+    val verdicts = parentLog.commit(kind, token => Some(stagingDir(token))) { token =>
       val now = System.currentTimeMillis()
       val (staged, verdicts) = prove(CommitRows.stamp(unstamped, token, now)
         .withColumn("__p", col(partCol).cast("string")))
       val (checked, guard) =
         if (kind == "delete") (staged, Expectations.Guard.none)
         else expectations.guard(staged)
-      val stagingDir = new Path(hPath, s".staging/$token")
-      checked.write.partitionBy("__p").mode("overwrite").parquet(stagingDir.toString)
-      // a refusal is not a crash: remove the claim with the staged rows
-      guard.refuseIfViolated(s"partitioned commit $token") {
-        fs.delete(stagingDir, true)
-        fs.delete(new Path(hPath, s"_timeline/$token.$kind.inflight"), false)
-      }
-      adoptStaged(stagingDir, batchId, verdicts.filter(_._2).keySet,
+      checked.write.partitionBy("__p").mode("overwrite").parquet(stagingDir(token).toString)
+      guard.refuseIfViolated(s"partitioned commit $token")
+      adoptStaged(stagingDir(token), batchId, verdicts.filter(_._2).keySet,
         schemaHint = Some(staged.drop("__p").schema))
-      writeParentInstant(MorTable.Instant(token, kind, batchId, now))
-      verdicts
+      (MorTable.Instant(token, kind, batchId, now), verdicts)
     }
-    if (kind == "delta" && autoCompact) maybeCompact()
+    if (autoCompact) maybeCompact()
     verdicts
   }
 
@@ -520,8 +345,9 @@ final class PartitionedMorTable(
         .filterNot(bootDowngrade).toSet
       (staged, stats.map(r => r.getString(0) -> proven(r.getString(0))).toMap)
     }
-    stagedCommit("delta", batchId,
-      CommitRows.withMeta(dedupBatch(batch, orderWithinBatch), keyCols, deleted = false), prove)
+    stagedCommit("delta", batchId, CommitRows.withMeta(dedupBatch(
+      expectations.dropViolating(batch, batchId, path), orderWithinBatch),
+      keyCols, deleted = false), prove)
   }
 
   /** Predicate delete across partitions (`DELETE FROM t WHERE …`):
@@ -1205,13 +1031,15 @@ final class PartitionedMorTable(
     due
   }
 
-  /** Compact the named partitions in one staged cluster write. An inflight
-    * PARENT commit forces tombstone retention in every staged child (its
+  /** Compact the named partitions in one staged cluster write. A live
+    * PARENT claim forces tombstone retention in every staged child (its
     * data may publish into the children with tokens below a folded delete
-    * — see [[MorTable.prepareCompact]]). */
+    * — see [[MorTable.prepareCompact]]); a parent writer stages child data
+    * before any child-level marker exists, so the child listing alone
+    * cannot see it. An orphaned claim (past the lease) does not. */
   def compactPartitions(values: Seq[String]): Unit = {
     if (values.isEmpty) return
-    val keepTombstones = parentInflight()
+    val keepTombstones = parentLog.liveMarkers().nonEmpty
     // MINOR planning per due child (see MorTable.compactMinor): children
     // with manifest key bounds merge only the base files their deltas
     // touch; the rest carry byte-for-byte into the adopted dir below. The
@@ -1394,8 +1222,8 @@ final class PartitionedMorTable(
     // marker at parent level or inside a victim child (stale markers are
     // crash orphans and must not wedge the TTL service).
     MorTable.withTableLock(spark, path) {
-      val busy = freshParentInflight(60000L) ++
-        victims.zip(parChildren(victims)(_.freshInflightMarkers(60000L)))
+      val busy = parentLog.liveMarkers() ++
+        victims.zip(parChildren(victims)(_.commitLog.liveMarkers()))
           .flatMap { case (v, ms) => ms.map(m => s"p=$v/$m") }
       require(busy.isEmpty,
         s"dropPartitions: writer(s) mid-publish on $path (${busy.mkString(", ")}) — " +
@@ -1405,9 +1233,9 @@ final class PartitionedMorTable(
         childHandles.remove(v)
         MorTable.purgeCaches(MorTable.canonPath(new Path(hPath, s"p=$v").toString))
       }
-      val token = nextToken("drop")
-      writeParentInstant(MorTable.Instant(token, "drop", -1L,
-        System.currentTimeMillis()))
+      parentLog.commit("drop") { token =>
+        (MorTable.Instant(token, "drop", -1L, System.currentTimeMillis()), ())
+      }
       writeParentManifest()
       victims
     }
@@ -1490,8 +1318,9 @@ final class PartitionedMorTable(
     * Idempotent for crash retries (children skip an already-adopted
     * source dir; a completed bootstrap of the same source no-ops). */
   def bootstrap(sourceDir: String, batchId: Long = -1L): PartitionedMorTable = {
-    if (isCommitted(batchId)) return this
-    val ptl = parentTimeline()
+    val l = parentLog.listing()
+    if (parentLog.isCommitted(l, batchId)) return this
+    val ptl = l.instants
     if (ptl.headOption.exists(i => i.bootstrapDir.contains(sourceDir) &&
         !i.bootstrapMeta)) return this // completed bootstrap retry: no-op
     require(ptl.isEmpty,
@@ -1538,7 +1367,7 @@ final class PartitionedMorTable(
     parts.foreach { case (v, d) =>
       child(v).adoptBootstrapBase(d, partCol, v, ptype, expectSeq = token)
     }
-    writeParentInstant(MorTable.Instant(token, "compact", batchId,
+    parentLog.publish(MorTable.Instant(token, "compact", batchId,
       System.currentTimeMillis(), bootstrapDir = Some(sourceDir)))
     this
   }
@@ -1583,7 +1412,7 @@ final class PartitionedMorTable(
   def cloneTo(dstPath: String): PartitionedMorTable = {
     val parts = partitions()
     require(parts.nonEmpty, s"cloneTo: $path has no partitions")
-    val busy = freshParentInflight(60000L)
+    val busy = parentLog.liveMarkers()
     require(busy.isEmpty,
       s"cloneTo: writer(s) mid-publish on $path (${busy.mkString(", ")}) — " +
         "quiesce writers first")
@@ -1666,7 +1495,7 @@ final class PartitionedMorTable(
     // continue the SOURCE token space: first parent instant at the pinned
     // token, so future dst writers allocate PAST it and outrank every
     // adopted row
-    dst.writeParentInstant(MorTable.Instant(pinned, "compact", -1L,
+    dst.parentLog.publish(MorTable.Instant(pinned, "compact", -1L,
       System.currentTimeMillis()))
     dst.writeParentManifest()
     dst
@@ -1758,8 +1587,8 @@ final class PartitionedMorTable(
     // the table lock, refuse when a writer is provably mid-publish (fresh
     // parent or child inflight markers; stale = crash orphans, ignored)
     val busyParts = partitions()
-    val busy = freshParentInflight(60000L) ++
-      busyParts.zip(parChildren(busyParts)(_.freshInflightMarkers(60000L)))
+    val busy = parentLog.liveMarkers() ++
+      busyParts.zip(parChildren(busyParts)(_.commitLog.liveMarkers()))
         .flatMap { case (v, ms) => ms.map(m => s"p=$v/$m") }
     require(busy.isEmpty,
       s"restore: writer(s) mid-publish on $path (${busy.mkString(", ")}) — " +
@@ -1793,10 +1622,7 @@ final class PartitionedMorTable(
       }
     }
     val doomed = parentTimeline().filter(_.seq > token)
-    doomed.reverse.foreach { i =>
-      fs.delete(new Path(hPath, s"_timeline/${i.seq}.${i.kind}.json"), false); ()
-    }
-    parentInstantCache = parentInstantCache -- doomed.map(_.seq)
+    doomed.reverse.foreach(parentLog.delete)
     savepoints().collect { case (n, t) if t > token => n }
       .foreach(releaseSavepoint)
     writeParentManifest()

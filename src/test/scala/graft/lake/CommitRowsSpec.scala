@@ -88,6 +88,22 @@ class CommitRowsSpec extends AnyFunSuite {
         commitFiles(path))
     }
 
+    test(s"${form.name}: upsertIfNew commits no DROP- or QUARANTINE-mode violator; " +
+      "QUARANTINE mode quarantines it") {
+      for (mode <- Seq("drop", "quarantine")) {
+        val path = TestSpark.tmpDir(s"commit-rows-$mode")
+        val t = form.open(path)
+        t.upsert(rows((1L, "a", 10)), Nil, batchId = 1L)
+        t.withExpectations(Seq("v_positive" -> (col("v") > 0)), mode)
+        form.upsertIfNew(t, rows((2L, "b", 20), (3L, "c", -5)), 2L)
+        assert(current(t) == Seq((1L, "a", 10), (2L, "b", 20)), mode)
+        if (mode == "quarantine")
+          assert(Expectations.readQuarantine(spark, path).select("k", "_rule")
+            .as[(Long, String)].collect().toSeq == Seq((3L, "v_positive")))
+        else intercept[IllegalStateException](Expectations.readQuarantine(spark, path))
+      }
+    }
+
     test(s"${form.name}: updateWhere refuses an unknown SET column and commits nothing; " +
       "a SET key resolves case-insensitively") {
       val path = TestSpark.tmpDir("commit-rows-update")

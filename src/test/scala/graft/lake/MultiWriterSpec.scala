@@ -257,7 +257,7 @@ class MultiWriterSpec extends AnyFunSuite {
     t.upsert(Seq((1L, "a", 1)).toDF("k", "p", "v"), Seq(col("k")), batchId = 1L)
     val committed = t.parentTimeline().last
     intercept[java.io.IOException] {
-      t.writeParentInstant(committed.copy(batchId = 999L))
+      t.parentLog.publish(committed.copy(batchId = 999L))
     }
     assert(t.parentTimeline().last.batchId == 1L, "committed instant untouched")
   }
@@ -628,7 +628,7 @@ class MultiWriterSpec extends AnyFunSuite {
     // simulate a claim made long ago (a slow write in progress)
     f.setTimes(marker, System.currentTimeMillis() - 600000L, -1)
     val before = f.getFileStatus(marker).getModificationTime
-    t.renewingMarker(marker, periodMs = 50L) { Thread.sleep(300) }
+    t.commitLog.renewing(777L, "delta", periodMs = 50L) { Thread.sleep(300) }
     val after = f.getFileStatus(marker).getModificationTime
     assert(after > before, "heartbeat must renew the marker mtime during the write")
     assert(System.currentTimeMillis() - after < 60000L,

@@ -29,7 +29,7 @@ class PartitionedMorTableSpec extends AnyFunSuite {
     // simulate a claim made long ago (slow staged write in progress)
     f.setTimes(marker, System.currentTimeMillis() - 600000L, -1)
     val before = f.getFileStatus(marker).getModificationTime
-    t.renewingParentMarker(777L, "delta", periodMs = 50L) {
+    t.parentLog.renewing(777L, "delta", periodMs = 50L) {
       Thread.sleep(300)
       // mid-write: the heartbeat has renewed the aged claim, so both
       // destructive verbs must see a FRESH marker and refuse loudly

@@ -94,6 +94,19 @@ class TableServicesSpec extends AnyFunSuite {
     assert(!svc.runOnce(), "freshly compacted — nothing due")
   }
 
+  test("partitioned delete-only stream compacts at the count trigger") {
+    val p = new PartitionedMorTable(spark, TestSpark.tmpDir("svc-part-delete"),
+      keyCols = Seq("k"), partCol = "p", compactionDeltaCommits = 2)
+    p.upsert((0 until 20).map(i => (s"k$i", i, if (i % 2 == 0) "even" else "odd"))
+      .toDF("k", "v", "p"), Seq(col("v")), batchId = 1L)
+    def compacted = Seq("even", "odd").filter(v =>
+      p.child(v).timeline().exists(_.kind == "compact"))
+    assert(compacted.isEmpty, "one delta per child is below the trigger")
+    p.delete(Seq(("k0", "even"), ("k1", "odd")).toDF("k", "p"), batchId = 2L)
+    assert(compacted == Seq("even", "odd"), "the delete's delta reaches the trigger")
+    assert(p.read().count() == 18)
+  }
+
   test("policy-driven async clustering: live writer + background z-order == direct filter") {
     // the s40 shape as a SERVICE: the policy declares z-order columns and
     // a cluster-every-2nd-compaction cadence; a foreground writer keeps
