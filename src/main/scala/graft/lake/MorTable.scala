@@ -2493,7 +2493,7 @@ final class MorTable(
     // first, the Hudi restore contract). Markers older than a lease are
     // crash orphans and must not wedge the service.
     val l = commitLog.listing()
-    val busy = l.markers.filter(_.live).map(_.name)
+    val busy = l.liveMarkers
     require(busy.isEmpty,
       s"rollback: writer(s) mid-publish on $path (${busy.mkString(", ")}) — " +
         "quiesce writers first")

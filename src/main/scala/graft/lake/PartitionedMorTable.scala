@@ -192,8 +192,9 @@ final class PartitionedMorTable(
     * its partition in ONE `partitionBy` write, refuse the write on a
     * FAIL-mode expectation violation (a `delete` holds only tombstones and
     * is not checked), adopt each staged partition dir into its child and
-    * publish the parent instant; a throw before the publish removes the
-    * staged dir and the claim. Then compact what is due. `prove` sees the
+    * publish the parent instant; a throw before any child adopts removes
+    * the staged dir and the claim, one after keeps the token taken
+    * ([[Timeline.hold]]). Then compact what is due. `prove` sees the
     * stamped rows before the write and returns the rows to write plus a
     * per-partition insert-only verdict ([[upsertIfNew]]); the verdicts are
     * returned. */
@@ -212,6 +213,7 @@ final class PartitionedMorTable(
         else expectations.guard(staged)
       checked.write.partitionBy("__p").mode("overwrite").parquet(stagingDir(token).toString)
       guard.refuseIfViolated(s"partitioned commit $token")
+      parentLog.hold(token) // children publish rows stamped `token` from here
       adoptStaged(stagingDir(token), batchId, verdicts.filter(_._2).keySet,
         schemaHint = Some(staged.drop("__p").schema))
       (MorTable.Instant(token, kind, batchId, now), verdicts)

@@ -72,11 +72,13 @@ final class Timeline(fs: => FileSystem, val dir: Path) {
     * a markers-only listing: the one a caller takes BEFORE [[listing]]
     * when a writer publishing between the two must show up in one of them
     * (its instant lands before its marker goes). */
-  def pending(kind: String): Set[Long] = pendingOf(markersOf(list()), kind)
+  def pending(kind: String): Set[Long] = markersOnly().pending(kind)
 
   /** Names of the live markers: evidence of a writer mid-publish right
     * now, which destructive verbs must refuse to run against. */
-  def liveMarkers(): Seq[String] = markersOf(list()).filter(_.live).map(_.name)
+  def liveMarkers(): Seq[String] = markersOnly().liveMarkers
+
+  private def markersOnly(): Listing = Listing(Nil, markersOf(list()), Nil)
 
   /** True iff micro-batch `batchId` committed (exactly-once replays): live
     * instants first, then the archive summary. */
@@ -159,30 +161,58 @@ final class Timeline(fs: => FileSystem, val dir: Path) {
   }
 
   /** One commit: [[claim]] a seq of `kind`, run `body` with it under the
-    * lease ([[renewing]]), and publish the instant `body` returns; its
-    * second result is returned. Any throw between the claim and the
-    * publish RELEASES the claim — `claimedDir(seq)` (the data the caller
-    * wrote under it) and the marker are deleted — and is rethrown: a
-    * refused or failed commit leaves nothing behind that a later writer
-    * or compaction would have to judge. */
+    * lease ([[renewing]]), then publish the instant `body` returns; its
+    * second result is returned. A throw from `body` RELEASES the claim —
+    * `claimedDir(seq)` (the data the caller wrote under it) and the marker
+    * are deleted — and is rethrown: a refused or failed commit leaves
+    * nothing behind that a later writer or compaction would have to judge.
+    * Two throws keep what may still be needed instead:
+    *  - one after `body` called [[hold]] (rows stamped with `seq` are
+    *    already visible elsewhere): marker and dir stay, so `seq` stays
+    *    taken — an orphan past its lease blocks nothing;
+    *  - one from the publish whose instant may have landed anyway (a
+    *    rename whose reply was lost, an interrupt): the dir stays, and the
+    *    marker goes only once the instant is seen. */
   def commit[T](kind: String, claimedDir: Long => Option[Path] = (_: Long) => None)
                (body: Long => (Instant, T)): T = {
     val seq = claim(kind)
-    val out =
-      try renewing(seq, kind) {
-        val (i, res) = body(seq)
-        require(i.seq == seq && i.kind == kind, s"instant $i does not match claim $seq.$kind")
-        writeInstant(i)
-        res
-      } catch {
-        case e: Throwable =>
-          try { claimedDir(seq).foreach(fs.delete(_, true)); fs.delete(markerPath(seq, kind), false) }
-          catch { case r: Throwable => e.addSuppressed(r) }
-          throw e
-      }
-    fs.delete(markerPath(seq, kind), false)
+    val marker = markerPath(seq, kind)
+    def fail(e: Throwable, release: Boolean): Nothing = {
+      if (!held.remove(seq) && release)
+        try { claimedDir(seq).foreach(fs.delete(_, true)); fs.delete(marker, false) }
+        catch { case r: Throwable => e.addSuppressed(r) }
+      throw e
+    }
+    val (i, out) =
+      try {
+        val r = renewing(seq, kind)(body(seq))
+        require(r._1.seq == seq && r._1.kind == kind, s"instant ${r._1} does not match claim $seq.$kind")
+        r
+      } catch { case e: Throwable => fail(e, release = true) }
+    try writeInstant(i)
+    catch {
+      case e: Throwable =>
+        // release a commit known unpublished; drop only the marker of one
+        // known published; keep both when the check fails too
+        val published = try Some(fs.exists(new Path(dir, instantName(i))))
+        catch { case r: Throwable => e.addSuppressed(r); None }
+        if (published.contains(true))
+          try fs.delete(marker, false) catch { case r: Throwable => e.addSuppressed(r) }
+        fail(e, release = published.contains(false))
+    }
+    held.remove(seq)
+    fs.delete(marker, false)
     out
   }
+
+  /** Called by a [[commit]] body once data stamped with `seq` is visible
+    * outside the claimed dir (the partitioned parent's children adopting
+    * their staged rows): from then on a failure keeps the claim, so no
+    * later commit is handed `seq` again and stamps rows that tie with
+    * these. */
+  def hold(seq: Long): Unit = { held.add(seq); () }
+
+  private val held = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
 
   /** Publish `i` outside [[commit]] (a seq the caller owns by
     * construction: a bootstrap or clone of an empty table) and drop its
@@ -290,7 +320,10 @@ object Timeline {
     * markers, and archive summaries ascending by version. */
   final case class Listing(instants: Seq[Instant], markers: Seq[Marker],
                            archives: Seq[(Long, FileStatus)]) {
-    def pending(kind: String): Set[Long] = pendingOf(markers, kind)
+    /** The markers of writers holding their claim now (the lease rule). */
+    private def live: Seq[Marker] = markers.filter(_.live)
+    def liveMarkers: Seq[String] = live.map(_.name)
+    def pending(kind: String): Set[Long] = live.filter(_.kind == kind).map(_.seq).toSet
   }
 
   private val instantRe = java.util.regex.Pattern.compile("\\d+\\.[a-z]+\\.json")
@@ -319,9 +352,6 @@ object Timeline {
       else None
     }
   }
-
-  private def pendingOf(markers: Seq[Marker], kind: String): Set[Long] =
-    markers.filter(m => m.live && m.kind == kind).map(_.seq).toSet
 
   // cross-handle parse caches of immutable timeline files (see
   // MorTable.scanCacheG for why caches outlive handles); purged with the

@@ -1,16 +1,18 @@
 package graft.lake
 
+import java.io.{IOException, InterruptedIOException}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 
 /** The rules [[Timeline]] writes once for both table forms: a throw
-  * between claim and publish releases the claim, one lease rule tells a
-  * live marker from an orphan, and every handle sees another handle's
-  * archive and republished instants. */
+  * between claim and publish releases the claim unless its seq already
+  * stamps visible rows or its instant may have landed, one lease rule
+  * tells a live marker from an orphan, and every handle sees another
+  * handle's archive and republished instants. */
 class TimelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -97,5 +99,77 @@ class TimelineSpec extends AnyFunSuite {
     assert(b.parentTimeline().last.seq == token, "the rolled-back token is claimed again")
     assert(a.parentTimeline().last.batchId == 42L)
     assert(a.isCommitted(42L) && !a.isCommitted(2L))
+  }
+
+  test("a partitioned commit that fails after a child adopted keeps its token taken") {
+    val path = TestSpark.tmpDir("tl-hold")
+    val t = new PartitionedMorTable(spark, path, Seq("k"), "p",
+      compactionDeltaCommits = 1000, autoCompact = false)
+    t.upsert(Seq((1L, "a", 10), (2L, "b", 20)).toDF("k", "p", "v"), Nil, batchId = 1L)
+    val token = t.parentTimeline().last.seq + 1
+    // child b cannot claim while its timeline dir is a plain file; child a
+    // adopts its rows stamped `token` (unless cancelled first)
+    val tlB = Paths.get(path, "p=b", "timeline")
+    val aside = Paths.get(path, "p=b", "timeline.aside")
+    Files.move(tlB, aside)
+    Files.createFile(tlB)
+    intercept[Exception](t.upsert(Seq((1L, "a", 11), (2L, "b", 21)).toDF("k", "p", "v"), Nil))
+    Files.delete(tlB)
+    Files.move(aside, tlB)
+    assert(leftovers(path).contains(s"_timeline/$token.delta.inflight"), leftovers(path))
+    t.upsert(Seq((1L, "a", 12)).toDF("k", "p", "v"), Nil)
+    assert(t.parentTimeline().last.seq > token, "the failed commit's token was handed out again")
+    assert(t.read().filter(col("k") === 1L).head().getAs[Int]("v") == 12)
+  }
+
+  /** `local` with each instant rename (the publish) passed through `publish`. */
+  private def hooked(local: FileSystem)(publish: (=> Boolean) => Boolean): FileSystem =
+    new FilterFileSystem(local) {
+      override def getScheme: String = local.getScheme
+      override def rename(src: Path, dst: Path): Boolean =
+        if (dst.getName.endsWith(".json")) publish(super.rename(src, dst))
+        else super.rename(src, dst)
+    }
+
+  private def commitWithData(tl: Timeline, path: String): Unit =
+    tl.commit("delta", seq => Some(new Path(path, s"delta/$seq"))) { seq =>
+      fs(path).mkdirs(new Path(path, s"delta/$seq"))
+      (MorTable.Instant(seq, "delta", seq, System.currentTimeMillis()), ())
+    }
+
+  test("a publish that throws keeps the data of an instant that landed and releases one that did not") {
+    val path = TestSpark.tmpDir("tl-publish")
+    val local = fs(path)
+    var lostReply = true // else the rename itself fails
+    val tl = new Timeline(hooked(local) { rename =>
+      if (lostReply) { rename; throw new IOException("reply lost") }
+      else throw new IOException("rename refused")
+    }, new Path(path, "timeline"))
+    intercept[IOException](commitWithData(tl, path))
+    assert(tl.instants().map(_.seq) == Seq(1L))
+    assert(local.exists(new Path(path, "delta/1")), "the published commit's data dir was deleted")
+    assert(leftovers(path).isEmpty, leftovers(path))
+    lostReply = false
+    intercept[IOException](commitWithData(tl, path))
+    assert(tl.instants().map(_.seq) == Seq(1L))
+    assert(!local.exists(new Path(path, "delta/2")) && leftovers(path).isEmpty, leftovers(path))
+  }
+
+  test("a commit interrupted right after its publish rename keeps its data") {
+    val path = TestSpark.tmpDir("tl-interrupt")
+    val local = fs(path)
+    // a streaming query stop interrupts the writer thread; here it lands
+    // as the instant's rename returns
+    val tl = new Timeline(hooked(local) { rename =>
+      val ok = rename
+      Thread.currentThread().interrupt()
+      ok
+    }, new Path(path, "timeline"))
+    try {
+      try commitWithData(tl, path)
+      catch { case _: InterruptedException | _: InterruptedIOException => () }
+    } finally Thread.interrupted()
+    assert(tl.instants().map(_.seq) == Seq(1L))
+    assert(local.exists(new Path(path, "delta/1")), "the published commit's data dir was deleted")
   }
 }
